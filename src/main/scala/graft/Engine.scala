@@ -44,21 +44,27 @@ object StreamConfig {
     * `mode`, `primaryKey` (comma list), `deduplicate`, `discriminatorField`,
     * `deduplicateWindow` (days), `timestampColumn`, `schemaFreeze`,
     * `maxColumnsCount`, `columnTypes` (`name=type` comma list),
-    * `omitNils`, `partitionId`, `schema` (declared field comma list). */
+    * `omitNils`, `partitionId`, `schema` (declared field comma list).
+    * A malformed number is rejected with an `IllegalArgumentException`
+    * naming its key. */
   def fromOptions(opts: Map[String, String]): StreamConfig = {
     def list(k: String) = opts.get(k).toSeq.flatMap(_.split(",")).map(_.trim).filter(_.nonEmpty)
     def bool(k: String, dflt: Boolean) = opts.get(k).map(_.trim.toLowerCase == "true").getOrElse(dflt)
+    def int(k: String, dflt: Int) = opts.get(k).map(v =>
+      v.trim.toIntOption.getOrElse(
+        throw new IllegalArgumentException(s"option $k must be an integer, got '$v'")))
+      .getOrElse(dflt)
     StreamConfig(
       mode = opts.getOrElse("mode", Engine.Batch),
       pk = list("primaryKey"),
       deduplicate = bool("deduplicate", dflt = false),
       discriminator = list("discriminatorField"),
-      mergeWindowDays = opts.get("deduplicateWindow").map(_.trim.toInt).getOrElse(365),
+      mergeWindowDays = int("deduplicateWindow", 365),
       timestampColumn = opts.get("timestampColumn").map(_.trim),
       partitionId = opts.get("partitionId").map(_.trim),
       schemaFreeze = bool("schemaFreeze", dflt = false),
       toSameCase = bool("toSameCase", dflt = false),
-      maxColumns = opts.get("maxColumnsCount").map(_.trim.toInt).getOrElse(5000),
+      maxColumns = int("maxColumnsCount", 5000),
       columnTypes = list("columnTypes").flatMap { kv =>
         kv.split("=", 2) match {
           case Array(n, t) => DataKind.forName(t).map(n.trim -> _)
@@ -176,8 +182,10 @@ final class BulkerStream private[graft] (
       catch { case _: java.sql.SQLException => () } // already exists
     }
 
+    // an empty batch parses to no columns: nothing to key on, no rows to drop
     val deduped =
-      if ((cfg.deduplicate || cfg.mode == Engine.Stream) && cfg.pk.nonEmpty)
+      if ((cfg.deduplicate || cfg.mode == Engine.Stream) && cfg.pk.nonEmpty &&
+          shaped.df.columns.nonEmpty)
         Dedup.inBatch(shaped.df, cfg.pk, cfg.discriminator) // D1: last-wins + discriminator
       else shaped.df
 
@@ -231,7 +239,8 @@ final class BulkerStream private[graft] (
     }
 
     try {
-      cfg.mode match {
+      // rows written, counted by the write itself (JdbcSink's load methods)
+      val rows = cfg.mode match {
         case Engine.Stream =>
           sink.streamUpsertWithRetry(frame, spec.copy(pk = adaptedPk)) // D4 + B6 retry
         case Engine.Batch =>
@@ -239,9 +248,10 @@ final class BulkerStream private[graft] (
             sink.loadMerge(frame, spec.copy(pk = adaptedPk), windowPredicate) // D2/D3/B3
           else sink.appendTo(frame, spec)
         case Engine.ReplaceTable =>
-          sink.replaceTable(frame, table) // P2 rename swap
+          val n = sink.replaceTable(frame, table) // P2 rename swap
           // the swap changed the physical table behind the cached spec
           sink.invalidate(spec.name, spec.namespace)
+          n
         case Engine.ReplacePartition =>
           val pid = cfg.partitionId.getOrElse(
             throw new IllegalArgumentException("replace_partition needs partitionId"))
@@ -255,7 +265,7 @@ final class BulkerStream private[graft] (
           sink.ensureTable(full)
           sink.replacePartition(stamped, full, pc, pid) // P1, one tx
       }
-      LoadState("engine", spec.name, 0L, "ok", frame.count(), "", cfg.nowMs())
+      LoadState("engine", spec.name, 0L, "ok", rows, "", cfg.nowMs())
     } catch {
       case e: Exception =>
         sink.invalidate(spec.name, spec.namespace)

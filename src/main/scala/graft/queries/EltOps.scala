@@ -38,9 +38,9 @@ object EltOps {
     // the identical schema and the inference pass stops being a second full
     // scan (the documented knob for exactly this shape; correctness is
     // unchanged because the parse pass still reads every row)
-    // (cacheParsed measured SLOWER here: the final consumer is count-like,
-    // so the second parse is column-pruned to near-nothing, while the cache
-    // forces full-width materialization — the knob is for full-width readers)
+    // (persisting the parsed rows instead measured SLOWER here: the final
+    // consumer is count-like, so the second parse is column-pruned to
+    // near-nothing, while a cache forces full-width materialization)
     Ingest.shape(s, raw,
       Ingest.ShapeOptions(cacheNormalized = true, samplingRatio = 0.05)).df
   }

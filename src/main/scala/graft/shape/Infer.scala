@@ -15,9 +15,10 @@ import graft.core.Conversions
   * TIMESTAMP — mixed columns stay STRING, exactly the lattice LCA
   * (TIMESTAMP ∨ STRING = STRING).
   *
-  * Scale note: the sniff decision for ALL string columns is ONE aggregate job
-  * (bool_and per column, map-side combinable); the cast is a narrow
-  * projection. No per-column jobs, no collect of data rows.
+  * Scale note: the sniff decision for ALL string columns is ONE grouped
+  * aggregate over unpivoted (column, value) cells, whose plan does not
+  * grow with the column count (see [[scanStringColumns]]); the cast is a
+  * narrow projection. No per-column jobs, no collect of data rows.
   */
 object Infer {
 
@@ -130,45 +131,51 @@ object Infer {
   /** One pass deciding, for every string column: (a) every value looks like
     * a timestamp (→ TIMESTAMP), (b) entirely null (→ drop under omitNils),
     * (c) every value is bool-or-int (→ INT64 per the lattice), (d) every
-    * value is bool-or-numeric (→ FLOAT64). One aggregate job, map-side
-    * combinable; no data collected. */
+    * value is bool-or-numeric (→ FLOAT64).
+    *
+    * The plan has the same width whatever the column count: the candidates
+    * unpivot into (column index, value) cells, null cells drop, and ONE
+    * grouped aggregate writes the six lattice flags once, keyed by index.
+    * A column with no group holds only nulls. The flags combine map-side,
+    * so the shuffle carries at most one row per column per partition; no
+    * data rows are collected. */
   def scanStringColumns(df: DataFrame, candidates: Seq[String]): StringClasses = {
     if (candidates.isEmpty) return StringClasses(Nil, Nil, Nil, Nil)
-    val aggs = candidates.flatMap { c =>
-      val v = col(s"`$c`")
-      Seq(
-        // nulls must not veto the sniff — only non-null values vote.
-        // TIMESTAMP classification needs every value to pass the CONVERT
-        // sniff (which allows bare dates, converter.go:354) AND at least one
-        // value to be a full timestamp — a column of only `yyyy-MM-dd`
-        // strings stays STRING, matching detection with supportDates=false
-        // (datatype.go:126); mixed full-ISO + date columns land TIMESTAMP
-        // with dates at midnight (the date_mix fixture)
-        bool_and(v.isNull || Conversions.looksLikeTimestampOrDate(v)).as(s"ts__$c"),
-        bool_or(v.isNotNull && Conversions.looksLikeTimestamp(v)).as(s"hts__$c"),
-        bool_and(v.isNull || v.rlike(s"^(?:$BoolRe|$IntRe)$$")).as(s"bi__$c"),
-        bool_and(v.isNull || v.rlike(s"^(?:$BoolRe|$FloatRe)$$")).as(s"bf__$c"),
-        // the mix must ACTUALLY mix: an all-digit column is a quoted-string
-        // column (the reference keeps quoted values STRING); only a column
-        // holding both bool tokens and number tokens is the inference
-        // conflict the lattice resolves downward
-        bool_or(v.isNotNull && v.rlike(s"^$BoolRe$$")).as(s"hb__$c"),
-        bool_or(v.isNotNull && v.rlike(s"^$FloatRe$$")).as(s"hn__$c"),
-        count(v).as(s"n__$c"))
-    }
-    val row = df.agg(aggs.head, aggs.tail: _*).collect()(0)
-    def flag(prefix: String, c: String): Boolean = {
-      val idx = row.fieldIndex(s"${prefix}__$c")
-      !row.isNullAt(idx) && row.getBoolean(idx) &&
-        row.getLong(row.fieldIndex(s"n__$c")) > 0
-    }
-    val ts = candidates.filter(c => flag("ts", c) && flag("hts", c))
-    def mixed(c: String) = flag("hb", c) && flag("hn", c)
-    val bi = candidates.filterNot(ts.contains).filter(c => flag("bi", c) && mixed(c))
-    val bf = candidates.filterNot(ts.contains).filterNot(bi.contains)
-      .filter(c => flag("bf", c) && mixed(c))
-    val allNull = candidates.filter(c => row.getLong(row.fieldIndex(s"n__$c")) == 0L)
-    StringClasses(ts, allNull, bi, bf)
+    val cells = df
+      .select(inline(array(candidates.zipWithIndex.map { case (c, i) =>
+        struct(lit(i).as("i"), col(s"`$c`").as("v"))
+      }: _*)))
+      .where(col("v").isNotNull) // only non-null values vote
+    val v = col("v")
+    val flags = cells.groupBy("i").agg(
+      // TIMESTAMP classification needs every value to pass the CONVERT
+      // sniff (which allows bare dates, converter.go:354) AND at least one
+      // value to be a full timestamp — a column of only `yyyy-MM-dd`
+      // strings stays STRING, matching detection with supportDates=false
+      // (datatype.go:126); mixed full-ISO + date columns land TIMESTAMP
+      // with dates at midnight (the date_mix fixture)
+      bool_and(Conversions.looksLikeTimestampOrDate(v)) && bool_or(Conversions.looksLikeTimestamp(v)),
+      bool_and(v.rlike(s"^(?:$BoolRe|$IntRe)$$")),
+      bool_and(v.rlike(s"^(?:$BoolRe|$FloatRe)$$")),
+      // the mix must ACTUALLY mix: an all-digit column is a quoted-string
+      // column (the reference keeps quoted values STRING); only a column
+      // holding both bool tokens and number tokens is the inference
+      // conflict the lattice resolves downward
+      bool_or(v.rlike(s"^$BoolRe$$")) && bool_or(v.rlike(s"^$FloatRe$$")))
+    // one class per column that has a value; a null flag never holds
+    val classOf: Map[Int, String] = flags.collect().map { r =>
+      def holds(j: Int) = !r.isNullAt(j) && r.getBoolean(j)
+      r.getInt(0) -> (
+        if (holds(1)) "ts"
+        else if (holds(2) && holds(4)) "boolInt"
+        else if (holds(3) && holds(4)) "boolFloat"
+        else "string")
+    }.toMap
+    val indexed = candidates.zipWithIndex
+    def inClass(cls: Option[String]) =
+      indexed.collect { case (c, i) if classOf.get(i) == cls => c }
+    StringClasses(inClass(Some("ts")), inClass(None),
+      inClass(Some("boolInt")), inClass(Some("boolFloat")))
   }
 
   /** Default-TIMESTAMP field names (types/converter.go:36-44): these are

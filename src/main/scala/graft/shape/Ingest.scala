@@ -7,18 +7,24 @@ import graft.core.{Conversions, DataKind}
 
 /** End-to-end ingest shaping: raw NDJSON → flattened, sanitized, typed
   * DataFrame — the reference's per-event `ProcessEvents` pipeline
-  * (sql/processor.go:15-52: hints → flatten → infer) re-expressed as three
-  * batch-level passes:
+  * (sql/processor.go:15-52: hints → flatten → infer) re-expressed as
+  * batch-level steps:
   *
   *   1. `spark.read.json` — one distributed schema-inference pass (the
   *      columnar equivalent of per-event `TypeFromValue` + LCA widening:
   *      mixed int/float → double, anything ∨ string → string).
-  *   2. ONE aggregate job resolving hint values + timestamp sniff + all-null
-  *      columns.
-  *   3. ONE narrow projection: flatten + rename + cast. Codegen'd end to end.
+  *   2. Hint values, when the batch carries `__sql_type_*` fields: one tiny
+  *      aggregate.
+  *   3. The string-class scan ([[Infer.scanStringColumns]]): one grouped
+  *      aggregate over unpivoted (column, value) cells decides timestamp
+  *      sniff, bool/number lattice mixes and all-null columns for every
+  *      string column at once; its plan does not widen with the column
+  *      count.
+  *   4. ONE narrow projection: flatten + rename + cast. It reads nothing by
+  *      itself — the load that writes the shaped frame runs it.
   *
-  * At 100 TB the whole shape is two scans (infer + the agg can share the
-  * second with downstream work) and zero shuffles.
+  * So shaping reads the raw batch twice (steps 1 and 3) and shuffles only
+  * the scan's per-column flags.
   */
 object Ingest {
 
@@ -47,14 +53,7 @@ object Ingest {
         * parse pass — worth it when the raw lines are themselves the output
         * of upstream compute (serialized events), NOT when they stream
         * straight off cheap storage reads */
-      cacheNormalized: Boolean = false,
-      /** persist the PARSED frame: the timestamp sniff is an aggregate over
-        * the parsed rows and the shaped projection is another consumer, so
-        * without this the batch is JSON-parsed twice. The cache holds
-        * columnar rows (not text); the sniff's one pass builds it and the
-        * projection reads it back. The right setting whenever the sniff is
-        * on and the batch is parse-dominated. */
-      cacheParsed: Boolean = false)
+      cacheNormalized: Boolean = false)
 
   final case class Shaped(df: DataFrame, hints: Seq[Infer.Hint])
 
@@ -83,8 +82,7 @@ object Ingest {
       if (opts.samplingRatio < 1.0)
         spark.read.option("samplingRatio", opts.samplingRatio.toString)
       else spark.read
-    val parsed = reader.json(normalized)
-    shapeDf(if (opts.cacheParsed) parsed.persist() else parsed, opts)
+    shapeDf(reader.json(normalized), opts)
   }
 
   /** Shape an already-parsed (possibly nested) DataFrame. */
@@ -122,7 +120,7 @@ object Ingest {
       }
 
     // T4: timestamp sniff + lattice recovery of bool/number mixes +
-    // omit-nil columns, one agg over all string cols.
+    // omit-nil columns, one grouped agg over all string cols.
     val overridden = hints.map(h => Names.column(h.target, Names.KeepCase, opts.maxIdentifierLength)).toSet
     val stringCols = renamed.schema.fields
       .filter(f => f.dataType == StringType && !overridden.contains(f.name))

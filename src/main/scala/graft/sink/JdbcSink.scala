@@ -1,8 +1,11 @@
 package graft.sink
 
 import java.sql.{Connection, DriverManager, PreparedStatement}
-import org.apache.spark.sql.{DataFrame, Row, SaveMode}
-import org.apache.spark.sql.functions.col
+import java.util.concurrent.TimeoutException
+import scala.concurrent.Await
+import scala.concurrent.duration._
+import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode}
+import org.apache.spark.sql.functions.{col, count, lit}
 import graft.core.DataKind
 import graft.sql.{ColumnSpec, Dialect, TableSpec}
 
@@ -17,15 +20,19 @@ import graft.sql.{ColumnSpec, Dialect, TableSpec}
   *   - stream mode (D4) is a per-partition upsert loop with prepared-
   *     statement batches (autocommit_stream.go:41-140).
   *
+  * Every load method returns the rows it wrote, counted by an
+  * [[org.apache.spark.sql.Observation]] on the written frame: the count
+  * rides the write's own pass, so no caller re-runs the pipeline to learn it.
+  *
   * Live-tested against embedded Derby (in the local[n] JVM); against a real
   * warehouse only the URL and dialect change.
   */
 final case class JdbcSink(url: String, dialect: Dialect,
                           /** cap on concurrent warehouse connections per
-                            * write — Spark's JDBC `numPartitions` coalesces
-                            * the frame down before writing, so a 32-core
-                            * micro-batch doesn't open 32 sockets for 5k
-                            * rows; raise for genuinely wide bulk loads */
+                            * write — every write coalesces the frame down to
+                            * it first, so a 32-core micro-batch doesn't open
+                            * 32 sockets for 5k rows; raise for genuinely
+                            * wide bulk loads */
                           maxWriteConnections: Int = 16) {
 
   def withConnection[T](f: Connection => T): T = {
@@ -121,8 +128,9 @@ final case class JdbcSink(url: String, dialect: Dialect,
   /** Stream upsert with the autocommit retry (autocommit_stream.go:42-93):
     * a failed upsert invalidates the schema cache, re-ensures the table
     * against the REAL catalog (someone may have altered/dropped it), and
-    * retries the batch once. */
-  def streamUpsertWithRetry(df: DataFrame, spec: TableSpec, batchSize: Int = 100): Unit = {
+    * retries the batch once. Returns the rows of the attempt that
+    * succeeded, so a retried batch counts once. */
+  def streamUpsertWithRetry(df: DataFrame, spec: TableSpec, batchSize: Int = 100): Long = {
     val live = ensureTableCached(spec)
     try streamUpsert(df, live, batchSize)
     catch {
@@ -146,24 +154,23 @@ final case class JdbcSink(url: String, dialect: Dialect,
   def adapt(df: DataFrame): DataFrame =
     dialect.mapValues(df.toDF(df.columns.map(dialect.adaptIdentifier): _*))
 
-  /** Distributed append into an existing table (the bulk data path). */
-  def append(df: DataFrame, table: String): Unit = {
-    JdbcSink.ensureWriterDialects()
-    val props = new java.util.Properties()
-    adapt(df).write.mode(SaveMode.Append)
-      .option("numPartitions", maxWriteConnections)
-      .option("batchsize", 10000) // fewer executeBatch round-trips per partition
-      .jdbc(url, dialect.quote(table), props)
-  }
+  /** Distributed append into an existing table (the bulk data path).
+    * Returns the rows written. */
+  def append(df: DataFrame, table: String): Long = write(df, dialect.quote(table))
 
   /** Append to a (possibly namespaced) spec — the qualified-name form. */
-  def appendTo(df: DataFrame, spec: TableSpec): Unit = {
+  def appendTo(df: DataFrame, spec: TableSpec): Long = write(df, dialect.qualified(spec))
+
+  private def write(df: DataFrame, target: String): Long = {
     JdbcSink.ensureWriterDialects()
-    val props = new java.util.Properties()
-    adapt(df).write.mode(SaveMode.Append)
-      .option("numPartitions", maxWriteConnections)
-      .option("batchsize", 10000)
-      .jdbc(url, dialect.qualified(spec), props)
+    // the connection cap is a coalesce, not the writer's `numPartitions`
+    // option: that option coalesces behind the observed plan, and the
+    // observation then reads 0
+    JdbcSink.countingRows(adapt(df)) { counted =>
+      counted.coalesce(maxWriteConnections).write.mode(SaveMode.Append)
+        .option("batchsize", 10000) // fewer executeBatch round-trips per partition
+        .jdbc(url, target, new java.util.Properties())
+    }
   }
 
   /** Batch-mode transactional load (B3 + D2/D3): stage to a tmp table, then
@@ -174,41 +181,44 @@ final case class JdbcSink(url: String, dialect: Dialect,
     * abstract_transactional.go:439-450): one logical batch stages through
     * multiple deterministic chunk loads into the SAME tmp table before the
     * single merge tx — bounding any one write wave without changing the
-    * committed result. */
+    * committed result. Returns the rows staged (the batch's rows). */
   def loadMerge(df: DataFrame, target: TableSpec,
                 windowPredicate: Option[String] = None,
-                subBatches: Int = 1): Unit = {
+                subBatches: Int = 1): Long = {
     val adapted = adapt(df)
     val tmpSpec = specFor(adapted, s"${target.name}_tmp_${System.nanoTime()}")
     withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
     try {
-      if (subBatches <= 1) append(adapted, tmpSpec.name)
-      else {
-        val chunk = org.apache.spark.sql.functions.pmod(
-          org.apache.spark.sql.functions.crc32(
-            org.apache.spark.sql.functions.to_json(
-              org.apache.spark.sql.functions.struct(
-                adapted.columns.map(c => col(s"`$c`")): _*))),
-          org.apache.spark.sql.functions.lit(subBatches))
-        (0 until subBatches).foreach(i =>
-          append(adapted.filter(chunk === i), tmpSpec.name))
-      }
+      val staged =
+        if (subBatches <= 1) append(adapted, tmpSpec.name)
+        else {
+          val chunk = org.apache.spark.sql.functions.pmod(
+            org.apache.spark.sql.functions.crc32(
+              org.apache.spark.sql.functions.to_json(
+                org.apache.spark.sql.functions.struct(
+                  adapted.columns.map(c => col(s"`$c`")): _*))),
+            lit(subBatches))
+          (0 until subBatches).map(i =>
+            append(adapted.filter(chunk === i), tmpSpec.name)).sum
+        }
       val cols = tmpSpec.columns.map(_.name)
       inTx { c =>
         dialect.mergeInto(target, tmpSpec, cols, target.pk, windowPredicate)
           .foreach(exec(c, _))
       }
+      staged
     } finally withConnection(exec(_, dialect.drop(tmpSpec)))
   }
 
   /** ReplaceTable (P2): load tmp then atomic swap
-    * (sql_adapter_base.go:730-740, replacetable_stream.go:51-117). */
-  def replaceTable(df: DataFrame, table: String): Unit = {
+    * (sql_adapter_base.go:730-740, replacetable_stream.go:51-117). Returns
+    * the rows of the new generation. */
+  def replaceTable(df: DataFrame, table: String): Long = {
     val adapted = adapt(df)
     val name = dialect.adaptIdentifier(table)
     val tmpSpec = specFor(adapted, s"${name}_tmp_${System.nanoTime()}")
     withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
-    append(adapted, tmpSpec.name)
+    val rows = append(adapted, tmpSpec.name)
     withConnection { c =>
       val deprecated = s"${name}_deprecated"
       if (existingColumns(name).isDefined) {
@@ -217,6 +227,7 @@ final case class JdbcSink(url: String, dialect: Dialect,
         exec(c, dialect.drop(TableSpec(deprecated, Nil), ifExists = false))
       } else exec(c, dialect.renameTable(tmpSpec, name))
     }
+    rows
   }
 
   /** ReplacePartition (P1): stage the batch to a tmp table through the
@@ -224,26 +235,28 @@ final case class JdbcSink(url: String, dialect: Dialect,
     * between delete and insert can never lose the partition
     * (replacepartition_stream.go:85-161 does the same clear+copy in one tx).
     * An empty batch still clears the partition; no `df.isEmpty` probe job —
-    * an empty tmp table copies zero rows. */
+    * an empty tmp table copies zero rows. Returns the rows copied in. */
   def replacePartition(df: DataFrame, target: TableSpec,
-                       partitionCol: String, partitionId: String): Unit = {
+                       partitionCol: String, partitionId: String): Long = {
     val adapted = adapt(df)
     val pc = dialect.adaptIdentifier(partitionCol)
     val tmpSpec = specFor(adapted, s"${target.name}_tmp_${System.nanoTime()}")
     withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
     try {
-      append(adapted, tmpSpec.name)
+      val rows = append(adapted, tmpSpec.name)
       inTx { c =>
         exec(c, dialect.deleteWhere(target,
           s"${dialect.quote(pc)} = '${partitionId.replace("'", "''")}'"))
         exec(c, dialect.insertSelect(target, tmpSpec, tmpSpec.columns.map(_.name)))
       }
+      rows
     } finally withConnection(exec(_, dialect.drop(tmpSpec)))
   }
 
   /** Stream-mode row-wise upsert (D4, autocommit_stream.go:41-140): each
-    * partition opens a connection and runs prepared-statement batches. */
-  def streamUpsert(df: DataFrame, target: TableSpec, batchSize: Int = 100): Unit = {
+    * partition opens a connection and runs prepared-statement batches.
+    * Returns the rows upserted. */
+  def streamUpsert(df: DataFrame, target: TableSpec, batchSize: Int = 100): Long = {
     val adapted = adapt(df)
     val cols = adapted.columns.toSeq
     val (sql, paramCols) = dialect.upsertRow(target, cols, target.pk)
@@ -252,22 +265,23 @@ final case class JdbcSink(url: String, dialect: Dialect,
     val paramIdx: Array[Int] = paramCols.map(cols.indexOf).toArray
     require(paramIdx.forall(_ >= 0), s"upsertRow param not in frame: $paramCols vs $cols")
     // one connection per partition — bound them like the bulk writer
-    val bounded = adapted.coalesce(maxWriteConnections)
-    // closure captures only primitives/strings — not this (Dialect isn't serializable)
-    bounded.foreachPartition { rows: Iterator[Row] =>
-      val c = DriverManager.getConnection(jdbcUrl)
-      try {
-        val st = c.prepareStatement(sql)
-        var n = 0
-        rows.foreach { r =>
-          JdbcSink.bindRow(st, r, paramIdx)
-          st.addBatch()
-          n += 1
-          if (n % batchSize == 0) st.executeBatch()
-        }
-        st.executeBatch()
-        st.close()
-      } finally c.close()
+    JdbcSink.countingRows(adapted) { counted =>
+      // closure captures only primitives/strings — not this (Dialect isn't serializable)
+      counted.coalesce(maxWriteConnections).foreachPartition { rows: Iterator[Row] =>
+        val c = DriverManager.getConnection(jdbcUrl)
+        try {
+          val st = c.prepareStatement(sql)
+          var n = 0
+          rows.foreach { r =>
+            JdbcSink.bindRow(st, r, paramIdx)
+            st.addBatch()
+            n += 1
+            if (n % batchSize == 0) st.executeBatch()
+          }
+          st.executeBatch()
+          st.close()
+        } finally c.close()
+      }
     }
   }
 }
@@ -290,6 +304,23 @@ object JdbcSink {
     })
   }
   private[sink] def ensureWriterDialects(): Unit = registerWriterDialects
+
+  /** Run `write` over `df` with a row count observed on the same pass, and
+    * return that count. An empty frame counts 0. */
+  private def countingRows(df: DataFrame)(write: DataFrame => Unit): Long = {
+    val rows = Observation()
+    write(df.observe(rows, count(lit(1)).as("rows")))
+    // the count arrives through the listener bus, which drops events when
+    // its queue overflows: a lost count fails the load instead of hanging it
+    val counted =
+      try Await.result(rows.future, CountWait)
+      catch { case _: TimeoutException =>
+        throw new IllegalStateException(s"the write's row count did not arrive within $CountWait")
+      }
+    counted.getAs[Long]("rows")
+  }
+
+  private val CountWait = 1.minute
 
   private[sink] def bindRow(st: PreparedStatement, r: Row, paramIdx: Array[Int]): Unit = {
     var p = 0

@@ -352,6 +352,16 @@ class EngineSpec extends SparkSuite {
       dflt.maxColumns == 5000 && dflt.omitNils)
   }
 
+  test("StreamConfig.fromOptions rejects a malformed number, naming the key") {
+    for ((k, v) <- Seq("deduplicateWindow" -> "31d", "maxColumnsCount" -> "", "maxColumnsCount" -> "1e3")) {
+      val e = intercept[IllegalArgumentException](StreamConfig.fromOptions(Map(k -> v)))
+      assert(!e.isInstanceOf[NumberFormatException], s"$k=$v: ${e.getClass}")
+      assert(e.getMessage.contains(k), e.getMessage)
+    }
+    // surrounding blanks are not malformed
+    assert(StreamConfig.fromOptions(Map("deduplicateWindow" -> " 7 ")).mergeWindowDays == 7)
+  }
+
   test("options-driven stream: discriminator + columnTypes flow end to end") {
     val e = engine("opts")
     val cfg = StreamConfig.fromOptions(Map(

@@ -300,6 +300,32 @@ class JdbcSinkSpec extends SparkSuite {
     assert(spark.read.jdbc(sink.url, """"NS1"."NT"""", new java.util.Properties()).count() == 1)
   }
 
+  test("every load method returns the rows it wrote, counted on the write pass") {
+    val sink = freshSink("rows")
+    Seq("RW", "RWT").foreach(drop(sink, _))
+    val data = df("id BIGINT, part STRING",
+      (1L to 30L).map(i => Row(i, if (i % 3 == 0) "d2" else "d1")))
+    val spec = sink.specFor(data, "rw", pk = Seq("id"))
+    sink.ensureTable(spec.copy(pk = Nil)) // appends below repeat keys
+    // 24 partitions coalesce to the connection cap; the count is unchanged
+    assert(sink.append(data.repartition(24), spec.name) == 30)
+    assert(sink.appendTo(data.filter("id <= 5"), spec) == 5)
+    assert(sink.loadMerge(data.filter("id > 20"), spec) == 10)
+    assert(sink.loadMerge(data, spec, subBatches = 4) == 30) // chunks sum once
+    assert(sink.replacePartition(data.filter("part = 'd2'"), spec, "part", "d2") == 10)
+    assert(sink.replacePartition(data.filter(lit(false)), spec, "part", "d2") == 0)
+    assert(sink.streamUpsert(data.filter("id <= 7"), spec) == 7)
+    assert(sink.replaceTable(data.filter("id <= 3"), "rwt") == 3)
+    assert(readBack(sink, "RWT").count() == 3)
+    // a retried stream upsert counts the batch once: drop the table behind
+    // the schema cache so the first attempt fails
+    TableCache.clear()
+    sink.ensureTableCached(spec)
+    drop(sink, "RW")
+    assert(sink.streamUpsertWithRetry(data, spec) == 30)
+    assert(readBack(sink, "RW").count() == 30)
+  }
+
   test("postgres value mapping strips NUL bytes during adapt (T9)") {
     val sink = JdbcSink("unused", graft.sql.PostgresDialect)
     val data = df("S STRING", Seq(Row("a" + "\u0000" + "b")))
