@@ -140,7 +140,6 @@ final class BulkerStream private[graft] (
       caseMode = mode,
       omitNils = cfg.omitNils,
       maxIdentifierLength = sink.dialect.maxIdentifierLength,
-      schemaFreeze = false, // freeze applies vs the LIVE table, below
       // matched against pre-sanitize flattened paths → case-normalize only
       declaredFields = cfg.declaredFields.map(Names.normalizeCase(_, mode)),
       maxColumns = cfg.maxColumns,

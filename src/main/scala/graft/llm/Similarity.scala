@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import graft.ops.BandJoin
 
 /** Similarity search over embedding columns (`array<float>`).
   *
@@ -109,24 +110,12 @@ object Similarity {
       else (0 until bands).map(b =>
         lshBucket(col("embedding"), ps.slice(b * perBand, (b + 1) * perBand))
           .as(s"__sig$b"))
-    val withSig = corpus.select(col(id) +: sigCols: _*)
-    val mask = (1L << perBand) - 1
     val bandKeys: Seq[Column] =
-      if (bands * perBand <= 62)
-        (0 until bands).map(b =>
-          shiftright(col("__sig0"), b * perBand).bitwiseAND(lit(mask)))
+      if (bands * perBand <= 62) BandJoin.bitBands(col("__sig0"), bands, perBand)
       else (0 until bands).map(b => col(s"__sig$b"))
-    // persist: the self-join would run the signature pass once per side
-    val bb = withSig.select(col(id), explode(array(
-        bandKeys.zipWithIndex.map { case (k, b) =>
-          struct(lit(b).as("band"), k.as("key")) }: _*)).as("bk"))
-      .select(col(id), col("bk.band"), col("bk.key"))
-      .persist()
-    val cands = bb.as("a").join(bb.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col(s"a.$id") < col(s"b.$id"))
-      .select(col(s"a.$id").as("i"), col(s"b.$id").as("j"))
-      .distinct() // a pair colliding in several bands verifies ONCE
+    val bb = BandJoin.bandRows(corpus.select(col(id) +: sigCols: _*), Seq(id), bandKeys)
+    // a pair colliding in several bands verifies ONCE
+    val cands = BandJoin.selfPairs(bb, BandJoin.BandKey, id)
     // pair-set-sized; eager so the two caches above release NOW instead of
     // leaking for the session lifetime (r19 ADVICE)
     val out = cands

@@ -188,15 +188,14 @@ object FilterOps {
     // K sequential epochs = 2K+1 tiny jobs whose per-task overhead, not
     // compute, dominates at bench scale: pre-shuffle the cached features
     // onto few, doc-aligned partitions so every epoch's window is
-    // exchange-free and each job launches 8 tasks instead of 32+ (at real
-    // corpus scale the same alignment holds at natural width)
+    // exchange-free and each job launches Tuning.controlShuffle tasks
+    // instead of 32+ (at real corpus scale the same alignment holds at
+    // natural width)
     // the first epoch materializes `feats` while the tokenized docs handle
     // is still cached (unpersisted in the finally), so the corpus is
     // tokenized exactly once with no extra materialization pass
     val (raw, docs) = perceptronFeatures(s, d)
-    val feats = raw.repartition(
-      sys.env.getOrElse("SPARK_GRAFT_CONTROL_SHUFFLE", "4").toInt,
-      col("doc_id")).persist()
+    val feats = raw.repartition(Tuning.controlShuffle, col("doc_id")).persist()
     try {
       val w = Array.fill(PerceptronBuckets + 1)(0L)
       def dotted = {

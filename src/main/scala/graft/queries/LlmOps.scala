@@ -6,7 +6,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.llm.{Corpus, Multimodal, Similarity, TextOps}
-import graft.ops.Dedup
+import graft.ops.{BandJoin, Dedup}
+import graft.ops.BandJoin.BandKey
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
   * dedup family (exact, n-gram Jaccard, MinHash-LSH, SimHash fingerprints),
@@ -62,14 +63,11 @@ object LlmOps {
   def ngramJaccard(s: SparkSession, d: String): DataFrame =
     jaccardVerify(cappedShingleIndex(Tables.documents(s, d)), JaccardThreshold)
 
-  /** (doc_id, shingle) inverted index with hot shingles removed. The DF cap
-    * is applied as a map-side-combinable count + BROADCAST anti-join of the
-    * (tiny, by definition) over-cap blacklist — never as a window over the
-    * exploded index, which would shuffle-and-sort every (doc, shingle) row.
-    * The source is scanned/tokenized twice (count pass + index pass); that
-    * is the right trade at scale — scans are map-only and embarrassingly
-    * parallel, while the window form moves AND sorts the whole index over
-    * the network. */
+  /** (doc_id, shingle) inverted index with hot shingles removed
+    * ([[BandJoin.capHot]]). The source is scanned/tokenized twice (count
+    * pass + index pass); that is the right trade at scale — scans are
+    * map-only and embarrassingly parallel, while a window form would move
+    * AND sort the whole index over the network. */
   private[queries] def cappedShingleIndex(docs: DataFrame): DataFrame = {
     // index rows carry the 60-bit shingle HASH, not the shingle string: the
     // count pass, the blacklist join, and the pair self-join all shuffle and
@@ -79,14 +77,12 @@ object LlmOps {
     // shingles on both engines)
     val sh0 = docs.select(col("doc_id"),
       explode(TextOps.shingleHash60(TextOps.tokens(col("text")), 3)).as("s"))
-    val hot = sh0.groupBy("s").agg(count(lit(1)).as("df"))
-      .filter(col("df") > DfCap).select("s")
     // the capped index feeds THREE consumers downstream (both sides of the
     // pair self-join + the per-doc sizes), and self-join sides do not share
     // exchanges — persist so tokenize+shingle+cap runs once, not thrice
     // (at cluster scale the same role is played by materializing the index
     // to storage once per dedup run)
-    sh0.join(broadcast(hot), Seq("s"), "left_anti").persist()
+    BandJoin.capHot(sh0, Seq("s"), DfCap).persist()
   }
 
   /** Shared tail for the inverted-index path: inter/union from (doc_id,
@@ -438,13 +434,6 @@ object LlmOps {
   def minhashLsh(s: SparkSession, d: String): DataFrame =
     minhashPairs(Tables.documents(s, d))
 
-  /** MinHash-LSH near-dup pairs over ANY (doc_id, text) frame — reused by
-    * the standalone query and the clean-corpus pipeline. */
-  /** (doc_id, band, key) MinHash band rows for ANY (doc_id, text) frame —
-    * the unit an LSH index stores. ONE codegen'd pass computes the whole
-    * 16-value signature (a native Catalyst expression — 16 chained
-    * transform/array_min calls would be interpreted and traverse the hash
-    * array 16×, see MinHashSig); the band explode is narrow. */
   /** (doc_id, shingle-HASH-array) — the frame both the signature branch and
     * the verify branch consume. Hashing happens HERE, once (the codegen'd
     * Hash60Array kernel): signatures permute the hashes, and verification
@@ -454,19 +443,26 @@ object LlmOps {
     docs.select(col("doc_id"),
       TextOps.shingleHash60(TextOps.tokens(col("text")), 3).as("hs"))
 
+  /** (doc_id, band, key) MinHash band rows for ANY (doc_id, text) frame —
+    * the unit an LSH index stores. ONE codegen'd pass computes the whole
+    * 16-value signature (a native Catalyst expression — 16 chained
+    * transform/array_min calls would be interpreted and traverse the hash
+    * array 16×, see MinHashSig); the band explode is narrow. */
   private[queries] def bandFrame(docs: DataFrame): DataFrame =
     bandFrameFromHashes(hashedShingles(docs))
 
-  private def bandFrameFromHashes(withHs: DataFrame): DataFrame = {
-    val withSig = withHs
-      .withColumn("sigv", TextOps.minhashSignature(col("hs"), NumHashes))
+  private def bandFrameFromHashes(withHs: DataFrame): DataFrame =
+    sigBands(withHs.withColumn("sigv", TextOps.minhashSignature(col("hs"), NumHashes)))
+
+  /** (doc_id, band, key) rows of a (doc_id, sigv) signature frame. */
+  private def sigBands(sigs: DataFrame): DataFrame = {
     val sig = (0 until NumHashes).map(i => element_at(col("sigv"), i + 1))
-    withSig.select(col("doc_id"), explode(array(
-      (0 until NumBands).map(b =>
-        struct(lit(b).as("band"), TextOps.bandKey(sig, b, RowsPerBand).as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.key"))
+    BandJoin.bandRows(sigs, Seq("doc_id"),
+      (0 until NumBands).map(b => TextOps.bandKey(sig, b, RowsPerBand)))
   }
 
+  /** MinHash-LSH near-dup pairs over ANY (doc_id, text) frame — reused by
+    * the standalone query and the clean-corpus pipeline. */
   private[queries] def minhashPairs(docs: DataFrame): DataFrame =
     // shingle+hash ONCE: the signature branch and the verify branch both
     // consume the (doc_id, hashes) frame — persist it so the text is
@@ -476,14 +472,7 @@ object LlmOps {
     minhashPairsFromHashes(hashedShingles(docs).persist())
 
   private def minhashPairsFromHashes(withHs: DataFrame): DataFrame = {
-    // narrow rows (doc_id, band, key) — persist so the SELF-join below does
-    // not run the whole shingle→hash→signature pipeline once per side
-    // (broadcast build sides don't reuse exchanges)
-    val bands = bandFrameFromHashes(withHs).persist()
-    val cands = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
+    val cands = BandJoin.selfPairs(bandFrameFromHashes(withHs), BandKey)
     // r20: `hs` IS each doc's distinct shingle-hash set — verify joins the
     // cached array frame directly (no explode, no collect_set rebuild)
     verifyCandidates(withHs.select(col("doc_id"), col("hs").as("ss")),
@@ -508,17 +497,7 @@ object LlmOps {
     val sigs = hashedShingles(Tables.documents(s, d))
       .withColumn("sigv", TextOps.minhashSignature(col("hs"), NumHashes))
       .select(col("doc_id"), col("sigv")).persist()
-    val sig = (0 until NumHashes).map(i => element_at(col("sigv"), i + 1))
-    // persist: the self-join would re-run the signature pipeline per side
-    val bands = sigs.select(col("doc_id"), explode(array(
-        (0 until NumBands).map(b => struct(lit(b).as("band"),
-          TextOps.bandKey(sig, b, RowsPerBand).as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.key")).persist()
-    val cands = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
-    val joined = cands
+    val joined = BandJoin.selfPairs(sigBands(sigs), BandKey)
       .join(sigs.select(col("doc_id").as("i"), col("sigv").as("sa")), "i")
       .join(sigs.select(col("doc_id").as("j"), col("sigv").as("sb")), "j")
     val matches = (0 until NumHashes).map(k =>
@@ -620,11 +599,8 @@ object LlmOps {
     // shingle sets. n_hit == n_lsh was an invariant before (verified LSH ⊆
     // exact by construction) and is an arithmetic identity now; the DuckDB
     // oracle still computes both legs independently and hash-compares.
-    val bands = bandFrameFromHashes(withHs).persist()
-    val lshCands = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
+    val bands = bandFrameFromHashes(withHs)
+    val lshCands = BandJoin.selfPairs(bands, BandKey)
     // lsh feeds the union twice (n_lsh + n_hit) — persist or the band
     // pipeline runs per consumer
     val lsh = lshCands.join(exact, Seq("i", "j"), "left_semi").persist()
@@ -724,13 +700,8 @@ object LlmOps {
     // FULL band index (never full×full): identical to restricting the full
     // band self-join, since cohabitation and the exact verify are symmetric.
     val bands = bandFrameFromHashes(withHs).persist()
-    val lshCands = bands.filter(evalSampled(col("doc_id"))).as("a")
-      .join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("i"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("j"))
-      .distinct()
+    val lshCands = BandJoin.probePairs(
+      bands.filter(evalSampled(col("doc_id"))), bands, BandKey)
     // r20: every lshCands pair touches the sample, so its verified subset
     // is exactly lshCands ∩ exactS (exactS = ALL J ≥ τ pairs with a
     // sampled endpoint — the one-sided prefix build is lossless): a
@@ -900,7 +871,7 @@ object LlmOps {
     val fresh = docs.filter(col("doc_id") % 2 === 1)
     // ONE scratch dir per JVM (a fixed shared path would let a concurrent
     // session's overwrite race this session's lazy read; a dir per CALL
-    // would orphan one per Bench/Verify/PlanAudit invocation)
+    // would orphan one per query invocation)
     val idxDir = IncrementalIdxDir
     bandFrame(history).write.mode("overwrite").parquet(idxDir)
     val idx = s.read.parquet(idxDir)
@@ -985,20 +956,10 @@ object LlmOps {
     * band width). Shared by the 32-bit and 60-bit forms and driveable with
     * synthetic fleets by SkewStressSpec. */
   private[queries] def simhashBandPairs(sh: DataFrame, bandBits: Int): DataFrame = {
-    val mask = (1L << bandBits) - 1
-    // persist: the self-join would otherwise run the bit-vote kernel once
-    // per side
-    val bands = sh.select(col("doc_id"), col("sh"), explode(array(
-      (0 until 4).map(b => struct(lit(b).as("band"),
-        shiftright(col("sh"), b * bandBits).bitwiseAND(lit(mask)).as("byte"))): _*)).as("bk"))
-      .select(col("doc_id"), col("sh"), col("bk.band"), col("bk.byte"))
-      .persist()
-    bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.byte") === col("b.byte") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"),
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast(LongType).as("hamming"))
-      .distinct()
+    val bands = BandJoin.bandRows(sh, Seq("doc_id", "sh"),
+      BandJoin.bitBands(col("sh"), 4, bandBits))
+    BandJoin.selfPairs(bands, BandKey, carry = Seq(
+        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast(LongType).as("hamming")))
       .filter(col("hamming") <= SimHamMax)
   }
 
@@ -2809,21 +2770,9 @@ object LlmOps {
     * frame — shared by the stub-decoder and real-ImageIO dedup queries. */
   private def mmDedupFromHashes(bh0: DataFrame): DataFrame = {
     val bh = bh0.select("doc_id", "blockhash").persist()
-    val bands0 = bh.select(col("doc_id"), explode(array((0 until MmBands).map(b =>
-        struct(lit(b).as("band"),
-          shiftright(col("blockhash"), b * MmBandBits)
-            .bitwiseAND(lit((1L << MmBandBits) - 1)).as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band"), col("bk.key"))
-    val hot = bands0.groupBy("band", "key").agg(count(lit(1)).as("df"))
-      .filter(col("df") > MmBandCap).select("band", "key")
-    // capped bands feed BOTH self-join sides — persist, same reason as
-    // cappedShingleIndex (self-join sides don't reuse exchanges)
-    val bands = bands0.join(broadcast(hot), Seq("band", "key"), "left_anti").persist()
-    val cands = bands.as("a").join(bands.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
-    cands
+    val bands = BandJoin.bandRows(bh, Seq("doc_id"),
+      BandJoin.bitBands(col("blockhash"), MmBands, MmBandBits))
+    BandJoin.selfPairs(BandJoin.capHot(bands, BandKey, MmBandCap), BandKey)
       .join(bh.select(col("doc_id").as("i"), col("blockhash").as("ha")), "i")
       .join(bh.select(col("doc_id").as("j"), col("blockhash").as("hb")), "j")
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast(LongType))
@@ -3383,28 +3332,17 @@ object LlmOps {
     // codec pass provably runs once.
     val fps = fps0.select("doc_id", "fp")
       .localCheckpoint(true) // consumers: fp output, band build, both pair-side joins
-    val bands0 = fps.select(col("doc_id"), col("fp"),
-        explode(typedLit((0 until FpBands).toList)).as("b"))
-      .select(col("doc_id"), col("b"),
-        expr(s"shiftright(fp, b * $FpBandBits) & ${(1 << FpBandBits) - 1}").as("bb"))
-    val hot = bands0.groupBy("b", "bb").agg(count(lit(1)).as("df"))
-      .filter(col("df") > FpBandCap).select("b", "bb")
-    val bands = bands0.join(broadcast(hot), Seq("b", "bb"), "left_anti")
-      .persist() // self-joined: without this the fingerprint pass runs per side
-    val cand = bands.as("x").join(bands.as("y"),
-        col("x.b") === col("y.b") && col("x.bb") === col("y.bb") &&
-          col("y.doc_id") > col("x.doc_id"))
-      .select(col("x.doc_id").as("da"), col("y.doc_id").as("db")).distinct()
-    val pairs = cand
-      .join(fps.select(col("doc_id").as("da"), col("fp").as("fa")), "da")
-      .join(fps.select(col("doc_id").as("db"), col("fp").as("fb")), "db")
+    val bands = BandJoin.bandRows(fps, Seq("doc_id"),
+      BandJoin.bitBands(col("fp"), FpBands, FpBandBits))
+    val pairs = BandJoin.selfPairs(BandJoin.capHot(bands, BandKey, FpBandCap), BandKey)
+      .join(fps.select(col("doc_id").as("i"), col("fp").as("fa")), "i")
+      .join(fps.select(col("doc_id").as("j"), col("fp").as("fb")), "j")
       .withColumn("ham", bit_count(col("fa").bitwiseXOR(col("fb"))).cast(LongType))
       .filter(col("ham") <= FpHamT)
-    val out = fps.select(lit("fp").as("kind"), col("doc_id").as("a"),
+    fps.select(lit("fp").as("kind"), col("doc_id").as("a"),
         lit(-1L).as("b"), col("fp").as("v"))
-      .unionByName(pairs.select(lit("pair").as("kind"), col("da").as("a"),
-        col("db").as("b"), col("ham").as("v")))
-    out
+      .unionByName(pairs.select(lit("pair").as("kind"), col("i").as("a"),
+        col("j").as("b"), col("ham").as("v")))
   }
 
   private lazy val mmAudioFpDedupOracle = {
@@ -3487,24 +3425,10 @@ object LlmOps {
     // profiled 3 concurrent decode jobs); |docs|·frames rows of scalars,
     // checkpoint cost trivial, demux provably once.
     val fh = fh0.select("doc_id", "frame_idx", "fhash").localCheckpoint(true)
-    val bands0 = fh.select(col("doc_id"), col("frame_idx"),
-        explode(array((0 until MmBands).map(b =>
-          struct(lit(b).as("band"),
-            shiftright(col("fhash"), b * MmBandBits)
-              .bitwiseAND(lit((1L << MmBandBits) - 1)).as("key"))): _*)).as("bk"))
-      .select(col("doc_id"), col("frame_idx"), col("bk.band"), col("bk.key"))
-    val hot = bands0.groupBy("frame_idx", "band", "key")
-      .agg(count(lit(1)).as("df")).filter(col("df") > MmBandCap)
-      .select("frame_idx", "band", "key")
-    val bands = bands0
-      .join(broadcast(hot), Seq("frame_idx", "band", "key"), "left_anti")
-      .persist()
-    val cands = bands.as("a").join(bands.as("b"),
-        col("a.frame_idx") === col("b.frame_idx") &&
-          col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
-    cands
+    val scoped = "frame_idx" +: BandKey
+    val bands = BandJoin.bandRows(fh, Seq("doc_id", "frame_idx"),
+      BandJoin.bitBands(col("fhash"), MmBands, MmBandBits))
+    BandJoin.selfPairs(BandJoin.capHot(bands, scoped, MmBandCap), scoped)
       .join(fh.select(col("doc_id").as("i"), col("frame_idx"),
         col("fhash").as("ha")), Seq("i"))
       .join(fh.select(col("doc_id").as("j"), col("frame_idx"),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.ops.BandJoin
 import graft.sink.JdbcSink
 import graft.sql.DerbyDialect
 import graft.streaming.{MicroBatch, RetryQueue, RetryPolicy}
@@ -1562,12 +1563,8 @@ object StreamOps {
             .filter(col("src_batch") =!= bid)
             .drop("batch", "src_batch", "pb"))
       }
-    bands.as("a").join(probe.as("b"),
-        col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
-          col("a.doc_id") =!= col("b.doc_id"))
-      .select(least(col("a.doc_id"), col("b.doc_id")).as("i"),
-        greatest(col("a.doc_id"), col("b.doc_id")).as("j"))
-      .distinct().write.mode("overwrite").parquet(s"$outDir/batch=$bid")
+    BandJoin.probePairs(bands, probe, BandJoin.BandKey)
+      .write.mode("overwrite").parquet(s"$outDir/batch=$bid")
     // per-batchId OVERWRITE, not blind append: replaying a failed batch
     // replaces its own index/pairs partitions instead of duplicating
     // them — the storage-side idempotence at-least-once delivery needs

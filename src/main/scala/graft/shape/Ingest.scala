@@ -32,12 +32,8 @@ object Ingest {
       caseMode: Names.CaseMode = Names.KeepCase,
       omitNils: Boolean = true,
       maxIdentifierLength: Int = 63,
-      /** extra flattened paths to keep as JSON text (declared-schema fields,
+      /** flattened paths to keep as JSON text (declared-schema fields,
         * options.go "schema" — abstract.go:103-111) */
-      notFlatteningKeys: Set[String] = Set.empty,
-      /** schemaFreeze drops unexpected columns instead of adding them
-        * (options.go:53-57) */
-      schemaFreeze: Boolean = false,
       declaredFields: Seq[String] = Nil,
       /** hard cap on column count (options.go:59-63, default 5000) */
       maxColumns: Int = 5000,
@@ -94,7 +90,7 @@ object Ingest {
     val hintFields = Infer.hintFields(parsed.schema)
     val hints = Infer.resolveHints(parsed, hintFields, transform)
     val cleaned = Infer.stripHintFields(parsed, hintFields)
-    val notFlat = opts.notFlatteningKeys ++ hints.map(_.target) ++ opts.declaredFields
+    val notFlat = hints.map(_.target).toSet ++ opts.declaredFields
 
     // T1: flatten.
     val noHints = Flattener.flatten(cleaned, transform, notFlat)
