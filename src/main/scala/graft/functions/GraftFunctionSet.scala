@@ -40,6 +40,16 @@ object GraftFunctionSet {
     case other => throw new IllegalArgumentException(s"$usage — got $other")
   }
 
+  /** The two names of [[BoundedK]]; the name fixes the direction. */
+  private def boundedK(name: String, value: String, descending: Boolean): Entry =
+    entry(name, classOf[BoundedK]) {
+      case Seq(v, id, kE) =>
+        BoundedK(v, id, literalInt(kE, s"$name: k must be an int literal"), descending)
+          .toAggregateExpression()
+      case other => throw new IllegalArgumentException(
+        s"$name($value double|bigint, id bigint, k) — got ${other.length} args")
+    }
+
   def all: Seq[Entry] = Seq(
     entry("minhash_sig", classOf[MinHashSig]) { args =>
       val n = args match {
@@ -67,18 +77,14 @@ object GraftFunctionSet {
       require(args.length == 2, "cosine_sim(array<float|double>, array<float|double>)")
       CosineSim(args.head, args(1))
     },
-    entry("kmin_k", classOf[KMinK]) { args =>
-      val k = FunctionArgs.literalK(args, 2, "kmin_k(bigint, k)")
-      KMinK(args.head, k).toAggregateExpression()
+    entry("kmin_k", classOf[KMinK]) {
+      case Seq(v, kE) => KMinK(v, literalInt(kE, "kmin_k: k must be an int literal"))
+        .toAggregateExpression()
+      case other => throw new IllegalArgumentException(
+        s"kmin_k(bigint, k) — got ${other.length} args")
     },
-    entry("top_k_by", classOf[TopKByScore]) { args =>
-      val k = FunctionArgs.literalK(args, 3, "top_k_by(score double, id bigint, k)")
-      TopKByScore(args.head, args(1), k).toAggregateExpression()
-    },
-    entry("min_k_by", classOf[MinKByKey]) { args =>
-      val k = FunctionArgs.literalK(args, 3, "min_k_by(key bigint, id bigint, k)")
-      MinKByKey(args.head, args(1), k).toAggregateExpression()
-    },
+    boundedK("top_k_by", "score", descending = true),
+    boundedK("min_k_by", "key", descending = false),
     entry("bpe_pieces", classOf[BpePieces]) { args =>
       args match {
         case Seq(child, l, r) =>

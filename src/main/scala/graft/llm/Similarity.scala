@@ -266,7 +266,7 @@ object Similarity {
     * shuffle — the query set is corpus-sized by assumption), the cell join
     * is a plain shuffled equi-join on the cell key (both sides hash-
     * partition by cell; no broadcast anywhere), and ranking uses the
-    * bounded [[graft.functions.TopKByScore]] heap aggregate — ≤k entries of
+    * bounded [[graft.functions.BoundedK]] heap aggregate — ≤k entries of
     * map-side state per query — instead of a window sort over every
     * candidate. Per-query candidate count is bounded by its nprobe cells'
     * sizes, so nothing is quadratic in the corpus; a hot cell is the skew
@@ -567,11 +567,12 @@ object Similarity {
     * broadcast of anything query-sized, no per-query expression. Each
     * (query, neighbor) pair meets in exactly m rows (a vector has one code
     * per subspace, one coarse cell), so the decimal ADC sum is a map-side-
-    * combinable groupBy, and ranking is the bounded [[TopKByScore]] heap —
-    * [[knnJoinIvf]]'s shuffle shape with [[pqSearchADC]]'s compressed
-    * scoring. IVF restriction: queries pick nprobe cells by the same quant6
-    * squared-L2 argmin as [[coarseCells]] (window keyed by query_id — a real
-    * shuffle, the query set is corpus-sized by assumption). */
+    * combinable groupBy, and ranking is the bounded
+    * [[graft.functions.BoundedK]] heap — [[knnJoinIvf]]'s shuffle shape with
+    * [[pqSearchADC]]'s compressed scoring. IVF restriction: queries pick
+    * nprobe cells by the same quant6 squared-L2 argmin as [[coarseCells]]
+    * (a k-min heap grouped by query_id — a real shuffle, the query set is
+    * corpus-sized by assumption). */
   def pqKnnJoin(queries: DataFrame, codes: DataFrame, codebook: DataFrame,
                 cells: DataFrame, centroids: DataFrame,
                 m: Int, dim: Int, k: Int, nprobe: Int,
@@ -588,8 +589,8 @@ object Similarity {
       .select(col("query_id"), col("sub"), col("code_id").as("code"),
         TextOps.quant(l2sq(col("__sv"), col("subvec")), 6).as("__d"))
     // nprobe coarse cells per query — the same quant6 L2 argmin as
-    // coarseCells. r21: ranked by the bounded top-K heap aggregate (same
-    // (-__cd DESC, id ASC) total order as the old rank window, ids unique)
+    // coarseCells. r21: ranked by the bounded k-min heap aggregate (same
+    // (__cd ASC, id ASC) total order as the old rank window, ids unique)
     // — the window sorted every query's full centroid cross inside one
     // shuffle partition; the heap keeps ≤nprobe map-side entries per query
     // and combines before the exchange.
@@ -598,7 +599,7 @@ object Similarity {
     val queryCells = q.crossJoin(cents)
       .withColumn("__cd", TextOps.quant(l2sq(col("embedding"), col("__cent")), 6))
       .groupBy("query_id")
-      .agg(TextOps.topKBy(-col("__cd"), col("__cent_id"), nprobe).as("__tk"))
+      .agg(TextOps.minKBy(col("__cd"), col("__cent_id"), nprobe).as("__tk"))
       .select(col("query_id"), explode(col("__tk")).as("__t"))
       .select(col("query_id"), col("__t.id").as("cell"))
     // distance-table rows fan out to their query's probe cells, then meet
@@ -613,10 +614,10 @@ object Similarity {
       .agg(TextOps.quant(
         sum(col("__d").cast(DecimalType(28, 8))).cast(DoubleType), 6).as("adist"))
       .groupBy("query_id")
-      .agg(TextOps.topKBy(-col("adist"), col("neighbor_id"), k).as("tk"))
+      .agg(TextOps.minKBy(col("adist"), col("neighbor_id"), k).as("tk"))
       .select(col("query_id"), posexplode(col("tk")).as(Seq("p", "t")))
       .select(col("query_id"), (col("p") + 1).cast(LongType).as("rank"),
-        col("t.id").as("neighbor_id"), (-col("t.score")).as("adist"))
+        col("t.id").as("neighbor_id"), col("t.key").as("adist"))
   }
 
   private def pqSearchADCCore(queryVecs: Seq[(Long, Array[Double])], codes: DataFrame,
@@ -627,9 +628,10 @@ object Similarity {
     // ids are the seed vec_ids — map them to dense positions for indexing
     val codeIds = codebook.map(_._2).distinct.sorted
     val codePos = codeIds.zipWithIndex.toMap
-    // consolidate flat encode rows to one wide row per vector ONCE and cache
-    // it: every query branch scans this frame (a production build persists
-    // codes wide to storage and skips the consolidation entirely)
+    // consolidate flat encode rows to one wide row per vector ONCE: the
+    // single exploded projection below is its only consumer, so it is not
+    // cached (a production build persists codes wide to storage and skips
+    // the consolidation entirely)
     val flat = codes.groupBy("vec_id")
       .agg(map_from_arrays(collect_list(col("sub")), collect_list(col("code")))
         .as("__cm"))
@@ -637,7 +639,7 @@ object Similarity {
     // equi-join; a production layout stores the cell with the codes)
     val wide = restrict.fold(flat) { case (cells, _) =>
       flat.join(cells.select(col("vec_id"), col("cell")), "vec_id")
-    }.persist()
+    }
     // ALL queries ride one exploded projection (not a union of per-query
     // branches: each branch's distinct literals would compile its own
     // whole-stage codegen unit — Q compilations for one logical scan)

@@ -100,26 +100,22 @@ object TextOps {
         org.apache.spark.sql.GraftExpressions.expression(c), k)
         .toAggregateExpression())
 
-  /** Bounded per-group top-K by (score DESC, id ASC) — ≤K heap entries of
-    * map-side state per group instead of a rank-window sort (see
-    * [[graft.functions.TopKByScore]]). Returns rank-ordered
-    * `array<struct<score,id>>`. */
-  def topKBy(score: Column, id: Column, k: Int): Column =
-    org.apache.spark.sql.GraftExpressions.column(
-      graft.functions.TopKByScore(
-        org.apache.spark.sql.GraftExpressions.expression(score),
-        org.apache.spark.sql.GraftExpressions.expression(id), k)
-        .toAggregateExpression())
+  /** Bounded per-group top-K by (score DESC, id ASC) over a double or
+    * bigint score — ≤K heap entries of map-side state per group instead of
+    * a rank-window sort (see [[graft.functions.BoundedK]]). Returns
+    * rank-ordered `array<struct<score,id>>`. */
+  def topKBy(score: Column, id: Column, k: Int): Column = boundedK(score, id, k, descending = true)
 
-  /** Bounded per-group k-MIN by (key ASC, id ASC) over EXACT long keys —
-    * ≤K heap entries of map-side state per group instead of a rank-window
-    * sort (see [[graft.functions.MinKByKey]]). Returns rank-ordered
+  /** The ascending twin of [[topKBy]]: the K smallest by (key ASC, id ASC),
+    * over a double or an EXACT bigint key. Returns rank-ordered
     * `array<struct<key,id>>`. */
-  def minKBy(key: Column, id: Column, k: Int): Column =
+  def minKBy(key: Column, id: Column, k: Int): Column = boundedK(key, id, k, descending = false)
+
+  private def boundedK(value: Column, id: Column, k: Int, descending: Boolean): Column =
     org.apache.spark.sql.GraftExpressions.column(
-      graft.functions.MinKByKey(
-        org.apache.spark.sql.GraftExpressions.expression(key),
-        org.apache.spark.sql.GraftExpressions.expression(id), k)
+      graft.functions.BoundedK(
+        org.apache.spark.sql.GraftExpressions.expression(value),
+        org.apache.spark.sql.GraftExpressions.expression(id), k, descending)
         .toAggregateExpression())
 
   /** Distinct word n-gram shingles. */

@@ -8,8 +8,8 @@ import org.apache.spark.sql.functions._
   *
   * `sum(v) OVER (PARTITION BY stratum ORDER BY k)` routes EVERY row of a
   * stratum through one reducer's sort — the same single-partition
-  * degeneracy the bounded top-k aggregates ([[graft.functions.MinKByKey]],
-  * [[graft.functions.TopKByScore]]) remove from rank windows, except a
+  * degeneracy the bounded top-k aggregate ([[graft.functions.BoundedK]],
+  * behind `top_k_by` / `min_k_by`) removes from rank windows, except a
   * prefix SUM cannot be heap-truncated: every row needs its exact running
   * total. The scale shape here is the classic two-level prefix sum over an
   * order-preserving COARSENING of the sort key:

@@ -1450,7 +1450,7 @@ object LlmOps {
     * mix actually needs (the global form can starve a small domain).
     *
     * Scale shape: the same narrow in-row key projection, then ONE hash
-    * aggregate with the bounded [[graft.functions.TopKByScore]] heap — the
+    * aggregate with the bounded [[graft.functions.BoundedK]] heap — the
     * shuffle moves |sources|×K entries, never a per-group sort and never
     * the corpus; contrast with a rank window, which would sort every
     * group's full row set. */

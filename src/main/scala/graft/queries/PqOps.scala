@@ -143,19 +143,19 @@ object PqOps {
     val emb = Tables.embeddings(s, d)
     val q = broadcast(emb.filter(col("vec_id") < NQueries)
       .select(col("vec_id").as("query_id"), col("embedding").as("__qe")))
-    // r21: bounded top-K heap aggregate instead of a rank window — the
+    // r21: bounded k-min heap aggregate instead of a rank window — the
     // window sorted every query's FULL candidate set inside one shuffle
     // partition; the heap keeps ≤K map-side entries per query and combines
-    // for free (same (-__d DESC, id ASC) total order, ids unique — the
-    // exact trade TopKByScore documents, and the shape pqKnnJoin already
-    // uses for its ranking).
+    // for free (same (__d ASC, id ASC) total order, ids unique — the exact
+    // trade BoundedK documents, and the shape pqKnnJoin already uses for
+    // its ranking).
     q.crossJoin(
         emb.select(col("vec_id").as("neighbor_id"), col("embedding").as("__ce")))
       .filter(col("query_id") =!= col("neighbor_id"))
       .withColumn("__d", graft.llm.TextOps.quant(
         Similarity.l2sq(col("__qe"), col("__ce")), 6))
       .groupBy("query_id")
-      .agg(graft.llm.TextOps.topKBy(-col("__d"), col("neighbor_id"), TopK).as("tk"))
+      .agg(graft.llm.TextOps.minKBy(col("__d"), col("neighbor_id"), TopK).as("tk"))
       .select(col("query_id"), explode(col("tk")).as("t"))
       .select(col("query_id"), col("t.id").as("neighbor_id")).persist()
   }
@@ -461,7 +461,7 @@ object PqOps {
     * the corpus is read as dequantized codes (the SQ analog of PQ's ADC).
     * The per-dim squared error is decimal-quantized before the DECIMAL sum
     * so ranking is engine-exact; the per-query top-K is the bounded
-    * [[graft.functions.TopKByScore]] heap (≤K map-side state), never a
+    * [[graft.functions.BoundedK]] heap (≤K map-side state), never a
     * window sort over all candidates. The 256-row (query, dim) table
     * broadcasts; the codes table never shuffles for scoring — only the
     * (query, vec) partial sums move, map-side combined. */
@@ -478,11 +478,10 @@ object PqOps {
       .agg(graft.llm.TextOps.quant(
         sum(col("dd").cast(DecimalType(28, 8))).cast(DoubleType), 6).as("adist"))
     dists.groupBy("query_id")
-      .agg(graft.llm.TextOps.topKBy(-col("adist"), col("neighbor_id"), TopK).as("tk"))
+      .agg(graft.llm.TextOps.minKBy(col("adist"), col("neighbor_id"), TopK).as("tk"))
       .select(col("query_id"), posexplode(col("tk")).as(Seq("p", "t")))
       .select(col("query_id"), (col("p") + 1).cast(LongType).as("rank"),
-        col("t.id").as("neighbor_id"),
-        (-col("t.score")).as("adist"))
+        col("t.id").as("neighbor_id"), col("t.key").as("adist"))
   }
 
   /** Recall@[[TopK]] of [[sq8Search]] against the exact L2 truth — the

@@ -323,7 +323,7 @@ object Relational {
     WHERE rk <= 5"""
 
   /** Per-group top-k with BOUNDED state — the 100 TB form of
-    * [[qGroupTopK]]: the native [[graft.functions.TopKByScore]] aggregate
+    * [[qGroupTopK]]: the native [[graft.functions.BoundedK]] aggregate
     * keeps a ≤5-entry heap per group map-side, so the shuffle moves
     * `groups × 5` entries instead of ranking every row of every group
     * inside a window sort. Same answer as the window form on non-null

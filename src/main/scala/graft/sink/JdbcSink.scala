@@ -173,6 +173,27 @@ final case class JdbcSink(url: String, dialect: Dialect,
     }
   }
 
+  /** The staging path every batch load shares: create a tmp table shaped
+    * like `adapted`, fill it through `stage`, then run `finish` over it on
+    * ONE connection in one transaction. The tmp table is dropped after
+    * `finish` — unless `finish` renamed it live (`consumed`) — and also
+    * when any step fails, so a failed load leaves no `_tmp_` table behind.
+    * Returns the rows staged. */
+  private def viaTmpTable(adapted: DataFrame, base: String, consumed: Boolean = false)(
+      stage: TableSpec => Long)(finish: (Connection, TableSpec) => Unit): Long = {
+    val tmpSpec = specFor(adapted, s"${base}_tmp_${System.nanoTime()}")
+    def dropTmp(): Unit = withConnection(exec(_, dialect.drop(tmpSpec)))
+    withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
+    val rows =
+      try { val n = stage(tmpSpec); inTx(finish(_, tmpSpec)); n }
+      catch { case e: Throwable =>
+        try dropTmp() catch { case d: Throwable => e.addSuppressed(d) }
+        throw e
+      }
+    if (!consumed) dropTmp()
+    rows
+  }
+
   /** Batch-mode transactional load (B3 + D2/D3): stage to a tmp table, then
     * MERGE/copy into the target in one tx, drop tmp
     * (abstract_transactional.go:152-206).
@@ -186,48 +207,40 @@ final case class JdbcSink(url: String, dialect: Dialect,
                 windowPredicate: Option[String] = None,
                 subBatches: Int = 1): Long = {
     val adapted = adapt(df)
-    val tmpSpec = specFor(adapted, s"${target.name}_tmp_${System.nanoTime()}")
-    withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
-    try {
-      val staged =
-        if (subBatches <= 1) append(adapted, tmpSpec.name)
-        else {
-          val chunk = org.apache.spark.sql.functions.pmod(
-            org.apache.spark.sql.functions.crc32(
-              org.apache.spark.sql.functions.to_json(
-                org.apache.spark.sql.functions.struct(
-                  adapted.columns.map(c => col(s"`$c`")): _*))),
-            lit(subBatches))
-          (0 until subBatches).map(i =>
-            append(adapted.filter(chunk === i), tmpSpec.name)).sum
-        }
-      val cols = tmpSpec.columns.map(_.name)
-      inTx { c =>
-        dialect.mergeInto(target, tmpSpec, cols, target.pk, windowPredicate)
-          .foreach(exec(c, _))
+    viaTmpTable(adapted, target.name) { tmp =>
+      if (subBatches <= 1) append(adapted, tmp.name)
+      else {
+        val chunk = org.apache.spark.sql.functions.pmod(
+          org.apache.spark.sql.functions.crc32(
+            org.apache.spark.sql.functions.to_json(
+              org.apache.spark.sql.functions.struct(
+                adapted.columns.map(c => col(s"`$c`")): _*))),
+          lit(subBatches))
+        (0 until subBatches).map(i =>
+          append(adapted.filter(chunk === i), tmp.name)).sum
       }
-      staged
-    } finally withConnection(exec(_, dialect.drop(tmpSpec)))
+    } { (c, tmp) =>
+      dialect.mergeInto(target, tmp, tmp.columns.map(_.name), target.pk, windowPredicate)
+        .foreach(exec(c, _))
+    }
   }
 
-  /** ReplaceTable (P2): load tmp then atomic swap
-    * (sql_adapter_base.go:730-740, replacetable_stream.go:51-117). Returns
-    * the rows of the new generation. */
+  /** ReplaceTable (P2): load tmp then swap it in, in one tx
+    * (sql_adapter_base.go:730-740, replacetable_stream.go:51-117). A failed
+    * stage leaves the live table as it was, and so does a failed swap on a
+    * warehouse whose DDL is transactional. Returns the rows of the new
+    * generation. */
   def replaceTable(df: DataFrame, table: String): Long = {
     val adapted = adapt(df)
     val name = dialect.adaptIdentifier(table)
-    val tmpSpec = specFor(adapted, s"${name}_tmp_${System.nanoTime()}")
-    withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
-    val rows = append(adapted, tmpSpec.name)
-    withConnection { c =>
+    viaTmpTable(adapted, name, consumed = true)(tmp => append(adapted, tmp.name)) { (c, tmp) =>
       val deprecated = s"${name}_deprecated"
       if (existingColumns(name).isDefined) {
         exec(c, dialect.renameTable(TableSpec(name, Nil), deprecated))
-        exec(c, dialect.renameTable(tmpSpec, name))
+        exec(c, dialect.renameTable(tmp, name))
         exec(c, dialect.drop(TableSpec(deprecated, Nil), ifExists = false))
-      } else exec(c, dialect.renameTable(tmpSpec, name))
+      } else exec(c, dialect.renameTable(tmp, name))
     }
-    rows
   }
 
   /** ReplacePartition (P1): stage the batch to a tmp table through the
@@ -240,17 +253,11 @@ final case class JdbcSink(url: String, dialect: Dialect,
                        partitionCol: String, partitionId: String): Long = {
     val adapted = adapt(df)
     val pc = dialect.adaptIdentifier(partitionCol)
-    val tmpSpec = specFor(adapted, s"${target.name}_tmp_${System.nanoTime()}")
-    withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
-    try {
-      val rows = append(adapted, tmpSpec.name)
-      inTx { c =>
-        exec(c, dialect.deleteWhere(target,
-          s"${dialect.quote(pc)} = '${partitionId.replace("'", "''")}'"))
-        exec(c, dialect.insertSelect(target, tmpSpec, tmpSpec.columns.map(_.name)))
-      }
-      rows
-    } finally withConnection(exec(_, dialect.drop(tmpSpec)))
+    viaTmpTable(adapted, target.name)(tmp => append(adapted, tmp.name)) { (c, tmp) =>
+      exec(c, dialect.deleteWhere(target,
+        s"${dialect.quote(pc)} = '${partitionId.replace("'", "''")}'"))
+      exec(c, dialect.insertSelect(target, tmp, tmp.columns.map(_.name)))
+    }
   }
 
   /** Stream-mode row-wise upsert (D4, autocommit_stream.go:41-140): each

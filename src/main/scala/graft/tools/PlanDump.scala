@@ -5,6 +5,8 @@ import org.apache.spark.sql.SparkSession
 /** Dumps `.explain("formatted")` for named registry queries into files —
   * the r20 optimization round's before/after plan artifacts
   * (`plans/r20/<query>_<tag>.txt`). Not part of the driver contract.
+  * The data directory is written as `<sfDir>`, so dumps taken from two
+  * checkouts diff on the plans alone.
   *
   * Usage: runMain graft.tools.PlanDump <sfDir> <outDir> <tag> <q1,q2,...>
   */
@@ -15,6 +17,7 @@ object PlanDump {
       sys.exit(2)
     }
     val Array(sfDir, outDir, tag, list) = args.take(4)
+    val dataDir = java.nio.file.Paths.get(sfDir).toAbsolutePath.normalize.toString
     val names = list.split(",").map(_.trim).filter(_.nonEmpty)
     val spark = SparkSession.builder().master("local[8]")
       .config("spark.sql.shuffle.partitions", "8")
@@ -24,10 +27,11 @@ object PlanDump {
     java.nio.file.Files.createDirectories(java.nio.file.Paths.get(outDir))
     val qs = graft.queries.Registry.all
     names.foreach { name =>
-      val txt =
+      val plan =
         try qs(name).fn(spark, sfDir).queryExecution.explainString(
           org.apache.spark.sql.execution.FormattedMode)
         catch { case e: Throwable => s"(plan failed: ${e.getMessage})" }
+      val txt = plan.replace(dataDir, "<sfDir>")
       java.nio.file.Files.writeString(
         java.nio.file.Paths.get(s"$outDir/${name}_$tag.txt"), txt)
       println(s"wrote $outDir/${name}_$tag.txt (${txt.length} chars)")

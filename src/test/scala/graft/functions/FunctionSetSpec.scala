@@ -42,6 +42,18 @@ class FunctionSetSpec extends SparkSuite {
     assert(agg.getSeq[org.apache.spark.sql.Row](2).length == 2)
   }
 
+  test("an aggregate's k outside int range is rejected, never wrapped to a small k") {
+    // 4294967299 = 2^32 + 3: an unchecked toInt would run it with k = 3
+    Seq("kmin_k(h, 4294967299)", "top_k_by(CAST(h AS DOUBLE), h, 4294967299)",
+        "min_k_by(h, h, 4294967299)").foreach { call =>
+      val e = intercept[Exception](spark.sql(
+        s"SELECT $call AS r FROM (SELECT explode(array(1L, 2L, 3L, 4L)) AS h)").collect())
+      val msgs = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+        .map(t => String.valueOf(t.getMessage)).toList
+      assert(msgs.exists(_.contains("4294967299 out of int range")), s"$call: $msgs")
+    }
+  }
+
   test("SQL results agree with the Column-API twins (one kernel, two doors)") {
     import spark.implicits._
     import org.apache.spark.sql.functions._

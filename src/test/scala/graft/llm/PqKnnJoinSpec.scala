@@ -84,4 +84,21 @@ class PqKnnJoinSpec extends SparkSuite {
       assert(sorted.toSeq == sorted.sortBy(identity).toSeq)
     }
   }
+
+  test("pqSearchADC and pqSearchADCIvf leave nothing cached") {
+    spark.catalog.clearCache()
+    // fresh, unpersisted inputs: the suite's shared frames are persisted
+    val e = rows.toDF("vec_id", "embedding")
+    val sd = e.filter(col("vec_id") < KSeeds)
+    val cb = Similarity.pqCodebook(sd, M, Dim)
+    val cbRows = cb.collect().map(r => (r.getInt(0), r.getLong(1),
+      r.getSeq[Float](2).map(_.toDouble).toArray)).toSeq
+    val cd = Similarity.pqEncode(e, cb, M, Dim)
+    val qs = rows.take(4).map { case (i, v) => (i, v.map(_.toDouble).toArray) }
+    val probes: Map[Long, Seq[Long]] = qs.map(q => q._1 -> Seq(0L, 1L)).toMap
+    assert(Similarity.pqSearchADC(qs, cd, cbRows, M, K).collect().length == 4 * K)
+    Similarity.pqSearchADCIvf(qs, cd, Similarity.coarseCells(e, sd), probes, cbRows, M, K)
+      .collect()
+    assert(spark.sharedState.cacheManager.isEmpty)
+  }
 }

@@ -415,7 +415,38 @@ class SketchOpsSpec extends SparkSuite {
           r.getSeq[org.apache.spark.sql.Row](1).map(e => (e.getDouble(0), e.getLong(1)))).toMap
       assert(got.view.mapValues(_.toList).toMap == expect.view.mapValues(_.toList).toMap,
         s"k=$k rows=${rows.take(8)}…")
+      // the same kernel ascending: min_k_by over the doubles, over exact
+      // bigint keys 2^59 + v (one double for all of them — only a Long
+      // compare ranks them), and minKBy(x) == topKBy(-x) negated back, the
+      // identity the distance rankings rely on
+      val df = rows.map { case (g, v, id) => (g, v, (1L << 59) + v.toLong, id) }
+        .toDF("g", "v", "key", "id").repartition(1 + (k + rows.size) % 6)
+      def ranked(agg: org.apache.spark.sql.Column, value: org.apache.spark.sql.Row => Any) =
+        df.groupBy("g").agg(agg.as("mk")).collect().map(r => r.getString(0) ->
+          r.getSeq[org.apache.spark.sql.Row](1).map(e => (value(e), e.getLong(1))).toList).toMap
+      def expectMin[V](key: ((String, Double, Long)) => V)(implicit o: Ordering[V]) =
+        rows.groupBy(_._1).map { case (g, rs) =>
+          g -> rs.sortBy(r => (key(r), r._3)).take(k).map(r => (key(r), r._3)).toList
+        }
+      val minD = ranked(TextOps.minKBy(col("v"), col("id"), k), _.getDouble(0))
+      assert(minD == expectMin(_._2), s"min_k_by double k=$k rows=${rows.take(8)}…")
+      val minL = ranked(TextOps.minKBy(col("key"), col("id"), k), _.getLong(0))
+      assert(minL == expectMin(r => (1L << 59) + r._2.toLong),
+        s"min_k_by bigint k=$k rows=${rows.take(8)}…")
+      assert(ranked(TextOps.topKBy(-col("v"), col("id"), k), -_.getDouble(0)) == minD)
     }
+  }
+
+  test("BoundedK type check: a string value is rejected, naming (double|bigint, bigint)") {
+    import spark.implicits._
+    val df = Seq(("g", "a", 1L)).toDF("g", "v", "id")
+    Seq(TextOps.topKBy(col("v"), col("id"), 2), TextOps.minKBy(col("v"), col("id"), 2))
+      .foreach { agg =>
+        val e = intercept[org.apache.spark.sql.AnalysisException](
+          df.groupBy("g").agg(agg.as("tk")).collect())
+        assert(e.getMessage.contains("(double|bigint, bigint), got (string, bigint)"),
+          e.getMessage)
+      }
   }
 
   test("resample: per-source keep rates derive from mixture weights; the hash gate is reproducible") {

@@ -211,6 +211,23 @@ class JdbcSinkSpec extends SparkSuite {
     assert(canon(readBack(sink, "RT")) == Seq(Seq("1"), Seq("2")))
   }
 
+  test("replaceTable: a failed stage throws, leaves no tmp table, and the live table is unchanged") {
+    val sink = freshSink("swapfail")
+    drop(sink, "RF")
+    val gen1 = df("id BIGINT, s STRING", Seq(Row(1L, "a"), Row(2L, "b")))
+    val spec = sink.specFor(gen1, "rf")
+    sink.ensureTable(spec); sink.append(gen1, spec.name)
+    // 40,000 chars do not fit Derby's VARCHAR(32000): the stage write fails
+    val tooLong = df("id BIGINT, s STRING", Seq(Row(3L, "x" * 40000)))
+    intercept[Exception](sink.replaceTable(tooLong, "rf"))
+    val tables = sink.withConnection { c =>
+      val rs = c.getMetaData.getTables(null, null, "%", Array("TABLE"))
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
+    }
+    assert(!tables.exists(_.startsWith("RF_")), tables)
+    assert(canon(readBack(sink, "RF")) == Seq(Seq("1", "a"), Seq("2", "b")))
+  }
+
   test("replacePartition clears only the target partition, in one tx (P1)") {
     val sink = freshSink("part")
     drop(sink, "RP")
