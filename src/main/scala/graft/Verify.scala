@@ -42,10 +42,8 @@ object Verify {
   }
 
   /** JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    * — a tab or CR in builder-authored SQL would otherwise make the
-    * driver's json.load fail and silently zero the round's correctness.
-    * Shared with the VerifySubset iteration tool so both dumps escape
-    * identically. */
+    * — a tab or CR in an oracle's SQL would otherwise make every JSON
+    * reader of `oracle_sql.json` reject the whole file. */
   def jsonStr(s: String): String = "\"" + s.flatMap {
     case '"'  => "\\\""
     case '\\' => "\\\\"

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Corpus-level training-data operators: benchmark decontamination,
   * deterministic stratified sampling, and sequence packing — the set a
@@ -67,15 +68,18 @@ object Corpus {
     // limit-guarded collect of the undirected pair rows (union-find needs no
     // direction doubling) — not a count + a second collect, and not an eager
     // edge checkpoint: each of those cost an extra pass of the pair pipeline.
-    val typesOf = (pairs.schema(iCol).dataType, pairs.schema(jCol).dataType)
     val guard = math.min(driverMaxEdges, Int.MaxValue - 1L).toInt
-    typesOf match {
-      case (org.apache.spark.sql.types.LongType, org.apache.spark.sql.types.LongType) =>
-        val probe = pairs.select(col(iCol), col(jCol)).limit(guard + 1).collect()
-        if (probe.length <= guard) return driverUnionFind(pairs.sparkSession, probe)
-      case (org.apache.spark.sql.types.StringType, org.apache.spark.sql.types.StringType) =>
-        val probe = pairs.select(col(iCol), col(jCol)).limit(guard + 1).collect()
-        if (probe.length <= guard) return driverUnionFindStr(pairs.sparkSession, probe)
+    lazy val probe = pairs.select(col(iCol), col(jCol)).limit(guard + 1).collect()
+    def small = probe.length <= guard
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    (pairs.schema(iCol).dataType, pairs.schema(jCol).dataType) match {
+      case (LongType, LongType) if small =>
+        return driverUnionFind(probe.map(r => (r.getLong(0), r.getLong(1))), Ordering.Long)
+          .toSeq.toDF("node", "cluster_id")
+      case (StringType, StringType) if small =>
+        return driverUnionFind(probe.map(r => (r.getString(0), r.getString(1))), Utf8Order)
+          .toSeq.toDF("node", "cluster_id")
       case _ => ()
     }
     val edgesRaw = pairs.select(col(iCol).as("src"), col(jCol).as("dst"))
@@ -116,57 +120,34 @@ object Corpus {
   }
 
   /** Small-graph path: classic union-find with path compression, attaching
-    * the larger root under the smaller — every element starts as its own
-    * root, so the invariant "root = min of merged roots" makes the final
-    * root exactly the component minimum (the same labels the distributed
-    * loop converges to). */
-  private def driverUnionFind(spark: org.apache.spark.sql.SparkSession,
-                              pairRows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    val parent = scala.collection.mutable.HashMap.empty[Long, Long]
-    def find(x: Long): Long = {
+    * the larger root under the smaller in `order` — every element starts as
+    * its own root, so the invariant "root = min of merged roots" makes the
+    * final root exactly the component minimum (the same labels the
+    * distributed loop converges to). Returns (node, root) for every node. */
+  private def driverUnionFind[T](pairs: Array[(T, T)], order: Ordering[T]): Iterator[(T, T)] = {
+    val parent = scala.collection.mutable.HashMap.empty[T, T]
+    def find(x: T): T = {
       var r = x
       while (parent(r) != r) r = parent(r)
       var c = x
       while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
       r
     }
-    pairRows.foreach { row =>
-      val (a, b) = (row.getLong(0), row.getLong(1))
+    pairs.foreach { case (a, b) =>
       parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
       val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (ra < rb) parent(rb) = ra else parent(ra) = rb }
+      if (ra != rb) { if (order.lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
     }
-    import spark.implicits._
-    parent.keysIterator.map(k => (k, find(k))).toSeq.toDF("node", "cluster_id")
+    parent.keysIterator.map(k => (k, find(k)))
   }
 
-  /** String twin of [[driverUnionFind]]. "Smaller" MUST be UTF-8 binary
-    * (code-point) order — what Spark's UTF8String `min` and DuckDB's `min`
-    * over VARCHAR both compute; `java.lang.String.compareTo` is UTF-16 and
-    * ranks supplementary characters below U+E000..U+FFFF, so it would elect
-    * different cluster roots than the engines (the `Bpe.cpCompare` rule). */
-  private def driverUnionFindStr(spark: org.apache.spark.sql.SparkSession,
-                                 pairRows: Array[org.apache.spark.sql.Row]): DataFrame = {
-    import org.apache.spark.unsafe.types.UTF8String
-    def lt(a: String, b: String): Boolean =
-      UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0
-    val parent = scala.collection.mutable.HashMap.empty[String, String]
-    def find(x: String): String = {
-      var r = x
-      while (parent(r) != r) r = parent(r)
-      var c = x
-      while (parent(c) != r) { val nx = parent(c); parent(c) = r; c = nx }
-      r
-    }
-    pairRows.foreach { row =>
-      val (a, b) = (row.getString(0), row.getString(1))
-      parent.getOrElseUpdate(a, a); parent.getOrElseUpdate(b, b)
-      val (ra, rb) = (find(a), find(b))
-      if (ra != rb) { if (lt(ra, rb)) parent(rb) = ra else parent(ra) = rb }
-    }
-    import spark.implicits._
-    parent.keysIterator.map(k => (k, find(k))).toSeq.toDF("node", "cluster_id")
-  }
+  /** String node order: UTF-8 binary (code-point) order — what Spark's
+    * UTF8String `min` and DuckDB's `min` over VARCHAR both compute;
+    * `java.lang.String.compareTo` is UTF-16 and ranks supplementary
+    * characters below U+E000..U+FFFF, so it would elect different cluster
+    * roots than the engines (the `Bpe.cpCompare` rule). */
+  private val Utf8Order: Ordering[String] = Ordering.fromLessThan((a, b) =>
+    UTF8String.fromString(a).compareTo(UTF8String.fromString(b)) < 0)
 
   /** RAG/context-window chunking: split every document into fixed
     * `windowTokens`-token chunks starting every `stride` tokens (stride <

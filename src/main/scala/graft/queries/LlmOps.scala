@@ -5,14 +5,17 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
-import graft.llm.{Corpus, Multimodal, Similarity, TextOps}
+import graft.llm.{Corpus, Multimodal, NearDup, Similarity, TextOps}
+import graft.llm.NearDup.{DfCap, JaccardThreshold, NumBands, NumHashes, RowsPerBand, SimHamMax}
 import graft.ops.{BandJoin, Dedup}
 import graft.ops.BandJoin.BandKey
 
 /** Training-data pipeline operators over `documents` / `embeddings`:
   * dedup family (exact, n-gram Jaccard, MinHash-LSH, SimHash fingerprints),
   * similarity search (brute-force + LSH-bucketed ANN), text analysis
-  * (lang-ID, quality, token stats), and multimodal feature plumbing.
+  * (lang-ID, quality, token stats), and multimodal feature plumbing. The
+  * text near-dup kernels live in [[graft.llm.NearDup]]; the queries here
+  * wrap them.
   *
   * Every oracle below is generated from the SAME Scala constants that drive
   * the Spark plan (hash function, MinHash coefficients, LSH hyperplanes), so
@@ -54,96 +57,19 @@ object LlmOps {
 
   // ---- n-gram Jaccard near-dup -----------------------------------------
 
-  private val JaccardThreshold = 0.5
-  private val DfCap = 100 // shingles in more docs than this are uninformative — and explode pair counts
-
   /** Candidate pairs via an inverted shingle index (join on the shingle —
     * never all-pairs), document-frequency cap for scale, exact Jaccard
     * verification. */
   def ngramJaccard(s: SparkSession, d: String): DataFrame =
-    jaccardVerify(cappedShingleIndex(Tables.documents(s, d)), JaccardThreshold)
-
-  /** (doc_id, shingle) inverted index with hot shingles removed
-    * ([[BandJoin.capHot]]). The source is scanned/tokenized twice (count
-    * pass + index pass); that is the right trade at scale — scans are
-    * map-only and embarrassingly parallel, while a window form would move
-    * AND sort the whole index over the network. */
-  private[queries] def cappedShingleIndex(docs: DataFrame): DataFrame = {
-    // index rows carry the 60-bit shingle HASH, not the shingle string: the
-    // count pass, the blacklist join, and the pair self-join all shuffle and
-    // compare 8-byte longs instead of ~30-byte strings (the hash is the
-    // codegen'd Hash60Array kernel; the oracle hashes identically, so the
-    // comparison stays exact — a collision would fold the same pair of
-    // shingles on both engines)
-    val sh0 = docs.select(col("doc_id"),
-      explode(TextOps.shingleHash60(TextOps.tokens(col("text")), 3)).as("s"))
-    // the capped index feeds THREE consumers downstream (both sides of the
-    // pair self-join + the per-doc sizes), and self-join sides do not share
-    // exchanges — persist so tokenize+shingle+cap runs once, not thrice
-    // (at cluster scale the same role is played by materializing the index
-    // to storage once per dedup run)
-    BandJoin.capHot(sh0, Seq("s"), DfCap).persist()
-  }
-
-  /** Shared tail for the inverted-index path: inter/union from (doc_id,
-    * shingle). Only safe on a DF-CAPPED index (the cap bounds the per-shingle
-    * fan-out); the candidate-verify path uses [[verifyCandidates]] instead. */
-  private[queries] def jaccardVerify(sh: DataFrame, threshold: Double): DataFrame = {
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val a = sh.as("a"); val b = sh.as("b")
-    val joined = a.join(b, col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-    joined.groupBy("i", "j").agg(count(lit(1)).as("inter"))
-      .join(sizes.withColumnRenamed("doc_id", "i").withColumnRenamed("n", "ni"), "i")
-      .join(sizes.withColumnRenamed("doc_id", "j").withColumnRenamed("n", "nj"), "j")
-      .withColumn("jac", TextOps.quant(col("inter") / (col("ni") + col("nj") - col("inter")), 3))
-      .filter(col("jac") >= threshold)
-      .select("i", "j", "jac")
-  }
-
-  /** Exact-Jaccard verification of candidate pairs against a per-doc
-    * DISTINCT-element ARRAY frame `docSets` (doc_id, ss). r20 shape: every
-    * caller already materializes the per-doc sets upstream (`hs` from the
-    * fused [[TextOps.shingleHash60]] kernel, or the prefix join's df-sorted
-    * aggregate), so the old exploded-index form — candidate-doc semi-join +
-    * a `collect_set` shuffle to REBUILD those very arrays — was two extra
-    * exchanges and a third pass over the index per verify call. Candidates
-    * now feed one linear join chain (no persist needed: the frame is
-    * referenced once), the doc-set side joins by key, and a non-matching
-    * doc never streams further than the join. |ss| is the doc's distinct
-    * element count, so the Jaccard arithmetic is unchanged bit-for-bit. */
-  private def verifyCandidates(docSets: DataFrame, cands: DataFrame,
-                               threshold: Double): DataFrame =
-    cands
-      .join(docSets.select(col("doc_id").as("i"), col("ss").as("sa")), "i")
-      .join(docSets.select(col("doc_id").as("j"), col("ss").as("sb")), "j")
-      .withColumn("inter", size(array_intersect(col("sa"), col("sb"))))
-      .withColumn("jac",
-        TextOps.quant(col("inter") / (size(col("sa")) + size(col("sb")) - col("inter")), 3))
-      .filter(col("jac") >= threshold)
-      .select("i", "j", "jac")
+    NearDup.jaccardVerify(NearDup.cappedShingleIndex(Tables.documents(s, d)), JaccardThreshold)
 
   private val ContainThreshold = 0.8
 
   /** Containment near-dup: `inter / min(|A|, |B|)` over the same capped
-    * inverted shingle index — the ASYMMETRIC variant that catches a short
-    * document quoted inside a long one, which plain Jaccard's
-    * union-denominator dilutes below threshold. Same 100 TB shape as
+    * inverted shingle index ([[NearDup.containment]]). Same 100 TB shape as
     * [[ngramJaccard]] (index join, never all-pairs). */
-  def containment(s: SparkSession, d: String): DataFrame = {
-    val sh = cappedShingleIndex(Tables.documents(s, d))
-    val sizes = sh.groupBy("doc_id").agg(count(lit(1)).as("n"))
-    val joined = sh.as("a").join(sh.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id"))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-    joined.groupBy("i", "j").agg(count(lit(1)).as("inter"))
-      .join(sizes.withColumnRenamed("doc_id", "i").withColumnRenamed("n", "ni"), "i")
-      .join(sizes.withColumnRenamed("doc_id", "j").withColumnRenamed("n", "nj"), "j")
-      .withColumn("containment",
-        TextOps.quant(col("inter") / least(col("ni"), col("nj")), 3))
-      .filter(col("containment") >= ContainThreshold)
-      .select("i", "j", "containment")
-  }
+  def containment(s: SparkSession, d: String): DataFrame =
+    NearDup.containment(NearDup.cappedShingleIndex(Tables.documents(s, d)), ContainThreshold)
 
   private val containmentOracle = s"""
     WITH sh0 AS (
@@ -181,86 +107,13 @@ object LlmOps {
 
   // ---- exact all-pairs similarity join (prefix filtering) ---------------
 
-  /** EXACT all-pairs Jaccard join via prefix filtering (Bayardo et al. 2007
-    * "Scaling Up All Pairs Similarity Search"; Chaudhuri et al. 2006 SSJoin).
-    *
-    * [[ngramJaccard]] keeps the inverted index tractable by DROPPING shingles
-    * hotter than [[DfCap]] — approximate by design. This operator is exact
-    * with a still-bounded index: under ANY global total order on shingles, a
-    * pair with J ≥ τ must share a shingle within each side's first
-    * `|x| − ⌈τ·|x|⌉ + 1` shingles (if the intersection avoided both prefixes
-    * it would fit in the suffixes, which are too small to reach the required
-    * overlap ⌈τ·max(|x|,|y|)⌉). So only PREFIXES are indexed. The order used
-    * is (document frequency ASC, hash ASC) — rarest first — which makes the
-    * prefix index small AND low-fan-out: the hot shingles that blow up an
-    * uncapped index sort to the suffix and are never indexed at all.
-    *
-    * Pipeline: one df count (map-side combinable), one keyed join to attach
-    * df, one per-doc sort (|doc|-bounded), prefix-index equi-join with the
-    * τ·|x| ≤ |y| ≤ |x|/τ length filter, then exact in-row verification of
-    * the candidates against the FULL sets — no stage is quadratic in the
-    * corpus and no qualifying pair can be missed. */
+  /** EXACT all-pairs Jaccard join ([[NearDup.prefixJoinPairs]]):
+    * [[ngramJaccard]] keeps its index tractable by DROPPING shingles hotter
+    * than [[NearDup.DfCap]]; prefix filtering stays exact with a still-bounded
+    * index — no stage is quadratic in the corpus and no qualifying pair can
+    * be missed. */
   def prefixJoin(s: SparkSession, d: String): DataFrame =
-    prefixJoinPairs(Tables.documents(s, d))
-
-  private[queries] def prefixJoinPairs(docs: DataFrame): DataFrame = {
-    // r20: persist the per-doc ARRAY frame (one row per doc) instead of the
-    // exploded index (one row per (doc, shingle)) — same single tokenize+
-    // shingle+hash pass covered, ~|doc| times smaller cache; the exploded
-    // index is re-derived per consumer as a cheap explode of the cache
-    val withHs = hashedShingles(docs).persist()
-    val out = prefixJoinFromIndex(
-      withHs.select(col("doc_id"), explode(col("hs")).as("s")))
-    withHs.unpersist()
-    out
-  }
-
-  /** [[prefixJoinPairs]] over an ALREADY-BUILT (and persisted) uncapped
-    * (doc_id, s) shingle index — lets [[lshEval]] share one tokenize+
-    * shingle+hash pass between the exact and LSH pipelines. */
-  /** The AllPairs candidate set of the prefix join — exposed (with the
-    * persisted pref frame the caller must unpersist) so the skew-stress
-    * spec can assert the df-ASC prefix keeps candidates sub-quadratic
-    * under a boilerplate-heavy corpus. */
-  /** r20 shape: ONE df-attach + groupBy aggregate builds each doc's full
-    * (df ASC, s ASC)-sorted shingle array, PERSISTED — the prefix index is
-    * an explode of its head slice (derived per self-join side as a cheap
-    * cache read, where the old shape persisted the exploded prefix index
-    * itself) and the exact verify reuses the same arrays, retiring the
-    * per-call semi-join + collect_set rebuild. Returns (candidates, prefix
-    * index, grouped): the caller unpersists `grouped`. */
-  private[queries] def prefixCandidates(sh: DataFrame)
-      : (DataFrame, DataFrame, DataFrame) = {
-    val tau = JaccardThreshold
-    val df = sh.groupBy("s").agg(count(lit(1)).as("df"))
-    val grouped = sh.join(df, "s")
-      .groupBy("doc_id")
-      .agg(sort_array(collect_list(struct(col("df"), col("s")))).as("sorted"))
-      .select(col("doc_id"), col("sorted.s").as("ss"))
-      .persist() // read 2x by the prefix self-join + 2x by the verify joins
-    val pref = grouped
-      .select(col("doc_id"), size(col("ss")).as("n"),
-        explode(slice(col("ss"), lit(1),
-          (size(col("ss")) - ceil(lit(tau) * size(col("ss"))) + 1)
-            .cast(IntegerType))).as("s"))
-    // candidates: shared prefix shingle + the length filter (a qualifying
-    // pair has min ≥ τ·max — τ=0.5 and integer sizes keep the double
-    // arithmetic exact; the filter only prunes, the verify decides)
-    val cands = pref.as("a").join(pref.as("b"),
-        col("a.s") === col("b.s") && col("a.doc_id") < col("b.doc_id") &&
-          least(col("a.n"), col("b.n")) >= lit(tau) * greatest(col("a.n"), col("b.n")))
-      .select(col("a.doc_id").as("i"), col("b.doc_id").as("j"))
-      .distinct()
-    (cands, pref, grouped)
-  }
-
-  private def prefixJoinFromIndex(sh: DataFrame): DataFrame = {
-    val (cands, _, grouped) = prefixCandidates(sh)
-    // pair-set-sized; eager so grouped (and callers' shingle caches) release NOW
-    val out = verifyCandidates(grouped, cands, JaccardThreshold).localCheckpoint(true)
-    grouped.unpersist()
-    out
-  }
+    NearDup.prefixJoinPairs(Tables.documents(s, d))
 
   /** Oracle = the EXACT pair set (no df cap) — prefix filtering is lossless,
     * so the full inverted-index join in DuckDB must agree bit-for-bit. */
@@ -423,61 +276,13 @@ object LlmOps {
 
   // ---- MinHash + LSH near-dup ------------------------------------------
 
-  private val NumHashes = 16
-  private val NumBands = 4
-  private val RowsPerBand = NumHashes / NumBands
-
   /** MinHash signatures → banded buckets → candidate pairs (join on band
-    * key) → exact-Jaccard verification of candidates only. The 100 TB shape:
-    * signatures are narrow per-row work; the only shuffles are the band-key
-    * join and the candidate verification. */
+    * key) → exact-Jaccard verification of candidates only
+    * ([[NearDup.minhashPairs]]). The 100 TB shape: signatures are narrow
+    * per-row work; the only shuffles are the band-key join and the
+    * candidate verification. */
   def minhashLsh(s: SparkSession, d: String): DataFrame =
-    minhashPairs(Tables.documents(s, d))
-
-  /** (doc_id, shingle-HASH-array) — the frame both the signature branch and
-    * the verify branch consume. Hashing happens HERE, once (the codegen'd
-    * Hash60Array kernel): signatures permute the hashes, and verification
-    * intersects 8-byte-long sets instead of shingle strings — same exactness
-    * (the oracle hashes identically), smaller state everywhere downstream. */
-  private def hashedShingles(docs: DataFrame): DataFrame =
-    docs.select(col("doc_id"),
-      TextOps.shingleHash60(TextOps.tokens(col("text")), 3).as("hs"))
-
-  /** (doc_id, band, key) MinHash band rows for ANY (doc_id, text) frame —
-    * the unit an LSH index stores. ONE codegen'd pass computes the whole
-    * 16-value signature (a native Catalyst expression — 16 chained
-    * transform/array_min calls would be interpreted and traverse the hash
-    * array 16×, see MinHashSig); the band explode is narrow. */
-  private[queries] def bandFrame(docs: DataFrame): DataFrame =
-    bandFrameFromHashes(hashedShingles(docs))
-
-  private def bandFrameFromHashes(withHs: DataFrame): DataFrame =
-    sigBands(withHs.withColumn("sigv", TextOps.minhashSignature(col("hs"), NumHashes)))
-
-  /** (doc_id, band, key) rows of a (doc_id, sigv) signature frame. */
-  private def sigBands(sigs: DataFrame): DataFrame = {
-    val sig = (0 until NumHashes).map(i => element_at(col("sigv"), i + 1))
-    BandJoin.bandRows(sigs, Seq("doc_id"),
-      (0 until NumBands).map(b => TextOps.bandKey(sig, b, RowsPerBand)))
-  }
-
-  /** MinHash-LSH near-dup pairs over ANY (doc_id, text) frame — reused by
-    * the standalone query and the clean-corpus pipeline. */
-  private[queries] def minhashPairs(docs: DataFrame): DataFrame =
-    // shingle+hash ONCE: the signature branch and the verify branch both
-    // consume the (doc_id, hashes) frame — persist it so the text is
-    // tokenized, shingled, and hashed a single time, not once per branch
-    // (at cluster scale: the hash frame is materialized to storage once per
-    // dedup run)
-    minhashPairsFromHashes(hashedShingles(docs).persist())
-
-  private def minhashPairsFromHashes(withHs: DataFrame): DataFrame = {
-    val cands = BandJoin.selfPairs(bandFrameFromHashes(withHs), BandKey)
-    // r20: `hs` IS each doc's distinct shingle-hash set — verify joins the
-    // cached array frame directly (no explode, no collect_set rebuild)
-    verifyCandidates(withHs.select(col("doc_id"), col("hs").as("ss")),
-      cands, JaccardThreshold)
-  }
+    NearDup.minhashPairs(Tables.documents(s, d))
 
   /** Signature-only near-dup ESTIMATION: the verify-free MinHash variant —
     * when shingle sets are too large to intersect (or discarded after
@@ -494,10 +299,10 @@ object LlmOps {
     * 16 position-agreements are a codegen'd sum of element_at compares —
     * no shingle explode ever happens. */
   def minhashEstimate(s: SparkSession, d: String): DataFrame = {
-    val sigs = hashedShingles(Tables.documents(s, d))
+    val sigs = NearDup.hashedShingles(Tables.documents(s, d))
       .withColumn("sigv", TextOps.minhashSignature(col("hs"), NumHashes))
       .select(col("doc_id"), col("sigv")).persist()
-    val joined = BandJoin.selfPairs(sigBands(sigs), BandKey)
+    val joined = BandJoin.selfPairs(NearDup.sigBands(sigs), BandKey)
       .join(sigs.select(col("doc_id").as("i"), col("sigv").as("sa")), "i")
       .join(sigs.select(col("doc_id").as("j"), col("sigv").as("sb")), "j")
     val matches = (0 until NumHashes).map(k =>
@@ -573,7 +378,7 @@ object LlmOps {
   /** Recall measurement of the MinHash-LSH dedup pipeline against the EXACT
     * similarity join — the index-trust number for the TEXT side, the twin
     * of [[annRecall]] on the embedding side, made possible by
-    * [[prefixJoinPairs]] being exact. Since the r20 rewrite the LSH leg is
+    * [[NearDup.prefixJoinPairs]] being exact. Since the r20 rewrite the LSH leg is
     * verified by a semi-join against the exact pair set, so `n_hit ==
     * n_lsh` holds BY CONSTRUCTION (the same persisted frame is counted
     * twice) — the independent cross-check of the LSH pipeline lives in the
@@ -588,8 +393,8 @@ object LlmOps {
     // permille on a deterministic doc sample at O(|sample|·df) cost.
     // ONE tokenize+shingle+hash pass feeds BOTH pipelines (each would
     // otherwise scan and hash the corpus independently)
-    val withHs = hashedShingles(Tables.documents(s, d)).persist()
-    val exact = prefixJoinFromIndex(
+    val withHs = NearDup.hashedShingles(Tables.documents(s, d)).persist()
+    val exact = NearDup.prefixJoinFromIndex(
       withHs.select(col("doc_id"), explode(col("hs")).as("s")))
       .select("i", "j").persist()
     // r20: LSH's VERIFIED pairs are by definition the band candidates whose
@@ -599,7 +404,7 @@ object LlmOps {
     // shingle sets. n_hit == n_lsh was an invariant before (verified LSH ⊆
     // exact by construction) and is an arithmetic identity now; the DuckDB
     // oracle still computes both legs independently and hash-compares.
-    val bands = bandFrameFromHashes(withHs)
+    val bands = NearDup.bandFrameFromHashes(withHs)
     val lshCands = BandJoin.selfPairs(bands, BandKey)
     // lsh feeds the union twice (n_lsh + n_hit) — persist or the band
     // pipeline runs per consumer
@@ -687,19 +492,19 @@ object LlmOps {
       .select(least(col("sd"), col("od")).as("i"),
         greatest(col("sd"), col("od")).as("j"))
       .distinct()
-    verifyCandidates(withHs.select(col("doc_id"), col("hs").as("ss")),
+    NearDup.verifyCandidates(withHs.select(col("doc_id"), col("hs").as("ss")),
       cands, tau).select("i", "j")
   }
 
   private[queries] def sampledPairSets(s: SparkSession, d: String)
       : (DataFrame, DataFrame, Seq[DataFrame]) = {
-    val withHs = hashedShingles(Tables.documents(s, d)).persist()
+    val withHs = NearDup.hashedShingles(Tables.documents(s, d)).persist()
     val shFull = withHs.select(col("doc_id"), explode(col("hs")).as("s")).persist()
     val exactS = sampledExactPairs(withHs, shFull).persist()
     // LSH pairs with ≥1 sampled endpoint — sampled docs' bands join the
     // FULL band index (never full×full): identical to restricting the full
     // band self-join, since cohabitation and the exact verify are symmetric.
-    val bands = bandFrameFromHashes(withHs).persist()
+    val bands = NearDup.bandFrameFromHashes(withHs).persist()
     val lshCands = BandJoin.probePairs(
       bands.filter(evalSampled(col("doc_id"))), bands, BandKey)
     // r20: every lshCands pair touches the sample, so its verified subset
@@ -791,7 +596,7 @@ object LlmOps {
     val withHs = base.select(col("doc_id"), col("hs"))
     val shFull = withHs.select(col("doc_id"), explode(col("hs")).as("s")).persist()
     val exactS = sampledExactPairs(withHs, shFull).persist()
-    val cl = clusterOf(simhashBandPairs(
+    val cl = NearDup.components(NearDup.simhashBandPairs(
       base.select(col("doc_id"), col("sh")), bandBits = 8)).persist()
     val perCluster = cl.groupBy("cluster_id").agg(
       count(lit(1)).as("k"),
@@ -873,9 +678,11 @@ object LlmOps {
     // session's overwrite race this session's lazy read; a dir per CALL
     // would orphan one per query invocation)
     val idxDir = IncrementalIdxDir
-    bandFrame(history).write.mode("overwrite").parquet(idxDir)
+    NearDup.bandFrame(history).write.mode("overwrite").parquet(idxDir)
     val idx = s.read.parquet(idxDir)
-    val cands = bandFrame(fresh).as("a").join(idx.as("b"),
+    // its own join, not BandJoin.probePairs: new and stored are disjoint
+    // doc sets, so there is no id filter and no (least, greatest) order
+    val cands = NearDup.bandFrame(fresh).as("a").join(idx.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(col("a.doc_id").as("i"), col("b.doc_id").as("j")).distinct()
     // verify on STRING shingle arrays here: hashing the WHOLE corpus's
@@ -887,7 +694,7 @@ object LlmOps {
     // eagerly behind a pair-set-sized checkpoint like the other callers.
     val docSets = docs.select(col("doc_id"),
       TextOps.shingles(TextOps.tokens(col("text")), 3).as("ss")).persist()
-    val out = verifyCandidates(docSets, cands, JaccardThreshold)
+    val out = NearDup.verifyCandidates(docSets, cands, JaccardThreshold)
       .localCheckpoint(true)
     docSets.unpersist()
     out
@@ -936,32 +743,17 @@ object LlmOps {
     FROM (SELECT doc_id, list_transform($toksSql, t -> ${hashSql("t")}) AS hs
           FROM documents) t"""
 
-  private val SimHamMax = 3 // published near-dup threshold for 32-bit simhash
-
   /** SimHash near-dup: candidates share one of the four 8-bit bands of the
     * 32-bit fingerprint (two fingerprints within Hamming ≤ 3 MUST agree on
     * ≥1 band — pigeonhole), verified by exact Hamming distance via
     * bit_count(xor). Pair discovery is an equi-join on (band, byte); no
     * all-pairs anywhere — the standard simhash dedup shape at corpus scale. */
   def simhashNearDup(s: SparkSession, d: String): DataFrame =
-    simhashBandPairs(Tables.documents(s, d)
+    NearDup.simhashBandPairs(Tables.documents(s, d)
       .select(col("doc_id"),
         TextOps.hash60Array(TextOps.tokens(col("text"))).as("hs"))
       .select(col("doc_id"), TextOps.simhash32FromHashes(col("hs")).as("sh")),
       bandBits = 8)
-
-  /** The band-join core over ANY (doc_id, sh) fingerprint frame: explode
-    * into 4 bands of `bandBits` bits, equi-join on (band, key), verify by
-    * exact Hamming (pigeonhole: 4 bands cover Hamming ≤ 3 regardless of
-    * band width). Shared by the 32-bit and 60-bit forms and driveable with
-    * synthetic fleets by SkewStressSpec. */
-  private[queries] def simhashBandPairs(sh: DataFrame, bandBits: Int): DataFrame = {
-    val bands = BandJoin.bandRows(sh, Seq("doc_id", "sh"),
-      BandJoin.bitBands(col("sh"), 4, bandBits))
-    BandJoin.selfPairs(bands, BandKey, carry = Seq(
-        bit_count(col("a.sh").bitwiseXOR(col("b.sh"))).cast(LongType).as("hamming")))
-      .filter(col("hamming") <= SimHamMax)
-  }
 
   /** The WIDE (60-bit) simhash near-dup — the 100 TB form: the 32-bit
     * fingerprint's four 8-bit bands have only 256 keys each, so at corpus
@@ -972,7 +764,7 @@ object LlmOps {
     * 60 bits (not 64) so the fingerprint stays non-negative in a BIGINT on
     * both engines. */
   def simhashNearDupWide(s: SparkSession, d: String): DataFrame =
-    simhashBandPairs(Tables.documents(s, d)
+    NearDup.simhashBandPairs(Tables.documents(s, d)
       .select(col("doc_id"),
         TextOps.hash60Array(TextOps.tokens(col("text"))).as("hs"))
       .select(col("doc_id"), TextOps.simhashFromHashes(col("hs"), 60).as("sh")),
@@ -1005,22 +797,7 @@ object LlmOps {
     * keep one representative per component, not per pair. The oracle walks
     * the same reachability with a recursive CTE. */
   def dedupCluster(s: SparkSession, d: String): DataFrame =
-    clusterOf(simhashNearDup(s, d))
-
-  /** Pair set → components, shared by every cluster form (the Spark twin
-    * of [[ccReachSql]] — a fix to the walk must reach all of them). The
-    * pair set feeds both direction-unions of the edge list — persist so
-    * the banded self-join pipeline runs once. */
-  private def clusterOf(pairFrame: DataFrame): DataFrame = {
-    val pairs = pairFrame.select("i", "j").persist()
-    // clusterPairs consumes pairs EAGERLY on both paths (driver probe
-    // collect, or the eager edge checkpoint) — release the cache here
-    // instead of leaking it for the session (r21, the triangleCount rule)
-    val out = graft.llm.Corpus.clusterPairs(pairs)
-      .select(col("node").as("doc_id"), col("cluster_id"))
-    pairs.unpersist()
-    out
-  }
+    NearDup.components(simhashNearDup(s, d))
 
   /** Cluster-quality evaluation: how faithfully do the SimHash near-dup
     * COMPONENTS (what [[dedupCluster]] dedups by) reflect the exact
@@ -1041,11 +818,11 @@ object LlmOps {
     // scan+tokenize pipelines. Values are expression-identical, so the
     // oracle hash is untouched.
     val base = evalBase(Tables.documents(s, d)).persist()
-    val cl = clusterOf(simhashBandPairs(
+    val cl = NearDup.components(NearDup.simhashBandPairs(
       base.select(col("doc_id"), col("sh")), bandBits = 8))
       .persist() // label frame feeds sizes + both pair-label joins
     val sizes = cl.groupBy("cluster_id").agg(count(lit(1)).as("sz"))
-    val exact = prefixJoinFromIndex(
+    val exact = NearDup.prefixJoinFromIndex(
       base.select(col("doc_id"), explode(col("hs")).as("s")))
       .select("i", "j").persist()
     val hits = exact
@@ -1122,7 +899,7 @@ object LlmOps {
     * `min(m) GROUP BY node` aggregate. ONE builder on purpose: four
     * oracles (cluster, wide cluster, survivor, leak-free split) walk the
     * same reachability, and a fix to the walk must reach all of them at
-    * once. */
+    * once. The Spark twin is [[NearDup.components]]. */
   private def ccReachSql(pairsSql: String): String = s"""
     pairs AS MATERIALIZED (SELECT i, j FROM ($pairsSql) q),
     nodes AS (SELECT i AS n FROM pairs UNION SELECT j FROM pairs),
@@ -1144,7 +921,7 @@ object LlmOps {
     * checkpointed label propagation), so a corpus-scale dedup never has to
     * route through the 256-key 32-bit banding to get components. */
   def dedupClusterWide(s: SparkSession, d: String): DataFrame =
-    clusterOf(simhashNearDupWide(s, d))
+    NearDup.components(simhashNearDupWide(s, d))
 
   private val dedupClusterWideOracle = s"""
     WITH RECURSIVE ${ccReachSql(simhashNearDupWideOracle)}
@@ -1158,7 +935,7 @@ object LlmOps {
     * (driver union-find ⇄ checkpointed label propagation), same oracle
     * walk, different — exact — edge set. */
   def dedupClusterExact(s: SparkSession, d: String): DataFrame =
-    clusterOf(prefixJoinPairs(Tables.documents(s, d)))
+    NearDup.components(NearDup.prefixJoinPairs(Tables.documents(s, d)))
 
   /** Recursive reachability over the EXACT (prefix-join) pair set — the
     * exact-edge twin of [[ccReachCtesSql]], shared by the exact cluster and
@@ -1229,19 +1006,14 @@ object LlmOps {
     * far smaller than the corpus), and survivorship is one
     * map-side-combinable min(struct) aggregate — no window, no sort. */
   /** Every doc's near-dup cluster label (+ requested doc columns): CC over
-    * the simhash pair set, singletons labeled with their own id — the ONE
-    * Spark-side copy of the pairs→clusterPairs→coalesce pattern its three
-    * oracle twins share via `ccReachCtesSql`. */
+    * the simhash pair set, singletons labeled with their own id — the
+    * Spark side of the pattern its three oracle twins share via
+    * `ccReachCtesSql`. */
   private def clusterAssign(s: SparkSession, d: String,
-                            extraCols: Seq[String] = Nil): DataFrame = {
-    val pairs = simhashNearDup(s, d).select("i", "j").persist()
-    // clusterPairs consumes pairs eagerly (see clusterOf) — release now
-    val cl = graft.llm.Corpus.clusterPairs(pairs)
-    pairs.unpersist()
+                            extraCols: Seq[String] = Nil): DataFrame =
     Tables.documents(s, d).select("doc_id", extraCols: _*)
-      .join(cl.withColumnRenamed("node", "doc_id"), Seq("doc_id"), "left")
+      .join(dedupCluster(s, d), Seq("doc_id"), "left")
       .withColumn("cluster_id", coalesce(col("cluster_id"), col("doc_id")))
-  }
 
   def dedupSurvivor(s: SparkSession, d: String): DataFrame = {
     clusterAssign(s, d, Seq("n_chars"))
@@ -2175,16 +1947,12 @@ object LlmOps {
   def semDedup(s: SparkSession, d: String): DataFrame =
     semDedupFrom(embedNearDup(s, d))
 
-  /** Pair set → components → (vec_id, cluster_id, kept) — ONE body for the
-    * single-bucket and banded forms, like [[clusterOf]] on the text side. */
-  private def semDedupFrom(pairFrame: DataFrame): DataFrame = {
-    // the pair set feeds both direction-unions of the edge list — persist
-    // so the bucketed pair pipeline runs once
-    val pairs = pairFrame.select("i", "j").persist()
-    graft.llm.Corpus.clusterPairs(pairs)
-      .select(col("node").as("vec_id"), col("cluster_id"),
-        (col("node") === col("cluster_id")).as("kept"))
-  }
+  /** Pair set → [[NearDup.components]] → (vec_id, cluster_id, kept) — ONE
+    * body for the single-bucket and banded forms. */
+  private def semDedupFrom(pairs: DataFrame): DataFrame =
+    NearDup.components(pairs)
+      .select(col("doc_id").as("vec_id"), col("cluster_id"),
+        (col("doc_id") === col("cluster_id")).as("kept"))
 
   private val NegsPerAnchor = 3
 
@@ -2287,7 +2055,7 @@ object LlmOps {
     // shingle-verify branch) and the final anti-join — without this the
     // whole tokenize→quality→window-dedup chain re-runs three times
     val exact = Dedup.exact(kept, Seq("text"), "doc_id").persist()
-    val losers = minhashPairs(exact.select("doc_id", "text"))
+    val losers = NearDup.minhashPairs(exact.select("doc_id", "text"))
       .select(col("j").as("doc_id")).distinct()
     exact.join(losers, Seq("doc_id"), "left_anti")
       .select("doc_id", "quality", "lang", "dup_count")

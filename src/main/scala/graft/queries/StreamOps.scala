@@ -5,6 +5,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
+import graft.llm.NearDup
 import graft.ops.BandJoin
 import graft.sink.JdbcSink
 import graft.sql.DerbyDialect
@@ -1551,7 +1552,7 @@ object StreamOps {
                                         outDir: String): Unit = {
     compactBatchIndex(s, idxDir, bid)
     val f = fs(s, idxDir)
-    val bands = LlmOps.bandFrame(batch).withColumn("pb", pbCol).persist()
+    val bands = NearDup.bandFrame(batch).withColumn("pb", pbCol).persist()
     val probe =
       if (!f.exists(new Path(idxDir))) bands.drop("pb")
       else {

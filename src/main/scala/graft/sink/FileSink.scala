@@ -132,22 +132,16 @@ object FileSink {
     * (replacepartition_stream.go:85-161; an empty batch is a no-op here
     * because a file store has no partition row to clear — delete the folder
     * for that). Columnar formats only (JSON/CSV folders have no reliable
-    * overwrite story). */
+    * overwrite story). The mode is a per-write option, so the session's
+    * conf is never touched and a concurrent write keeps its own mode. */
   def replacePartition(batch: DataFrame, dir: String, partitionBy: Seq[String],
                        format: String = "parquet"): Unit = {
-    val spark = batch.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val w = batch.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
-      format match {
-        case "parquet" => w.parquet(dir)
-        case "orc"     => w.orc(dir)
-        case other => throw new IllegalArgumentException(s"no overwrite for format: $other")
-      }
-    } finally prev match {
-      case Some(v) => spark.conf.set("spark.sql.sources.partitionOverwriteMode", v)
-      case None    => spark.conf.unset("spark.sql.sources.partitionOverwriteMode")
+    val w = batch.write.mode(SaveMode.Overwrite).partitionBy(partitionBy: _*)
+      .option("partitionOverwriteMode", "dynamic")
+    format match {
+      case "parquet" => w.parquet(dir)
+      case "orc"     => w.orc(dir)
+      case other => throw new IllegalArgumentException(s"no overwrite for format: $other")
     }
   }
 
@@ -419,9 +413,6 @@ object FileSink {
     val n = relPath.split('/').last
     n.startsWith("delta-v") || n.startsWith("tomb-v")
   }
-
-  private def isTombstone(relPath: String): Boolean =
-    relPath.split('/').last.startsWith("tomb-v")
 
   /** Merge-on-read MERGE: the change rows land as DELTA files committed
     * into the manifest beside the untouched base files — the commit reads

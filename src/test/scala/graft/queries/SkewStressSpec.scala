@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.llm.TextOps
+import graft.llm.{NearDup, TextOps}
 
 /** Skewed-corpus stress: real corpora are power-law — one boilerplate
   * paragraph (license header, nav bar, disclaimer) lands in a large
@@ -47,7 +47,7 @@ class SkewStressSpec extends SparkSuite {
 
   test("df-cap drops boilerplate shingles: candidate work collapses vs the naive index") {
     val naive = pairWork(shingleIndex)
-    val capped = LlmOps.cappedShingleIndex(corpus)
+    val capped = NearDup.cappedShingleIndex(corpus)
     val cappedWork = pairWork(capped)
     capped.unpersist()
     info(s"candidate work: naive=$naive capped=$cappedWork " +
@@ -61,7 +61,7 @@ class SkewStressSpec extends SparkSuite {
 
   test("df-ASC prefix join never indexes hot shingles: candidates stay sub-quadratic and exact") {
     val sh = shingleIndex.persist()
-    val (cands, pref, grouped) = LlmOps.prefixCandidates(sh)
+    val (cands, pref, grouped) = NearDup.prefixCandidates(sh)
     val nCands = cands.count()
     // hot shingles must not appear in any doc's indexed prefix
     val boilerHashes = TextOps.shingleHash60(TextOps.tokens(lit(boiler)), 3)
@@ -74,7 +74,7 @@ class SkewStressSpec extends SparkSuite {
     assert(nCands < 1500L, s"prefix candidates exploded: $nCands")
     // and losslessness is not at stake: the corpus has no qualifying pairs,
     // and the full exact join agrees
-    assert(LlmOps.prefixJoinPairs(corpus).count() == 0L)
+    assert(NearDup.prefixJoinPairs(corpus).count() == 0L)
     grouped.unpersist(); sh.unpersist()
   }
 
@@ -250,7 +250,7 @@ class SkewStressSpec extends SparkSuite {
   //
   // Same discipline as the perceptual curves above, now for the minhash-LSH
   // pipeline behind llm_minhash_lsh / the lsh_eval family: drive
-  // LlmOps.minhashPairs with synthetic 3-member near-dup clusters at N and
+  // NearDup.minhashPairs with synthetic 3-member near-dup clusters at N and
   // 10N and check the distributed result against an EXACT driver replay of
   // the full pipeline (shingle→hash60→16-perm signature→4-band md5 keys→
   // bucket pairs→quantized-Jaccard verify) built from the SAME constants.
@@ -308,7 +308,7 @@ class SkewStressSpec extends SparkSuite {
 
   private def lshRun(docs: Seq[(Long, String)]): (Set[(Long, Long, Long)], Long) = {
     val t0 = System.nanoTime()
-    val out = LlmOps.minhashPairs(docs.toDF("doc_id", "text"))
+    val out = NearDup.minhashPairs(docs.toDF("doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1),
         math.round(r.getDouble(2) * 1000))).toSet
     (out, (System.nanoTime() - t0) / 1000000L)
@@ -342,7 +342,7 @@ class SkewStressSpec extends SparkSuite {
     // exactness of the distributed wide form vs the driver replay
     val (ref, _) = bandedRef(fps, 4, 15, Long.MaxValue, 3L)
     assert(ref.size >= n, s"planted pairs missing from the replay: ${ref.size}")
-    val out = LlmOps.simhashBandPairs(fps.toSeq.toDF("doc_id", "sh"), bandBits = 15)
+    val out = NearDup.simhashBandPairs(fps.toSeq.toDF("doc_id", "sh"), bandBits = 15)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
     assert(out == ref, s"wide-band mismatch: ${out.size} vs ref ${ref.size}")
     info(s"simhash bands at N=$n: 8-bit vol=$narrowVol, 15-bit vol=$wideVol " +
@@ -451,7 +451,7 @@ class SkewStressSpec extends SparkSuite {
     // stage 2 (banding over the SURVIVORS only): candidate volume is linear
     // in survivors; un-pre-deduped the clique ALONE would put 4·C(3000,2)
     // ≈ 18M pairs into its four band buckets
-    val vol = LlmOps.bandFrame(exact.select("doc_id", "text"))
+    val vol = NearDup.bandFrame(exact.select("doc_id", "text"))
       .groupBy("band", "key").agg(count(lit(1)).as("df"))
       .agg(sum(expr("df * (df - 1) div 2"))).first().getLong(0)
     assert(vol <= 4L * survivors,
@@ -866,7 +866,7 @@ class SkewStressSpec extends SparkSuite {
       pairs.flatMap(p => Seq(p._1, p._2)).map(nd => nd -> find(nd)).toMap
     }
     def run(n: Int): (Map[Long, Long], Long) = {
-      val pairs = LlmOps.simhashBandPairs(fleet(n, 60).toSeq.toDF("doc_id", "sh"),
+      val pairs = NearDup.simhashBandPairs(fleet(n, 60).toSeq.toDF("doc_id", "sh"),
         bandBits = 15).select("i", "j")
       val t0 = System.nanoTime()
       val labels = graft.llm.Corpus.clusterPairs(pairs, driverMaxEdges = 0L)
@@ -962,8 +962,8 @@ class SkewStressSpec extends SparkSuite {
     assert(volB <= volS * 12, s"volume grew super-linearly: $volS -> $volB")
     def run(docs: Seq[(Long, String)]) = {
       val t0 = System.nanoTime()
-      val out = LlmOps.jaccardVerify(
-          LlmOps.cappedShingleIndex(docs.toDF("doc_id", "text")), 0.5)
+      val out = NearDup.jaccardVerify(
+          NearDup.cappedShingleIndex(docs.toDF("doc_id", "text")), 0.5)
         .collect().map(r => (r.getLong(0), r.getLong(1),
           math.round(r.getDouble(2) * 1000))).toSet
       (out, (System.nanoTime() - t0) / 1000000L)

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
+import graft.llm.NearDup
 
 /** The incremental near-dup band index under at-least-once delivery and
   * compaction: whatever the segmentation, replay, or compaction history, the
@@ -23,7 +24,7 @@ class StreamOpsSpec extends SparkSuite {
 
   /** One-shot reference pair set: every band collision once, canonical. */
   private def oneShotPairs: Set[(Long, Long)] = {
-    val b = LlmOps.bandFrame(docs).persist()
+    val b = NearDup.bandFrame(docs).persist()
     val out = b.as("a").join(b.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))
@@ -85,7 +86,7 @@ class StreamOpsSpec extends SparkSuite {
     // a 1-doc trickle batch: 4 band rows → ≤4 of the PbBuckets buckets
     val tiny = Seq((100L, "family 1 shares a long run of tokens alpha bravo " +
       "charlie delta echo foxtrot golf hotel 1 tailX uniqueX")).toDF("doc_id", "text")
-    val pbs = LlmOps.bandFrame(tiny).withColumn("pb", StreamOps.pbCol)
+    val pbs = NearDup.bandFrame(tiny).withColumn("pb", StreamOps.pbCol)
       .select("pb").distinct().collect().map(_.getLong(0)).toSet
     assert(pbs.size <= 4)
     // input_file_name() reports what EXECUTION actually read — file-level
@@ -103,7 +104,7 @@ class StreamOpsSpec extends SparkSuite {
     // and the step itself (which uses the pruned probe) emits exactly the
     // one-shot pair set of the 25-doc corpus
     StreamOps.nearDupBatchStep(spark, tiny, 4L, idx, out)
-    val b = LlmOps.bandFrame(docs.unionByName(tiny)).persist()
+    val b = NearDup.bandFrame(docs.unionByName(tiny)).persist()
     val expect = b.as("a").join(b.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.doc_id") < col("b.doc_id"))

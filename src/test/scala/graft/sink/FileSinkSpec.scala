@@ -80,6 +80,39 @@ class FileSinkSpec extends SparkSuite {
       Seq("1", "x"), Seq("2", "y2"), Seq("99", "y")))
   }
 
+  test("replacePartition sets the overwrite mode per write, not in the session conf") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val dir = tmp() + "/t"
+    data.write.partitionBy("s").parquet(dir)
+    val sessionMode = spark.conf.get(key)
+    val group = "replace-partition-conf"
+    // the session conf a job runs under travels in its properties
+    val modes = new java.util.concurrent.ConcurrentLinkedQueue[String]
+    val listener = new SparkListener {
+      override def onJobStart(j: SparkListenerJobStart): Unit =
+        if (Option(j.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+          modes.add(String.valueOf(j.properties.getProperty(key)))
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setJobGroup(group, "FileSinkSpec")
+      try FileSink.replacePartition(
+        df("id BIGINT, v DOUBLE, s STRING", Seq(Row(7L, 7.5, "x"))), dir, Seq("s"))
+      finally sc.clearJobGroup()
+      val until = System.currentTimeMillis() + 20000
+      while (modes.isEmpty && System.currentTimeMillis() < until) Thread.sleep(20)
+      Thread.sleep(200) // a straggling job start would land here
+    } finally sc.removeSparkListener(listener)
+    assert(!modes.isEmpty, "the write ran no job in the group")
+    assert(!modes.contains("dynamic"), s"write jobs ran with the session's $key: $modes")
+    assert(spark.conf.get(key) == sessionMode)
+    // dynamic overwrite still: s=x replaced, s=y and s=y2 survive
+    assert(canon(spark.read.parquet(dir).select("id", "s")) == Seq(
+      Seq("2", "y"), Seq("2", "y2"), Seq("7", "x")))
+  }
+
   test("mergeCow: matched pks replace, unmatched insert, other partitions keep their rows") {
     val dir = tmp() + "/t"
     data.write.partitionBy("s").parquet(dir)

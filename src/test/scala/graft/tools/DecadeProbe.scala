@@ -1,19 +1,17 @@
-package graft.queries
-// lives under tools/ but in the queries package: the probed kernels
-// (minhashPairs, cappedShingleIndex, jaccardVerify) are private[queries]
+package graft.tools
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.llm.NearDup
 
-/** Two-decade scaling probe (manual, not part of the suite): drives three
-  * representative dedup/prefix kernels at 1x / 10x / 100x synthetic fleets
+/** Two-decade scaling probe (manual, not part of the suite): drives five
+  * representative kernels (three text near-dup, the IVF k-NN join, the
+  * bucketed prefix sum) at 1x / 10x / 100x synthetic fleets
   * and prints wall times. The 10x points replicate the SkewStressSpec
   * curves (same generators); the 100x points extend each curve a further
   * decade — run once from an idle host, results recorded in PERF.md.
   *
-  * Usage: sbt "runMain graft.queries.DecadeProbe" (optional arg: cpus) —
-  * note the package: the file lives under tools/ but the object is in
-  * graft.queries for access to the private[queries] kernels. */
+  * Usage: sbt "Test/runMain graft.tools.DecadeProbe" (optional arg: cpus). */
 object DecadeProbe {
 
   /** N docs in 3-member near-dup clusters (SkewStressSpec.textFleet). */
@@ -52,7 +50,7 @@ object DecadeProbe {
     for (n <- Seq(1200, 12000, 120000)) {
       val d = docs(n)
       time(s"minhash_lsh n=$n") {
-        LlmOps.minhashPairs(d).count()
+        NearDup.minhashPairs(d).count()
       }
     }
 
@@ -60,8 +58,8 @@ object DecadeProbe {
     for (n <- Seq(1200, 12000, 120000)) {
       val d = docs(n)
       time(s"ngram_jaccard n=$n") {
-        LlmOps.jaccardVerify(
-          LlmOps.cappedShingleIndex(d), 0.5).count()
+        NearDup.jaccardVerify(
+          NearDup.cappedShingleIndex(d), 0.5).count()
       }
     }
 
@@ -71,7 +69,7 @@ object DecadeProbe {
     for (n <- Seq(1200, 12000, 120000)) {
       val d = docs(n)
       time(s"prefix_join n=$n") {
-        LlmOps.prefixJoinPairs(d).count()
+        NearDup.prefixJoinPairs(d).count()
       }
     }
 
