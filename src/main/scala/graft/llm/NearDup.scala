@@ -24,6 +24,7 @@ import graft.ops.BandJoin.BandKey
 object NearDup {
 
   val JaccardThreshold = 0.5
+  val ContainThreshold = 0.8
   val DfCap = 100 // shingles in more docs than this are uninformative — and explode pair counts
   val NumHashes = 16
   val NumBands = 4
@@ -81,14 +82,14 @@ object NearDup {
       .filter(col("jac") >= threshold)
       .select("i", "j", "jac")
 
-  /** (i, j, containment): `inter / min(|A|, |B|)` ≥ `threshold` over the
-    * same overlap frame — the ASYMMETRIC variant that catches a short
-    * document quoted inside a long one, which Jaccard's union denominator
-    * dilutes below threshold. */
-  def containment(sh: DataFrame, threshold: Double): DataFrame =
+  /** (i, j, containment): `inter / min(|A|, |B|)` ≥ [[ContainThreshold]]
+    * over the same overlap frame — the ASYMMETRIC variant that catches a
+    * short document quoted inside a long one, which Jaccard's union
+    * denominator dilutes below threshold. */
+  def containment(sh: DataFrame): DataFrame =
     overlaps(sh)
       .withColumn("containment", TextOps.quant(col("inter") / least(col("ni"), col("nj")), 3))
-      .filter(col("containment") >= threshold)
+      .filter(col("containment") >= ContainThreshold)
       .select("i", "j", "containment")
 
   /** (i, j, jac): exact-Jaccard verification of candidate pairs (i, j)
@@ -189,7 +190,11 @@ object NearDup {
   /** (i, j, jac): MinHash-LSH near-dup pairs of a (doc_id, text) frame —
     * band-key candidates, verified by exact Jaccard on the shingle-hash
     * sets. The hash frame is persisted (the signature branch and the verify
-    * branch both read it) and stays cached: the lazy result reads it. */
+    * branch both read it), and [[BandJoin.selfPairs]] persists the band
+    * frame. Both stay cached, because the lazy result reads them, and the
+    * caller gets no handle to either: once the pairs are consumed (e.g. by
+    * [[components]], which materializes its result), only
+    * `spark.catalog.clearCache()` releases them. */
   def minhashPairs(docs: DataFrame): DataFrame = {
     val withHs = hashedShingles(docs).persist()
     val cands = BandJoin.selfPairs(bandFrameFromHashes(withHs), BandKey)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.llm.{Corpus, Multimodal, NearDup, Similarity, TextOps}
-import graft.llm.NearDup.{DfCap, JaccardThreshold, NumBands, NumHashes, RowsPerBand, SimHamMax}
+import graft.llm.NearDup.{ContainThreshold, DfCap, JaccardThreshold, NumBands, NumHashes, RowsPerBand, SimHamMax}
 import graft.ops.{BandJoin, Dedup}
 import graft.ops.BandJoin.BandKey
 
@@ -63,13 +63,11 @@ object LlmOps {
   def ngramJaccard(s: SparkSession, d: String): DataFrame =
     NearDup.jaccardVerify(NearDup.cappedShingleIndex(Tables.documents(s, d)), JaccardThreshold)
 
-  private val ContainThreshold = 0.8
-
   /** Containment near-dup: `inter / min(|A|, |B|)` over the same capped
     * inverted shingle index ([[NearDup.containment]]). Same 100 TB shape as
     * [[ngramJaccard]] (index join, never all-pairs). */
   def containment(s: SparkSession, d: String): DataFrame =
-    NearDup.containment(NearDup.cappedShingleIndex(Tables.documents(s, d)), ContainThreshold)
+    NearDup.containment(NearDup.cappedShingleIndex(Tables.documents(s, d)))
 
   private val containmentOracle = s"""
     WITH sh0 AS (
