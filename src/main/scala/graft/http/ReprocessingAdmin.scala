@@ -1,11 +1,11 @@
 package graft.http
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 
+import graft.http.Http.respond
 import graft.sink.JdbcSink
 import graft.streaming.FailoverReprocessor
 import graft.streaming.FailoverReprocessor.{Db, JobConfig}
@@ -128,38 +128,9 @@ final class ReprocessingAdmin(
 
   // -------------------------------------------------------------- handlers
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
+  private def errJson(msg: String): String = s"""{"error":${js(msg)}}"""
   private def err(ex: HttpExchange, code: Int, msg: String): Unit =
-    respond(ex, code, s"""{"error":${js(msg)}}""")
-
-  /** The reference's CORS middleware (router.go:51-72): OPTIONS preflight
-    * short-circuits 200 with the allow headers. */
-  private def cors(ex: HttpExchange): Boolean = {
-    val origin = Option(ex.getRequestHeaders.getFirst("Origin")).getOrElse("")
-    def allow(): Unit = {
-      val h = ex.getResponseHeaders
-      h.set("Access-Control-Allow-Origin", if (origin.nonEmpty) origin else "*")
-      h.set("Access-Control-Allow-Methods", "GET,POST,HEAD,OPTIONS")
-      h.set("Access-Control-Allow-Headers",
-        "x-enable-debug, x-write-key, authorization, content-type, " +
-          "x-ip-policy, cache-control, x-jitsu-custom")
-      h.set("Access-Control-Allow-Credentials", "true")
-      h.set("Access-Control-Max-Age", "86400")
-    }
-    if (ex.getRequestMethod == "OPTIONS") {
-      allow(); ex.sendResponseHeaders(200, -1L); ex.close(); true
-    } else {
-      if (origin.nonEmpty) allow()
-      false
-    }
-  }
+    respond(ex, code, errJson(msg))
 
   private def authed(ex: HttpExchange): Boolean = authToken match {
     case None => true
@@ -231,37 +202,34 @@ final class ReprocessingAdmin(
 
   def start(portHint: Int = 0): ReprocessingAdmin = {
     Db.init(sink)
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", portHint), 0)
+    server = Http.server(portHint)
     // one context, longest-prefix safe: every subresource parses from the
     // path ("/api/admin/..." cannot collide with the ingest contexts)
-    server.createContext("/api/admin/reprocessing/jobs", (ex: HttpExchange) =>
-      try {
-        if (!cors(ex) && authed(ex)) {
-          val rest = ex.getRequestURI.getPath
-            .stripPrefix("/api/admin/reprocessing/jobs").stripPrefix("/")
-          val segs = rest.split("/").filter(_.nonEmpty)
-          (ex.getRequestMethod, segs.toList) match {
-            case ("POST", Nil) => startJob(ex)
-            case ("GET", Nil) =>
-              val jobs = Db.listJobIds(sink)
-                .flatMap(Db.fullJob(sink, _)).map(jobJson)
-              respond(ex, 200, jobs.mkString("""{"jobs":[""", ",", "]}"))
-            case ("GET", id :: Nil) =>
-              Db.fullJob(sink, id) match {
-                case Some(j) => respond(ex, 200, jobJson(j))
-                case None => err(ex, 404, s"reprocessing job $id not found")
-              }
-            case ("GET", id :: "workers" :: Nil) =>
-              respond(ex, 200, Db.workers(sink, id).map(workerJson)
-                .mkString("""{"workers":[""", ",", "]}"))
-            case ("POST", id :: "cancel" :: Nil) => cancelJob(ex, id)
-            case _ => err(ex, 404, "not found")
-          }
+    Http.route(server, "/api/admin/reprocessing/jobs",
+        e => errJson(Option(e.getMessage).getOrElse(e.toString)), withCors = true) { ex =>
+      if (authed(ex)) {
+        val rest = ex.getRequestURI.getPath
+          .stripPrefix("/api/admin/reprocessing/jobs").stripPrefix("/")
+        val segs = rest.split("/").filter(_.nonEmpty)
+        (ex.getRequestMethod, segs.toList) match {
+          case ("POST", Nil) => startJob(ex)
+          case ("GET", Nil) =>
+            val jobs = Db.listJobIds(sink)
+              .flatMap(Db.fullJob(sink, _)).map(jobJson)
+            respond(ex, 200, jobs.mkString("""{"jobs":[""", ",", "]}"))
+          case ("GET", id :: Nil) =>
+            Db.fullJob(sink, id) match {
+              case Some(j) => respond(ex, 200, jobJson(j))
+              case None => err(ex, 404, s"reprocessing job $id not found")
+            }
+          case ("GET", id :: "workers" :: Nil) =>
+            respond(ex, 200, Db.workers(sink, id).map(workerJson)
+              .mkString("""{"workers":[""", ",", "]}"))
+          case ("POST", id :: "cancel" :: Nil) => cancelJob(ex, id)
+          case _ => err(ex, 404, "not found")
         }
-      } catch { case e: Exception =>
-        try err(ex, 500, Option(e.getMessage).getOrElse(e.toString))
-        catch { case _: Exception => () }
-      })
+      }
+    }
     server.start()
     this
   }

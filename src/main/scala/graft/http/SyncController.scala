@@ -1,6 +1,5 @@
 package graft.http
 
-import java.net.InetSocketAddress
 import java.nio.charset.StandardCharsets.UTF_8
 import java.util.concurrent.atomic.AtomicBoolean
 import java.util.concurrent.{CountDownLatch, LinkedBlockingQueue, TimeUnit}
@@ -9,6 +8,7 @@ import com.fasterxml.jackson.databind.{JsonNode, ObjectMapper}
 import com.sun.net.httpserver.{HttpExchange, HttpServer}
 
 import graft.Engine
+import graft.http.Http.respond
 import graft.sink.JdbcSink
 import graft.sources.{Airbyte, AirbyteRunner, SyncDb}
 
@@ -523,14 +523,6 @@ final class SyncController(
 
   // --------------------------------------------------------------- handlers
 
-  private def respond(ex: HttpExchange, code: Int, body: String): Unit = {
-    val bytes = body.getBytes(UTF_8)
-    ex.getResponseHeaders.set("Content-Type", "application/json")
-    ex.sendResponseHeaders(code, bytes.length.toLong)
-    ex.getResponseBody.write(bytes)
-    ex.close()
-  }
-
   private def q(ex: HttpExchange, name: String): String = {
     val query = Option(ex.getRequestURI.getRawQuery).getOrElse("")
     query.split("&").iterator.map(_.split("=", 2)).collectFirst {
@@ -622,7 +614,7 @@ final class SyncController(
       case ("GET", "/health") =>
         if (inited.get()) respond(ex, 200, """{"status":"pass"}""")
         else respond(ex, 503, """{"status":"fail"}""")
-      case _ => respond(ex, 404, """{"error":"not found"}""")
+      case _ => respond(ex, 404, Http.NotFound)
     }
   }
 
@@ -630,16 +622,10 @@ final class SyncController(
 
   def start(portHint: Int = 0): SyncController = {
     SyncDb.init(sink)
-    server = HttpServer.create(new InetSocketAddress("127.0.0.1", portHint), 0)
-    Seq("/spec", "/check", "/discover", "/read", "/cancel", "/health").foreach { p =>
-      server.createContext(p, (ex: HttpExchange) =>
-        try handle(ex)
-        catch { case e: Exception =>
-          try respond(ex, 500,
-            s"""{"ok":false,"error":${js(Option(e.getMessage).getOrElse(e.toString))}}""")
-          catch { case _: Exception => () }
-        })
-    }
+    server = Http.server(portHint)
+    Seq("/spec", "/check", "/discover", "/read", "/cancel", "/health").foreach(
+      Http.route(server, _, e =>
+        s"""{"ok":false,"error":${js(Option(e.getMessage).getOrElse(e.toString))}}""")(handle))
     server.start()
     listenerThread = new Thread(() => listenTaskStatus(), "sync-task-status")
     listenerThread.setDaemon(true)

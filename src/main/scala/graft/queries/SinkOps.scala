@@ -852,20 +852,16 @@ object SinkOps {
     val marker = markerRow.getLong(0)
     val received = new java.util.concurrent.ConcurrentLinkedQueue[String]()
     val faulted = new java.util.concurrent.atomic.AtomicBoolean(false)
-    val receiver = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val receiver = graft.http.Http.server(0)
     receiver.createContext("/hook", (ex: com.sun.net.httpserver.HttpExchange) => {
       val body = new String(ex.getRequestBody.readAllBytes(), UTF_8)
       received.add(body)
       // `"event_id":M,`|`"event_id":M}` — delimited so M never prefix-matches
       val isMarker = body.contains(s""""event_id":$marker,""") ||
         body.contains(s""""event_id":$marker}""")
-      if (isMarker && faulted.compareAndSet(false, true)) {
-        ex.sendResponseHeaders(503, -1L); ex.close()
-      } else {
-        ex.sendResponseHeaders(200, 2L)
-        ex.getResponseBody.write("ok".getBytes(UTF_8)); ex.close()
-      }
+      if (isMarker && faulted.compareAndSet(false, true))
+        graft.http.Http.respond(ex, 503, "")
+      else graft.http.Http.respond(ex, 200, "ok", "text/plain")
     })
     receiver.start()
     try graft.sink.Webhook(

@@ -38,12 +38,11 @@ object StreamOps {
 
   /** ONE driver-as-client HTTP call, shared by every live-wire gate
     * (the b*-ingest loops here and p14's admin read-backs): one fresh
-    * connection per request, closed by the server — keep-alive reuse
-    * against the JDK HttpServer stalls ~44 ms/request on every DRAINED
-    * 2xx (delayed-ACK interaction, measured in isolation and as a
-    * 4 s → 342 s b16 bench blowup); Connection: close restores the
-    * 1.4 ms/request path while still draining, and the failure path
-    * cannot leak a half-read connection either. Returns (code, body). */
+    * connection per request, closed by the server (`Connection: close`),
+    * so a failed request cannot leave a half-read connection open for the
+    * next call. The ~44 ms keep-alive stall this once also dodged was the
+    * server's Nagle delay, fixed where graft builds its servers
+    * ([[graft.http.Http.server]]). Returns (code, body). */
   private[queries] def httpCall(method: String, url: String,
                                 body: Option[String] = None,
                                 headers: Map[String, String] = Map.empty)

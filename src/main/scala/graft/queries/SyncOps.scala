@@ -184,12 +184,11 @@ object SyncOps {
 
     // ---- a live console stub recording the thenRun callback
     val consoleCalls = new java.util.concurrent.CopyOnWriteArrayList[String]()
-    val console = com.sun.net.httpserver.HttpServer.create(
-      new java.net.InetSocketAddress("127.0.0.1", 0), 0)
+    val console = graft.http.Http.server(0)
     console.createContext("/", ex => {
       consoleCalls.add(ex.getRequestURI.toString + "|" +
         ex.getRequestHeaders.getFirst("Authorization"))
-      ex.sendResponseHeaders(200, 0L); ex.close()
+      graft.http.Http.respond(ex, 200, "")
     })
     console.start()
 

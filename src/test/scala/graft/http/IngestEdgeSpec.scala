@@ -377,6 +377,15 @@ class IngestEdgeSpec extends SparkSuite {
       assert(resp2.statusCode() == 200)
       assert(resp2.headers().firstValue("Access-Control-Allow-Origin")
         .orElse("") == "https://shop.io")
+      // without an Origin the real response carries no allow headers
+      val p3 = java.net.http.HttpRequest
+        .newBuilder(new URI(s"http://127.0.0.1:${srv.port}/api/s/s2s/track"))
+        .POST(java.net.http.HttpRequest.BodyPublishers.ofString("""{"a":1}"""))
+        .header("X-Write-Key", "k1:sec1")
+      val resp3 = java.net.http.HttpClient.newHttpClient().send(
+        p3.build(), java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(resp3.statusCode() == 200)
+      assert(resp3.headers().firstValue("Access-Control-Allow-Origin").isEmpty)
     } finally srv.stop()
   }
 
@@ -648,6 +657,8 @@ class IngestEdgeSpec extends SparkSuite {
       assert(cr == 503 && br == """{"status":"fail","output":"spool not writable"}""")
       out = None
       assert(get("/ready") == ((200, """{"status":"pass"}""")))
+      // the probe contexts are exact: a longer path is not a health check
+      assert(get("/healthx")._1 == 404 && get("/readyz")._1 == 404)
     } finally srv.stop()
   }
 
@@ -674,6 +685,8 @@ class IngestEdgeSpec extends SparkSuite {
       assert(cn == 404)
       val (cn2, _) = post(s"http://127.0.0.1:${srv.port}/v1/bx", env)
       assert(cn2 == 404)
+      val (cn3, _) = post(s"http://127.0.0.1:${srv.port}/bx", env)
+      assert(cn3 == 404)
     } finally srv.stop()
   }
 

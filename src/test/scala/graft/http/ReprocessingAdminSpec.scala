@@ -77,6 +77,13 @@ class ReprocessingAdminSpec extends SparkSuite {
         .orElse("") == "http://console.example")
       assert(resp.headers().firstValue("Access-Control-Allow-Methods")
         .orElse("").contains("OPTIONS"))
+      // a non-preflight request without an Origin gets no allow headers
+      val plain = java.net.http.HttpClient.newHttpClient().send(
+        java.net.http.HttpRequest.newBuilder(URI.create(base))
+          .header("Authorization", "Bearer sesame").build(),
+        java.net.http.HttpResponse.BodyHandlers.ofString())
+      assert(plain.statusCode() == 200)
+      assert(plain.headers().firstValue("Access-Control-Allow-Origin").isEmpty)
     } finally admin.stop()
   }
 

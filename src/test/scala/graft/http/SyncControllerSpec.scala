@@ -203,6 +203,25 @@ class SyncControllerSpec extends SparkSuite {
     } finally ctl.stop()
   }
 
+  test("a handler failure answers 500 with the {ok:false,error} body; unknown paths 404") {
+    val sink = freshSink("err500")
+    val ctl = ctlWith(sink, Map.empty)
+    try {
+      val api = s"http://127.0.0.1:${ctl.port}"
+      assert(http("GET", s"$api/specx") == ((404, """{"error":"not found"}""")))
+      // /cancel writes source_task: with the table gone the handler throws
+      sink.withConnection { c =>
+        val st = c.createStatement()
+        try st.execute(s"""DROP TABLE "${SyncDb.TaskTable}"""") finally st.close()
+      }
+      val (code, body) = http("GET", s"$api/cancel?package=p&syncId=s&taskId=t")
+      assert(code == 500, body)
+      val n = om.readTree(body)
+      assert(n.size == 2 && !n.get("ok").asBoolean, body)
+      assert(n.get("error").asText.contains(SyncDb.TaskTable), body)
+    } finally ctl.stop()
+  }
+
   test("check task: SUCCEEDED normalizes; connector failure lands FAILED row") {
     val sink = freshSink("check")
     val ctl = ctlWith(sink, Map(
