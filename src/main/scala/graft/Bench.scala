@@ -3,10 +3,10 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
+    val cpus = SparkEntry.parseCpus(sys.env, 4)
     val spark = SparkSession.builder()
       .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.shuffle.partitions", cpus.toString)
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
       .getOrCreate()
@@ -261,7 +261,7 @@ object Bench {
       baseline(k).exists(p => !(soloTimes(k) > 1.5 * p && soloTimes(k) > 0.5)) }
     val regJson = regressions.mkString("{", ",", "}")
     val prevJson = prevTotal.map(t => s""","prev_total":${ms(t)}""").getOrElse("")
-    val line = s"""{"metric":"total","value":${ms(totalArb)},"unit":"sec"$prevJson,"queries":$qsArb,"errors":$errJson,"regressions":$regJson,"arbitration":{"suspects":${suspects.size},"cleared":$cleared},"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${ms(totalArb)},"unit":"sec"$prevJson,"queries":$qsArb,"errors":$errJson,"regressions":$regJson,"arbitration":{"suspects":${suspects.size},"cleared":$cleared},"sf":"$sfDir","cpus":$cpus}"""
     // durable copy at the repo root: survives any stdout truncation
     try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), line + "\n")
     catch { case _: Throwable => () }
@@ -275,7 +275,7 @@ object Bench {
     println(line)
     val tailBudget = 1700 // 2000-char window minus sbt trailer + slack
     val slowest = arbitrated.sortBy(-_._2)
-    val base = s""","errors":$errJson,"n_queries":${results.size},"n_regressions":${regressions.size},"full":"BENCH.json","sf":"$sfDir"}"""
+    val base = s""","errors":$errJson,"n_queries":${results.size},"n_regressions":${regressions.size},"full":"BENCH.json","sf":"$sfDir","cpus":$cpus}"""
     val head = s"""{"metric":"total","value":${ms(totalArb)},"unit":"sec","queries":{"""
     val picked = scala.collection.mutable.ListBuffer.empty[String]
     var used = head.length + base.length + 1 // +1 closes the queries object

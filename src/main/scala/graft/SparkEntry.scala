@@ -13,4 +13,23 @@ object SparkEntry {
     * the same parquet tables. Omit for non-SQL-expressible ops. */
   def oracleSql: Map[String, String] =
     Registry.all.collect { case (k, q) if q.oracle.isDefined => k -> q.oracle.get }
+
+  val CpusVar = "SPARK_GRAFT_CPUS"
+
+  /** The local master's core count from `SPARK_GRAFT_CPUS` in `env`, which
+    * also sets the shuffle width: unset is `default`; anything but a
+    * positive integer is an `IllegalArgumentException` naming the
+    * variable. */
+  def parseCpus(env: Map[String, String], default: Int): Int =
+    positiveIntVar(env, CpusVar, default)
+
+  /** The positive integer `env(name)`, or `default` when it is unset;
+    * any other value is an `IllegalArgumentException` naming `name`. */
+  def positiveIntVar(env: Map[String, String], name: String, default: Int): Int =
+    env.get(name) match {
+      case None => default
+      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
+        throw new IllegalArgumentException(
+          s"$name must be a positive integer, got '$v'"))
+    }
 }

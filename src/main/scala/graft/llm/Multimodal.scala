@@ -2,6 +2,8 @@ package graft.llm
 
 import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
+import graft.ops.BandJoin
 
 /** Multimodal column plumbing: image/audio/video payloads travel as opaque
   * `binary` columns with typed metadata; decode / feature-extraction runs as
@@ -992,6 +994,83 @@ object Multimodal {
       }
       AudioFpRow(r.doc_id, fp)
     }
+  }
+
+  // ---- perceptual near-dup ----------------------------------------------
+
+  // image and video frames: the 48-bit blockhash in 4 bands of 12-bit keys
+  val MmBits = 48
+  val MmBands = 4
+  val MmBandBits = MmBits / MmBands // 12-bit band keys
+  val MmHamming = 6
+  val MmBandCap = 100
+  // audio: the 49-bit fingerprint in 7 bands of 7-bit keys
+  val FpBands = 7
+  val FpBandBits = 7
+  val FpHamT = 10L
+  val FpBandCap = 100L // a 7-bit band key shared by > this many docs carries no signal
+  // video: frames that must match at the same index
+  val VdMinFrames = 3
+
+  /** (i, j, [scope…], hamming): the near-dup pairs of a
+    * `(doc_id, [scope…], hash)` frame, the pair step of every perceptual
+    * family. The `hash` column is cut into `bands` keys of `bits` bits, a
+    * (scope…, band, key) held by more than `cap` rows is dropped, and the
+    * distinct candidates `i < j` of the band self-join join their hashes
+    * back — `i` on its id, `j` on its id and `scope` — to keep
+    * `bit_count(ha xor hb) ≤ maxHam`. So a scoped pair (video:
+    * `frame_idx`) is proposed inside one scope value and compared at every
+    * scope value both sides hold, never across two. Nothing is persisted:
+    * the caller materializes `hashes`, which the band build and both
+    * join-back sides read. */
+  def hammingPairs(hashes: DataFrame, hash: String, scope: Seq[String],
+                   bands: Int, bits: Int, cap: Long, maxHam: Long): DataFrame = {
+    val keys = scope ++ BandJoin.BandKey
+    val bandRows = BandJoin.bandRows(hashes, "doc_id" +: scope,
+      BandJoin.bitBands(col(hash), bands, bits))
+    def side(id: String, h: String) = hashes.select(
+      (col("doc_id").as(id) +: scope.map(col)) :+ col(hash).as(h): _*)
+    BandJoin.selfPairs(BandJoin.capHot(bandRows, keys, cap), keys)
+      .join(side("i", "ha"), Seq("i"))
+      .join(side("j", "hb"), "j" +: scope)
+      .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast(LongType))
+      .filter(col("hamming") <= maxHam)
+      .select((Seq("i", "j") ++ scope :+ "hamming").map(col): _*)
+  }
+
+  /** Image near-dup (i, j, hamming) of a (doc_id, blockhash) frame. The
+    * hashes are persisted and stay cached: the lazy result reads them. */
+  def imageDedup(blockHashes: DataFrame): DataFrame =
+    hammingPairs(blockHashes.select("doc_id", "blockhash").persist(), "blockhash",
+      Nil, MmBands, MmBandBits, MmBandCap, MmHamming)
+
+  /** Audio near-dup of a (doc_id, fp) frame: every fingerprint as a
+    * `('fp', doc_id, -1, fp)` row plus every pair as `('pair', i, j,
+    * hamming)`, columns (kind, a, b, v). The fingerprints are checkpointed
+    * EAGERLY: AQE submits the four consumers' exchange subtrees at once,
+    * so a lazy cache was materialized by 3 racing jobs that each held every
+    * task slot while the decode computed (profiled: stage-sum 4.9 s vs
+    * 2.7 s wall). |docs| rows of two longs: the checkpoint is cheap and the
+    * codec pass runs once. */
+  def audioDedup(fingerprints: DataFrame): DataFrame = {
+    val fps = fingerprints.select("doc_id", "fp").localCheckpoint(true)
+    val pairs = hammingPairs(fps, "fp", Nil, FpBands, FpBandBits, FpBandCap, FpHamT)
+    fps.select(lit("fp").as("kind"), col("doc_id").as("a"),
+        lit(-1L).as("b"), col("fp").as("v"))
+      .unionByName(pairs.select(lit("pair").as("kind"), col("i").as("a"),
+        col("j").as("b"), col("hamming").as("v")))
+  }
+
+  /** Video near-dup (i, j, n_matched) of a (doc_id, frame_idx, fhash)
+    * frame: pairs whose frames match at ≥ [[VdMinFrames]] frame indexes.
+    * Checkpointed eagerly like [[audioDedup]], so the AVI demux runs once. */
+  def videoDedup(frameHashes: DataFrame): DataFrame = {
+    val fh = frameHashes.select("doc_id", "frame_idx", "fhash").localCheckpoint(true)
+    hammingPairs(fh, "fhash", Seq("frame_idx"), MmBands, MmBandBits, MmBandCap, MmHamming)
+      .groupBy(col("i"), col("j"))
+      .agg(count(lit(1)).as("n_matched"))
+      .filter(col("n_matched") >= VdMinFrames)
+      .select(col("i"), col("j"), col("n_matched"))
   }
 
   /** One scored video frame: `mad` = sum of absolute pixel deltas against

@@ -207,7 +207,13 @@ object NearDup {
   /** (i, j, hamming) over a (doc_id, sh) fingerprint frame: 4 bands of
     * `bandBits` bits, equi-join on (band, key), exact Hamming ≤
     * [[SimHamMax]] (pigeonhole: 4 bands cover Hamming ≤ 3 whatever the
-    * band width). */
+    * band width).
+    *
+    * This is not [[Multimodal.hammingPairs]], the perceptual families'
+    * pair step: the fingerprint rides in the band rows and the distance is
+    * a [[BandJoin.selfPairs]] `carry` column, so no hash is joined back,
+    * and no band key is capped. Routing it through `hammingPairs` would
+    * add a cap and two joins that the simhash oracles do not have. */
   def simhashBandPairs(sh: DataFrame, bandBits: Int): DataFrame = {
     val bands = BandJoin.bandRows(sh, Seq("doc_id", "sh"),
       BandJoin.bitBands(col("sh"), 4, bandBits))

@@ -67,14 +67,23 @@ object Similarity {
   def nearDupPairs(corpus: DataFrame, threshold: Double, dim: Int,
                    id: String = "vec_id", emb: String = "embedding"): DataFrame = {
     val ps = planes(planesFor(corpus.count()), dim)
-    val b = corpus.select(col(id), col(emb).as("embedding"),
-      lshBucket(col(emb), ps).as("bucket"))
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col(s"a.$id") < col(s"b.$id"))
-      .select(col(s"a.$id").as("i"), col(s"b.$id").as("j"),
-        TextOps.quant(cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
+    bucketPairs(corpus.select(col(id).as("vec_id"), col(emb).as("embedding"),
+        lshBucket(col(emb), ps).as("bucket")))
       .filter(col("cos") >= threshold)
   }
+
+  /** (i, j, cos) for every pair of a (vec_id, embedding, bucket) frame that
+    * shares a bucket: `i < j`, so no vector pairs with itself and each pair
+    * comes out once, and `cos` is quantized to 4 places. The single-bucket
+    * LSH join every threshold and hard-negative pass starts from — one
+    * equi-join on the bucket key, never an all-pairs product. Nothing is
+    * persisted: the two join sides do not share an exchange, so a caller
+    * whose bucket frame is costly to compute persists it. */
+  def bucketPairs(buckets: DataFrame): DataFrame =
+    buckets.as("a").join(buckets.as("b"),
+        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
+      .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"),
+        TextOps.quant(cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
 
   /** Banded near-dup pairs over a FIXED plane family: `bands` keys of
     * `perBand` bits each, a pair is a candidate when ANY band agrees

@@ -6,6 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.llm.{Corpus, Multimodal, NearDup, Similarity, TextOps}
+import graft.llm.Multimodal.{FpBandBits, FpBandCap, FpBands, FpHamT, MmBandBits, MmBandCap, MmBands, MmBits, MmHamming, VdMinFrames}
 import graft.llm.NearDup.{ContainThreshold, DfCap, JaccardThreshold, NumBands, NumHashes, RowsPerBand, SimHamMax}
 import graft.ops.{BandJoin, Dedup}
 import graft.ops.BandJoin.BandKey
@@ -1598,21 +1599,21 @@ object LlmOps {
     val b = corpus.select(col("vec_id"), col("embedding"),
       Similarity.lshBucket(col("embedding"), NearDupPlanes).as("bucket"))
       .persist()
-    b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"),
-        TextOps.quant(Similarity.cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
-      .filter(col("cos") >= NearDupCos)
+    Similarity.bucketPairs(b).filter(col("cos") >= NearDupCos)
   }
 
-  private val embedNearDupOracle = s"""
-    WITH base AS (
+  /** The oracle twin of [[nearDupCorpus]]: the `base` vectors and their
+    * `seeded` perturbed clones, shared by every seeded-corpus oracle. */
+  private val nearDupCorpusCtes = s"""base AS (
       SELECT vec_id, list_transform(range(1, 65), k -> embedding[k]::DOUBLE) AS embedding
       FROM embeddings),
     seeded AS (
       SELECT vec_id + $SeedIdOffset AS vec_id,
         list_transform(range(1, 65), k -> embedding[k]::DOUBLE * (1.0 + 0.0005 * ((k - 1) % 5 - 2))) AS embedding
-      FROM embeddings WHERE vec_id < $NearDupSeeds),
+      FROM embeddings WHERE vec_id < $NearDupSeeds)"""
+
+  private val embedNearDupOracle = s"""
+    WITH $nearDupCorpusCtes,
     corpus AS (SELECT * FROM base UNION ALL SELECT * FROM seeded),
     b AS (
       SELECT vec_id, embedding,
@@ -1657,13 +1658,7 @@ object LlmOps {
       BandedPerBand, threshold)
 
   private val embedNearDupBandedOracle = s"""
-    WITH base AS (
-      SELECT vec_id, list_transform(range(1, 65), k -> embedding[k]::DOUBLE) AS embedding
-      FROM embeddings),
-    seeded AS (
-      SELECT vec_id + $SeedIdOffset AS vec_id,
-        list_transform(range(1, 65), k -> embedding[k]::DOUBLE * (1.0 + 0.0005 * ((k - 1) % 5 - 2))) AS embedding
-      FROM embeddings WHERE vec_id < $NearDupSeeds),
+    WITH $nearDupCorpusCtes,
     corpus AS MATERIALIZED (SELECT * FROM base UNION ALL SELECT * FROM seeded),
     sig AS MATERIALIZED (
       SELECT vec_id,
@@ -1700,11 +1695,7 @@ object LlmOps {
       .persist()
     // ALL bucket-cohabiting pairs with cosine — persisted because the
     // anchor (≥ threshold) and negative (< threshold) slices both read it
-    val cand = b.as("a").join(b.as("b"),
-        col("a.bucket") === col("b.bucket") && col("a.vec_id") < col("b.vec_id"))
-      .select(col("a.vec_id").as("i"), col("b.vec_id").as("j"),
-        TextOps.quant(Similarity.cosine(col("a.embedding"), col("b.embedding")), 4).as("cos"))
-      .persist()
+    val cand = Similarity.bucketPairs(b).persist()
     val anchors = cand
       .filter(col("cos") >= NearDupCos && col("i") < SeedIdOffset)
       .groupBy(col("i").as("anchor_id")).agg(min(col("j")).as("pos_id"))
@@ -1720,13 +1711,7 @@ object LlmOps {
   }
 
   private val hardNegativesOracle = s"""
-    WITH base AS (
-      SELECT vec_id, list_transform(range(1, 65), k -> embedding[k]::DOUBLE) AS embedding
-      FROM embeddings),
-    seeded AS (
-      SELECT vec_id + $SeedIdOffset AS vec_id,
-        list_transform(range(1, 65), k -> embedding[k]::DOUBLE * (1.0 + 0.0005 * ((k - 1) % 5 - 2))) AS embedding
-      FROM embeddings WHERE vec_id < $NearDupSeeds),
+    WITH $nearDupCorpusCtes,
     corpus AS (SELECT * FROM base UNION ALL SELECT * FROM seeded),
     b AS (
       SELECT vec_id, embedding,
@@ -2511,50 +2496,27 @@ object LlmOps {
 
   // ---- multimodal near-dup ---------------------------------------------
 
-  private val MmBits = 48
-  private val MmBands = 4
-  private val MmBandBits = MmBits / MmBands // 12-bit band keys
-  private val MmHamming = 6
-  private val MmBandCap = 100
-
-  /** Multimodal near-dup: the SimHash band shape over the 48-bit perceptual
-    * blockhash — band collision proposes, full-hash Hamming distance (≤ 6)
-    * verifies. Same 100 TB discipline as the text family: pair discovery is
-    * a capped band-key equi-join (over-hot keys dropped via a broadcast
-    * anti-join — a degenerate key can't go quadratic), the Hamming verify
-    * touches only candidate pairs and constant state (two longs). With a
-    * real image codec the fingerprint becomes a DCT phash; every plan shape
-    * downstream of the hash is unchanged. */
+  /** Multimodal near-dup: [[Multimodal.imageDedup]] over the 48-bit
+    * perceptual blockhash — band collision proposes, full-hash Hamming
+    * distance (≤ 6) verifies, over-hot band keys drop. With a real image
+    * codec the fingerprint becomes a DCT phash; every plan shape downstream
+    * of the hash is unchanged. */
   def mmDedup(s: SparkSession, d: String): DataFrame =
-    mmDedupFromHashes(Multimodal.blockHash(
+    Multimodal.imageDedup(Multimodal.blockHash(
         Multimodal.fromText(
           Tables.documents(s, d).filter(length(col("text")) > 0),
           "doc_id", "text"),
         blocks = MmBits).toDF())
 
-  /** The band+Hamming pipeline over an already-computed (doc_id, blockhash)
-    * frame — shared by the stub-decoder and real-ImageIO dedup queries. */
-  private def mmDedupFromHashes(bh0: DataFrame): DataFrame = {
-    val bh = bh0.select("doc_id", "blockhash").persist()
-    val bands = BandJoin.bandRows(bh, Seq("doc_id"),
-      BandJoin.bitBands(col("blockhash"), MmBands, MmBandBits))
-    BandJoin.selfPairs(BandJoin.capHot(bands, BandKey, MmBandCap), BandKey)
-      .join(bh.select(col("doc_id").as("i"), col("blockhash").as("ha")), "i")
-      .join(bh.select(col("doc_id").as("j"), col("blockhash").as("hb")), "j")
-      .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast(LongType))
-      .filter(col("hamming") <= MmHamming)
-      .select("i", "j", "hamming")
-  }
-
-  private val mmDedupOracle = {
+  /** The image dedup oracle after its `b`/`by` raster CTEs: blockhash →
+    * 12-bit bands → df cap → candidates → Hamming. One text for the stub
+    * and the real-decode query, like [[ccReachSql]]. */
+  private def mmDedupSql(rasterCtes: String): String = {
     val bandArms = (0 until MmBands).map(b =>
       s"SELECT doc_id, $b AS band, (h // ${1L << (b * MmBandBits)}) % ${1L << MmBandBits} AS key FROM bh")
       .mkString("\n      UNION ALL ")
     s"""
-    WITH b AS (SELECT doc_id, text, length(text) AS n FROM documents
-               WHERE length(text) > 0),
-    by AS (SELECT doc_id, n, ((i - 1) * $MmBits) // n AS k, ord(substr(text, i, 1)) AS v
-           FROM b, LATERAL UNNEST(generate_series(1, n)) AS u(i)),
+    WITH $rasterCtes,
     blk AS (SELECT doc_id, n, k, CAST(sum(v) AS BIGINT) AS s_k, count(*) AS c_k
             FROM by GROUP BY 1, 2, 3),
     tot AS (SELECT doc_id, CAST(sum(s_k) AS BIGINT) AS s FROM blk GROUP BY 1),
@@ -2575,6 +2537,12 @@ object LlmOps {
     FROM cands JOIN bh ha ON ha.doc_id = i JOIN bh hb ON hb.doc_id = j
     WHERE bit_count(xor(ha.h, hb.h)) <= $MmHamming"""
   }
+
+  private val mmDedupOracle = mmDedupSql(
+    s"""b AS (SELECT doc_id, text, length(text) AS n FROM documents
+               WHERE length(text) > 0),
+    by AS (SELECT doc_id, n, ((i - 1) * $MmBits) // n AS k, ord(substr(text, i, 1)) AS v
+           FROM b, LATERAL UNNEST(generate_series(1, n)) AS u(i))""")
 
   // ---- multimodal REAL decode (JDK ImageIO) -----------------------------
 
@@ -2683,35 +2651,10 @@ object LlmOps {
   /** REAL decode near-dup: the [[mmDedup]] band+Hamming pipeline over
     * 48-bit blockhashes of ImageIO-decoded rasters. */
   def mmDedupReal(s: SparkSession, d: String): DataFrame =
-    mmDedupFromHashes(Multimodal.blockHash(mmRealMedia(s, d),
+    Multimodal.imageDedup(Multimodal.blockHash(mmRealMedia(s, d),
       blocks = MmBits, decoder = Multimodal.ImageIoDecoder).toDF())
 
-  private lazy val mmDedupRealOracle = {
-    val bandArms = (0 until MmBands).map(b =>
-      s"SELECT doc_id, $b AS band, (h // ${1L << (b * MmBandBits)}) % ${1L << MmBandBits} AS key FROM bh")
-      .mkString("\n      UNION ALL ")
-    s"""
-    WITH ${mmRealByCte(MmBits)},
-    blk AS (SELECT doc_id, n, k, CAST(sum(v) AS BIGINT) AS s_k, count(*) AS c_k
-            FROM by GROUP BY 1, 2, 3),
-    tot AS (SELECT doc_id, CAST(sum(s_k) AS BIGINT) AS s FROM blk GROUP BY 1),
-    bh AS (SELECT blk.doc_id,
-        CAST(SUM(CASE WHEN s_k * n > s * c_k THEN 1::BIGINT << k ELSE 0 END) AS BIGINT) AS h
-      FROM blk JOIN tot USING (doc_id) GROUP BY 1),
-    bands0 AS (
-      $bandArms),
-    bands AS (SELECT doc_id, band, key FROM (
-        SELECT doc_id, band, key, count(*) OVER (PARTITION BY band, key) AS df
-        FROM bands0) t
-      WHERE df <= $MmBandCap),
-    cands AS (
-      SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
-      FROM bands a JOIN bands b
-        ON a.band = b.band AND a.key = b.key AND a.doc_id < b.doc_id)
-    SELECT i, j, CAST(bit_count(xor(ha.h, hb.h)) AS BIGINT) AS hamming
-    FROM cands JOIN bh ha ON ha.doc_id = i JOIN bh hb ON hb.doc_id = j
-    WHERE bit_count(xor(ha.h, hb.h)) <= $MmHamming"""
-  }
+  private lazy val mmDedupRealOracle = mmDedupSql(mmRealByCte(MmBits))
 
   /** REAL image resize: PNG decode → nearest-neighbor 16×16 → 8×8 on the
     * grayscale raster; the oracle rebuilds the source raster from text and
@@ -2971,11 +2914,6 @@ object LlmOps {
 
   // ---- audio spectral features + fingerprint dedup ----------------------
 
-  private val FpBands = 7
-  private val FpBandBits = 7
-  private val FpHamT = 10L
-  private val FpBandCap = 100L // a 7-bit band key shared by > this many docs carries no signal
-
   private def audioMedia(s: SparkSession, d: String) =
     textBytesMedia(s, d, "audio/wav")(bytes =>
       Multimodal.WavCodec.encode(cycledRaster(bytes, MmAudioSamples)))
@@ -3071,45 +3009,14 @@ object LlmOps {
 
   /** Audio near-duplicate detection on a Chromaprint-style fingerprint:
     * 49 sign-of-second-difference bits over the spectral energies
-    * ([[Multimodal.audioFingerprint]]), then the SimHash-style scale path —
-    * split into ${7} 7-bit bands, candidates = docs sharing any exact band
-    * (equality bucket join, never an all-pairs product) with over-hot band
-    * keys dropped via a broadcast anti-join (df > $FpBandCap — a 7-bit key
-    * that a large fraction of the corpus shares is boilerplate, not
-    * signal, exactly the image/video band-cap discipline), survivors by
-    * Hamming ≤ ${10}. Output = every fingerprint (kind 'fp') plus the
-    * surviving pairs (kind 'pair'). The oracle replays PCM → integer DFT →
-    * bit packing → banding → the same df cap → Hamming from the text
-    * alone. */
+    * ([[Multimodal.audioFingerprint]]), paired by [[Multimodal.audioDedup]]
+    * (7 bands of 7 bits, df cap 100, Hamming ≤ 10). Output = every
+    * fingerprint (kind 'fp') plus the surviving pairs (kind 'pair'). The
+    * oracle replays PCM → integer DFT → bit packing → banding → the same
+    * df cap → Hamming from the text alone. */
   def mmAudioFpDedup(s: SparkSession, d: String): DataFrame =
-    audioFpDedupFromFps(
+    Multimodal.audioDedup(
       Multimodal.audioFingerprint(audioMedia(s, d)).toDF())
-
-  /** The band+verify pipeline over already-computed fingerprints
-    * (doc_id, fp) — split out so the skew-stress spec can drive it with a
-    * planted hot clique, mirroring [[videoDedupFromFrameHashes]]. */
-  private[queries] def audioFpDedupFromFps(fps0: DataFrame): DataFrame = {
-    // r21: EAGER checkpoint, not a lazy persist — the final action fans out
-    // to four consumers and AQE submits their exchange subtrees
-    // concurrently, so a lazy cache is materialized by 3 racing jobs that
-    // each hold 32 task slots while the decode computes (profiled: three
-    // concurrent 1.34 s jobs, stage-sum 4.9 s vs 2.7 s wall). The frame is
-    // |docs| rows of (long, long) — checkpoint cost is trivial, and the
-    // codec pass provably runs once.
-    val fps = fps0.select("doc_id", "fp")
-      .localCheckpoint(true) // consumers: fp output, band build, both pair-side joins
-    val bands = BandJoin.bandRows(fps, Seq("doc_id"),
-      BandJoin.bitBands(col("fp"), FpBands, FpBandBits))
-    val pairs = BandJoin.selfPairs(BandJoin.capHot(bands, BandKey, FpBandCap), BandKey)
-      .join(fps.select(col("doc_id").as("i"), col("fp").as("fa")), "i")
-      .join(fps.select(col("doc_id").as("j"), col("fp").as("fb")), "j")
-      .withColumn("ham", bit_count(col("fa").bitwiseXOR(col("fb"))).cast(LongType))
-      .filter(col("ham") <= FpHamT)
-    fps.select(lit("fp").as("kind"), col("doc_id").as("a"),
-        lit(-1L).as("b"), col("fp").as("v"))
-      .unionByName(pairs.select(lit("pair").as("kind"), col("i").as("a"),
-        col("j").as("b"), col("ham").as("v")))
-  }
 
   private lazy val mmAudioFpDedupOracle = {
     import Multimodal.SpectralTable._
@@ -3154,56 +3061,23 @@ object LlmOps {
 
   private val VdFrames = 4
   private val VdOff = 17
-  private val VdMinFrames = 3
 
   /** Video near-duplicate detection by frame-fingerprint matching — the
     * video leg of the perceptual-dedup triangle (image `mm_dedup_real`,
     * audio `mm_audio_fpdedup`): each doc's 4-frame uncompressed AVI demuxes
     * through the real RIFF parser, every frame fingerprints to the 48-bit
     * blockhash ([[graft.llm.Multimodal.videoFrameHashes]] — ONE narrow
-    * flatMap per doc, 16 bytes out per frame), and two videos are near-dups
-    * when ≥ $VdMinFrames frames match at the SAME frame index with Hamming
-    * ≤ $MmHamming. Scale shape is the SimHash discipline with the band key
-    * scoped to the frame index: candidates come from an equality bucket
-    * join on (frame_idx, band, 12-bit key) with over-hot keys dropped via a
-    * broadcast anti-join, the per-frame Hamming verify touches candidate
-    * pairs only, and the temporal agreement count is one groupBy over the
-    * surviving frame matches — never an all-pairs product, and no video's
-    * pixels ever cross the wire. */
+    * flatMap per doc, 16 bytes out per frame), and [[Multimodal.videoDedup]]
+    * pairs two videos when ≥ 3 frames match at the SAME frame index with
+    * Hamming ≤ 6: band keys scoped to the frame index, never an all-pairs
+    * product, and no video's pixels ever cross the wire. */
   def mmVideoDedup(s: SparkSession, d: String): DataFrame = {
     val n = MmFrameW * MmFrameH
     val media = textBytesMedia(s, d, "video/avi") { bytes =>
       Multimodal.AviMjpeg.encodeRawGray((0 until VdFrames).map(f =>
         cycledRaster(bytes, n, offset = VdOff * f)), MmFrameW, MmFrameH)
     }
-    videoDedupFromFrameHashes(Multimodal.videoFrameHashes(media, MmBits).toDF())
-  }
-
-  /** The band+verify pipeline over an already-computed per-frame hash
-    * frame (doc_id, frame_idx, fhash) — split out so the skew-stress spec
-    * can drive it with a planted hot clique, mirroring
-    * [[mmDedupFromHashes]]. */
-  private[queries] def videoDedupFromFrameHashes(fh0: DataFrame): DataFrame = {
-    // consumers: band build + both verify-join sides. r21: EAGER checkpoint
-    // instead of a lazy persist — AQE submits the independent consumer
-    // subtrees concurrently and a lazy cache is materialized by racing jobs
-    // that re-run (or block on) the AVI demux per consumer (the audio twin
-    // profiled 3 concurrent decode jobs); |docs|·frames rows of scalars,
-    // checkpoint cost trivial, demux provably once.
-    val fh = fh0.select("doc_id", "frame_idx", "fhash").localCheckpoint(true)
-    val scoped = "frame_idx" +: BandKey
-    val bands = BandJoin.bandRows(fh, Seq("doc_id", "frame_idx"),
-      BandJoin.bitBands(col("fhash"), MmBands, MmBandBits))
-    BandJoin.selfPairs(BandJoin.capHot(bands, scoped, MmBandCap), scoped)
-      .join(fh.select(col("doc_id").as("i"), col("frame_idx"),
-        col("fhash").as("ha")), Seq("i"))
-      .join(fh.select(col("doc_id").as("j"), col("frame_idx"),
-        col("fhash").as("hb")), Seq("j", "frame_idx"))
-      .filter(bit_count(col("ha").bitwiseXOR(col("hb"))) <= MmHamming)
-      .groupBy(col("i"), col("j"))
-      .agg(count(lit(1)).as("n_matched"))
-      .filter(col("n_matched") >= VdMinFrames)
-      .select(col("i"), col("j"), col("n_matched"))
+    Multimodal.videoDedup(Multimodal.videoFrameHashes(media, MmBits).toDF())
   }
 
   private lazy val mmVideoDedupOracle = {

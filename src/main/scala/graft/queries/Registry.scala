@@ -43,12 +43,7 @@ private[queries] object Tuning {
     * but a positive integer is an `IllegalArgumentException` naming the
     * variable. */
   def parseControlShuffle(env: Map[String, String]): Int =
-    env.get(ControlShuffleVar) match {
-      case None => 4
-      case Some(v) => v.trim.toIntOption.filter(_ > 0).getOrElse(
-        throw new IllegalArgumentException(
-          s"$ControlShuffleVar must be a positive integer, got '$v'"))
-    }
+    graft.SparkEntry.positiveIntVar(env, ControlShuffleVar, 4)
 }
 
 object Registry {

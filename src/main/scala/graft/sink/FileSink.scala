@@ -21,13 +21,6 @@ import graft.ops.Dedup
   */
 object FileSink {
 
-  /** Verify the pre-deduped-on-pk contract on every [[mergeMorVersioned]]
-    * change batch (one extra aggregation per commit over the already-
-    * persisted batch). Default on — a violated contract silently corrupts
-    * reconciliation; disable only when the upstream pipeline provably
-    * dedups and merge-commit latency matters. */
-  @volatile var verifyPreDeduped: Boolean = true
-
   /** Batch-file format negotiation (types/marshaller.go:37-50): the
     * reference picks NDJSON or CSV (+gzip) per destination. */
   final case class Config(
@@ -432,11 +425,10 @@ object FileSink {
     // the pre-deduped-on-pk contract is load-bearing: a duplicate (pk,
     // partition) in one batch would reconcile nondeterministically (same-__dv
     // ties broken by shuffle layout) — fail loudly instead of silently.
-    // The check costs one extra aggregation pass over the (persisted) batch
-    // per commit, so a latency-critical streaming deployment whose upstream
-    // provably dedups (e.g. Dedup.inBatch right before) can switch it off.
+    // The check is one aggregation pass over the persisted batch, inside
+    // the release, so a rejected batch leaves nothing cached.
     val batch = changes.persist()
-    if (verifyPreDeduped) {
+    val moved = try {
       val keyCols = (pk :+ partitionCol).map(org.apache.spark.sql.functions.col)
       val chk = batch.agg(
         org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
@@ -446,9 +438,8 @@ object FileSink {
         s"mergeMorVersioned: change batch violates the pre-deduped-on-pk " +
           s"contract (${chk.getLong(0)} rows, ${chk.getLong(1)} distinct " +
           s"(${(pk :+ partitionCol).mkString(",")}))")
-    }
-    val moved = try stageAndMove(batch, dir, partitionCol, v, prefix = "delta")
-                finally { batch.unpersist(); () }
+      stageAndMove(batch, dir, partitionCol, v, prefix = "delta")
+    } finally { batch.unpersist(); () }
     writeManifest(spark, dir, v, prevFiles ++ moved, Some(prevFiles))
     v
   }

@@ -2,7 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.functions._
 import graft.SparkSuite
-import graft.llm.{NearDup, TextOps}
+import graft.llm.{Multimodal, NearDup, TextOps}
 
 /** Skewed-corpus stress: real corpora are power-law — one boilerplate
   * paragraph (license header, nav bar, disclaimer) lands in a large
@@ -94,7 +94,7 @@ class SkewStressSpec extends SparkSuite {
     val near = (0 until 3).flatMap(i => (0 until 4).map(f =>
       (9000L + i, f.toLong, 0x7770000000000L ^ (1L << i))))
     val fh = (hot ++ near).toDF("doc_id", "frame_idx", "fhash")
-    val out = LlmOps.videoDedupFromFrameHashes(fh)
+    val out = Multimodal.videoDedup(fh)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2)))
     // the clique contributes nothing; the under-cap trio pairs fully with
     // all 4 frames agreeing
@@ -114,7 +114,7 @@ class SkewStressSpec extends SparkSuite {
     // plus a genuine near-dup trio under the cap: one distinct low bit
     // flipped each (pairwise Hamming 2 <= 10; bands 1-6 stay identical)
     val near = (0 until 3).map(i => (9000L + i, 0x0F0F0F0F0F0F0L ^ (1L << i)))
-    val out = LlmOps.audioFpDedupFromFps((hot ++ near).toDF("doc_id", "fp"))
+    val out = Multimodal.audioDedup((hot ++ near).toDF("doc_id", "fp"))
       .filter(col("kind") === "pair")
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3)))
     assert(out.forall(_._1 >= 9000L), s"hot-clique pair leaked: ${out.take(3).toSeq}")
@@ -174,7 +174,7 @@ class SkewStressSpec extends SparkSuite {
 
   private def audioRun(fps: Map[Long, Long]): (Set[(Long, Long, Long)], Long) = {
     val t0 = System.nanoTime()
-    val out = LlmOps.audioFpDedupFromFps(fps.toSeq.toDF("doc_id", "fp"))
+    val out = Multimodal.audioDedup(fps.toSeq.toDF("doc_id", "fp"))
       .filter(col("kind") === "pair")
       .collect().map(r => (r.getLong(1), r.getLong(2), r.getLong(3))).toSet
     (out, (System.nanoTime() - t0) / 1000000L)
@@ -223,7 +223,7 @@ class SkewStressSpec extends SparkSuite {
       val fh = fps.toSeq.flatMap { case (d, h) =>
         (0 until 4).map(f => (d, f.toLong, h)) }.toDF("doc_id", "frame_idx", "fhash")
       val t0 = System.nanoTime()
-      val out = LlmOps.videoDedupFromFrameHashes(fh)
+      val out = Multimodal.videoDedup(fh)
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
       (ref.map { case (a, b, _) => (a, b, 4L) }, vol, out,
         (System.nanoTime() - t0) / 1000000L)

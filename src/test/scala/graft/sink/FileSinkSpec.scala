@@ -3,6 +3,7 @@ package graft.sink
 import org.apache.spark.sql.{Row, SaveMode}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import org.apache.spark.storage.StorageLevel
 import graft.SparkSuite
 
 /** File-sink roundtrips (K8, file_storage/abstract.go:27-120): NDJSON/CSV,
@@ -513,6 +514,21 @@ class FileSinkSpec extends SparkSuite {
       FileSink.mergeCowVersioned(df("id BIGINT, v DOUBLE, s STRING",
         Seq(Row(1L, 5.0, "x"))), dir, Seq("id"), "s")
     }
+  }
+
+  test("MOR merge rejects a duplicate (pk, partition) batch and leaves it uncached") {
+    val dir = tmp() + "/t"
+    data.write.partitionBy("s").parquet(dir)
+    val v1 = FileSink.commitVersion(spark, dir)
+    val changes = df("id BIGINT, v DOUBLE, s STRING",
+      Seq(Row(2L, 9.0, "y"), Row(2L, 8.0, "y"), Row(7L, 7.0, "y")))
+    val e = intercept[IllegalArgumentException] {
+      FileSink.mergeMorVersioned(changes, dir, Seq("id"), "s")
+    }
+    assert(e.getMessage.contains("pre-deduped-on-pk contract"), e.getMessage)
+    assert(FileSink.currentVersion(spark, dir) == v1)
+    // storageLevel asks the cache manager for the batch's plan
+    assert(changes.storageLevel == StorageLevel.NONE, "the rejected batch is still cached")
   }
 
   test("versioned merge evolves schema: old files surface null for a column added later") {
