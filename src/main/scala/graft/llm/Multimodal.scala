@@ -998,39 +998,39 @@ object Multimodal {
 
   // ---- perceptual near-dup ----------------------------------------------
 
+  // a band key shared by > this many docs carries no signal (every family)
+  val BandCap = 100L
   // image and video frames: the 48-bit blockhash in 4 bands of 12-bit keys
   val MmBits = 48
   val MmBands = 4
   val MmBandBits = MmBits / MmBands // 12-bit band keys
   val MmHamming = 6
-  val MmBandCap = 100
   // audio: the 49-bit fingerprint in 7 bands of 7-bit keys
   val FpBands = 7
   val FpBandBits = 7
   val FpHamT = 10L
-  val FpBandCap = 100L // a 7-bit band key shared by > this many docs carries no signal
   // video: frames that must match at the same index
   val VdMinFrames = 3
 
   /** (i, j, [scope…], hamming): the near-dup pairs of a
     * `(doc_id, [scope…], hash)` frame, the pair step of every perceptual
     * family. The `hash` column is cut into `bands` keys of `bits` bits, a
-    * (scope…, band, key) held by more than `cap` rows is dropped, and the
-    * distinct candidates `i < j` of the band self-join join their hashes
-    * back — `i` on its id, `j` on its id and `scope` — to keep
-    * `bit_count(ha xor hb) ≤ maxHam`. So a scoped pair (video:
-    * `frame_idx`) is proposed inside one scope value and compared at every
-    * scope value both sides hold, never across two. Nothing is persisted:
-    * the caller materializes `hashes`, which the band build and both
-    * join-back sides read. */
+    * (scope…, band, key) held by more than [[BandCap]] rows is dropped,
+    * and the distinct candidates `i < j` of the band self-join join their
+    * hashes back — `i` on its id, `j` on its id and `scope` — to keep
+    * `bit_count(ha xor hb) ≤ maxHam`. So a scoped pair (video: `frame_idx`)
+    * is proposed inside one scope value and compared at every scope value
+    * both sides hold, never across two. `BandJoin.selfPairs` persists the
+    * capped band frame and it stays cached; `hashes`, read by the band
+    * build and both join-back sides, is the caller's to materialize. */
   def hammingPairs(hashes: DataFrame, hash: String, scope: Seq[String],
-                   bands: Int, bits: Int, cap: Long, maxHam: Long): DataFrame = {
+                   bands: Int, bits: Int, maxHam: Long): DataFrame = {
     val keys = scope ++ BandJoin.BandKey
     val bandRows = BandJoin.bandRows(hashes, "doc_id" +: scope,
       BandJoin.bitBands(col(hash), bands, bits))
     def side(id: String, h: String) = hashes.select(
       (col("doc_id").as(id) +: scope.map(col)) :+ col(hash).as(h): _*)
-    BandJoin.selfPairs(BandJoin.capHot(bandRows, keys, cap), keys)
+    BandJoin.selfPairs(BandJoin.capHot(bandRows, keys, BandCap), keys)
       .join(side("i", "ha"), Seq("i"))
       .join(side("j", "hb"), "j" +: scope)
       .withColumn("hamming", bit_count(col("ha").bitwiseXOR(col("hb"))).cast(LongType))
@@ -1042,7 +1042,7 @@ object Multimodal {
     * hashes are persisted and stay cached: the lazy result reads them. */
   def imageDedup(blockHashes: DataFrame): DataFrame =
     hammingPairs(blockHashes.select("doc_id", "blockhash").persist(), "blockhash",
-      Nil, MmBands, MmBandBits, MmBandCap, MmHamming)
+      Nil, MmBands, MmBandBits, MmHamming)
 
   /** Audio near-dup of a (doc_id, fp) frame: every fingerprint as a
     * `('fp', doc_id, -1, fp)` row plus every pair as `('pair', i, j,
@@ -1054,7 +1054,7 @@ object Multimodal {
     * codec pass runs once. */
   def audioDedup(fingerprints: DataFrame): DataFrame = {
     val fps = fingerprints.select("doc_id", "fp").localCheckpoint(true)
-    val pairs = hammingPairs(fps, "fp", Nil, FpBands, FpBandBits, FpBandCap, FpHamT)
+    val pairs = hammingPairs(fps, "fp", Nil, FpBands, FpBandBits, FpHamT)
     fps.select(lit("fp").as("kind"), col("doc_id").as("a"),
         lit(-1L).as("b"), col("fp").as("v"))
       .unionByName(pairs.select(lit("pair").as("kind"), col("i").as("a"),
@@ -1066,7 +1066,7 @@ object Multimodal {
     * Checkpointed eagerly like [[audioDedup]], so the AVI demux runs once. */
   def videoDedup(frameHashes: DataFrame): DataFrame = {
     val fh = frameHashes.select("doc_id", "frame_idx", "fhash").localCheckpoint(true)
-    hammingPairs(fh, "fhash", Seq("frame_idx"), MmBands, MmBandBits, MmBandCap, MmHamming)
+    hammingPairs(fh, "fhash", Seq("frame_idx"), MmBands, MmBandBits, MmHamming)
       .groupBy(col("i"), col("j"))
       .agg(count(lit(1)).as("n_matched"))
       .filter(col("n_matched") >= VdMinFrames)

@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Tables
 import graft.llm.{Corpus, Multimodal, NearDup, Similarity, TextOps}
-import graft.llm.Multimodal.{FpBandBits, FpBandCap, FpBands, FpHamT, MmBandBits, MmBandCap, MmBands, MmBits, MmHamming, VdMinFrames}
+import graft.llm.Multimodal.{BandCap, FpBandBits, FpBands, FpHamT, MmBandBits, MmBands, MmBits, MmHamming, VdMinFrames}
 import graft.llm.NearDup.{ContainThreshold, DfCap, JaccardThreshold, NumBands, NumHashes, RowsPerBand, SimHamMax}
 import graft.ops.{BandJoin, Dedup}
 import graft.ops.BandJoin.BandKey
@@ -2528,7 +2528,7 @@ object LlmOps {
     bands AS (SELECT doc_id, band, key FROM (
         SELECT doc_id, band, key, count(*) OVER (PARTITION BY band, key) AS df
         FROM bands0) t
-      WHERE df <= $MmBandCap),
+      WHERE df <= $BandCap),
     cands AS (
       SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
       FROM bands a JOIN bands b
@@ -3041,7 +3041,7 @@ object LlmOps {
       SELECT doc_id, b, bb FROM (
         SELECT doc_id, b, bb, count(*) OVER (PARTITION BY b, bb) AS df
         FROM bands0) t
-      WHERE df <= $FpBandCap),
+      WHERE df <= $BandCap),
     cand AS (
       SELECT DISTINCT x.doc_id AS da, y.doc_id AS db
       FROM bands x JOIN bands y ON y.b = x.b AND y.bb = x.bb
@@ -3108,7 +3108,7 @@ object LlmOps {
         SELECT doc_id, f, band, key,
                count(*) OVER (PARTITION BY f, band, key) AS df
         FROM bands0) t
-      WHERE df <= $MmBandCap),
+      WHERE df <= $BandCap),
     cands AS (
       SELECT DISTINCT a.doc_id AS i, b.doc_id AS j
       FROM bands a JOIN bands b
