@@ -1,16 +1,10 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = SparkEntry.parseCpus(sys.env, 4)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = SparkEntry.localSession(4)
+    // the core count the session was built with, for the JSON line
+    val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
     // Warm the session (codegen, classloading, parquet reader init, and the
     // window/broadcast/cross-join/JSON executor machinery) so the first
     // timed query hitting each engine path isn't charged JVM first-use cost.

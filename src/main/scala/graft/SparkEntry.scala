@@ -23,6 +23,21 @@ object SparkEntry {
   def parseCpus(env: Map[String, String], default: Int): Int =
     positiveIntVar(env, CpusVar, default)
 
+  /** The local session the harness mains run in: `local[cpus]` with the
+    * shuffle width at `cpus` (`SPARK_GRAFT_CPUS`, `defaultCpus` when unset),
+    * UTC session time zone, no UI, WARN logs. */
+  def localSession(defaultCpus: Int): SparkSession = {
+    val cpus = parseCpus(sys.env, defaultCpus)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.shuffle.partitions", cpus.toString)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
+  }
+
   /** The positive integer `env(name)`, or `default` when it is unset;
     * any other value is an `IllegalArgumentException` naming `name`. */
   def positiveIntVar(env: Map[String, String], name: String, default: Int): Int =

@@ -9,16 +9,14 @@ import org.apache.spark.sql.functions._
   *   every incoming row is stamped with `__partition_id`; on commit the
   *   target partition is cleared and the batch appended — an empty batch
   *   still clears the partition.
-  * - ReplaceTable (replacetable_stream.go:51-117): load to a tmp table then
-  *   atomically swap; an empty batch truncates.
-  * - Delete/Truncate (sql_adapter_base.go:299-411).
   * - Date granularity (delete_condition.go:64-187).
   *
   * On a lake table ReplacePartition is `INSERT OVERWRITE` with dynamic
-  * partition overwrite (`spark.sql.sources.partitionOverwriteMode=dynamic`)
-  * — only the touched partitions rewrite, which is the 100 TB-safe path.
-  * The DataFrame-level forms below express the same final state for the
-  * correctness oracle.
+  * partition overwrite: [[graft.sink.FileSink.replacePartition]] sets
+  * `partitionOverwriteMode=dynamic` on that one write, never in the
+  * session, so only the touched partitions rewrite — the 100 TB-safe path.
+  * The DataFrame-level form below expresses the same final state for the
+  * correctness oracle. ReplaceTable is [[graft.sink.JdbcSink.replaceTable]].
   */
 object Partitions {
 
@@ -32,12 +30,6 @@ object Partitions {
   def replacePartition(target: DataFrame, batch: DataFrame, partitionId: String): DataFrame =
     target.filter(col(PartitionCol) =!= lit(partitionId))
       .unionByName(stamp(batch.drop(PartitionCol), partitionId))
-
-  /** Final state after ReplaceTable: the new batch, whatever was there before. */
-  def replaceTable(target: DataFrame, batch: DataFrame): DataFrame = batch
-
-  /** DELETE FROM target WHERE cond. */
-  def delete(target: DataFrame, cond: Column): DataFrame = target.filter(!cond)
 
   /** Date-granularity truncation (delete_condition.go:64-187): HOUR, DAY,
     * WEEK, MONTH, QUARTER, YEAR. Spark `date_trunc` implements all of them. */

@@ -76,10 +76,6 @@ object DdlLock {
   def lockId(destinationId: String, table: String): String =
     s"${destinationId}_$table"
 
-  /** Acquire `id` or throw after `timeoutMs` — INSERT-must-succeed with
-    * exponential backoff; stale rows (HEARTBEAT older than `staleMs` by
-    * `now`) are evicted between attempts so a crashed engine cannot wedge
-    * DDL. */
   /** Default TTL before a holder is presumed crashed. Staleness is judged
     * on the HEARTBEAT column, which [[withLock]] refreshes from a daemon
     * thread every [[DefaultHeartbeatMs]] while holding — so a live-but-SLOW
@@ -92,6 +88,10 @@ object DdlLock {
   /** Holder heartbeat period — eviction requires missing ~15 beats. */
   val DefaultHeartbeatMs: Long = 2000L
 
+  /** Acquire `id` or throw after `timeoutMs` — INSERT-must-succeed with
+    * exponential backoff; stale rows (HEARTBEAT older than `staleMs` by
+    * `now`) are evicted between attempts so a crashed engine cannot wedge
+    * DDL. */
   def acquire(sink: JdbcSink, id: String, owner: String,
               timeoutMs: Long = 10000L, staleMs: Long = DefaultStaleMs,
               now: () => Long = () => System.currentTimeMillis()): Unit = {

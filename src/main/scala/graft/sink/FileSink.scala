@@ -1,7 +1,8 @@
 package graft.sink
 
-import org.apache.spark.sql.{DataFrame, SaveMode, SparkSession}
-import org.apache.spark.sql.functions.col
+import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.spark.sql.{Column, DataFrame, SaveMode, SparkSession}
+import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
 import graft.ops.Dedup
 
@@ -35,11 +36,10 @@ object FileSink {
       discriminators: Seq[String] = Nil)
 
   /** Write one batch under `dir`. `Append` = batch mode (new objects beside
-    * the old), `Overwrite` = replace_table. Returns the deduped frame that
-    * was written (for callers chaining state accounting). */
+    * the old), `Overwrite` = replace_table. */
   def write(df: DataFrame, dir: String, mode: SaveMode = SaveMode.Append,
             cfg: Config = Config(),
-            arrival: Option[org.apache.spark.sql.Column] = None): Unit = {
+            arrival: Option[Column] = None): Unit = {
     val deduped =
       if (cfg.pk.nonEmpty) Dedup.inBatch(df, cfg.pk, cfg.discriminators, arrival)
       else df
@@ -60,27 +60,18 @@ object FileSink {
       case "orc"     => w.orc(dir)
       // the reference marshaller's JSON-ARRAY format (marshaller.go:37-50):
       // one `[obj,…]` document per partition — the wire shape api_based
-      // destinations take; Spark's multiLine JSON reader reads it back
-      case "json_array" =>
-        require(cfg.partitionBy.isEmpty, "json_array sink: no folder partitioning")
-        if (mode == SaveMode.Overwrite) {
-          val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-            deduped.sparkSession.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        }
-        writeJsonArray(deduped, dir, cfg.gzip,
-          runTag = java.util.UUID.randomUUID.toString.take(8))
-      // the reference marshaller's fourth format (marshaller.go:309-325):
-      // Avro container objects, one per partition, via [[AvroSink]]
-      case "avro" =>
-        require(cfg.partitionBy.isEmpty, "avro sink: no folder partitioning")
-        if (mode == SaveMode.Overwrite) {
-          val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-            deduped.sparkSession.sparkContext.hadoopConfiguration)
-          fs.delete(new org.apache.hadoop.fs.Path(dir), true)
-        }
-        AvroSink.write(deduped, dir, if (cfg.gzip) "deflate" else "null",
-          runTag = java.util.UUID.randomUUID.toString.take(8))
+      // destinations take; Spark's multiLine JSON reader reads it back —
+      // and its fourth format (marshaller.go:309-325): Avro container
+      // objects, one per partition, via [[AvroSink]]. Both write their
+      // objects by hand, so `Overwrite` clears the folder here.
+      case "json_array" | "avro" =>
+        require(cfg.partitionBy.isEmpty, s"${cfg.format} sink: no folder partitioning")
+        if (mode == SaveMode.Overwrite)
+          fsFor(deduped.sparkSession, dir).delete(new Path(dir), true)
+        val runTag = java.util.UUID.randomUUID.toString.take(8)
+        if (cfg.format == "avro")
+          AvroSink.write(deduped, dir, if (cfg.gzip) "deflate" else "null", runTag = runTag)
+        else writeJsonArray(deduped, dir, cfg.gzip, runTag)
       case other     => throw new IllegalArgumentException(s"unknown file format: $other")
     }
   }
@@ -90,16 +81,13 @@ object FileSink {
     * ONE `[obj,…]` document, optionally gzipped. */
   private def writeJsonArray(df: DataFrame, dir: String, gzip: Boolean,
                              runTag: String): Unit = {
-    import org.apache.spark.sql.functions.{col => c, struct, to_json}
-    val jdf = df.select(to_json(struct(df.columns.map(n => c(s"`$n`")): _*)).as("j"))
+    val jdf = df.select(to_json(struct(df.columns.map(n => col(s"`$n`")): _*)).as("j"))
     jdf.rdd.mapPartitionsWithIndex { (pid, rows) =>
       if (rows.isEmpty) Iterator.empty
       else {
-        val fs = org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-          new org.apache.hadoop.conf.Configuration())
+        val fs = FileSystem.get(new java.net.URI(dir), new org.apache.hadoop.conf.Configuration())
         val ext = if (gzip) ".json.gz" else ".json"
-        val raw = fs.create(new org.apache.hadoop.fs.Path(dir,
-          f"part-$runTag-$pid%05d$ext"), true)
+        val raw = fs.create(new Path(dir, f"part-$runTag-$pid%05d$ext"), true)
         val out = if (gzip) new java.util.zip.GZIPOutputStream(raw) else raw
         val w = new java.io.BufferedWriter(
           new java.io.OutputStreamWriter(out, java.nio.charset.StandardCharsets.UTF_8))
@@ -203,14 +191,13 @@ object FileSink {
   val CheckpointEvery = 10
 
   private def fsFor(spark: SparkSession, dir: String) =
-    org.apache.hadoop.fs.FileSystem.get(new java.net.URI(dir),
-      spark.sparkContext.hadoopConfiguration)
+    FileSystem.get(new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
 
   /** Highest committed version, 0 if none. */
   def currentVersion(spark: SparkSession, dir: String): Int = {
     val fs = fsFor(spark, dir)
     def maxOf(glob: String, prefix: String): Int = {
-      val st = fs.globStatus(new org.apache.hadoop.fs.Path(dir, glob))
+      val st = fs.globStatus(new Path(dir, glob))
       if (st == null || st.isEmpty) 0
       else st.map(_.getPath.getName.stripPrefix(prefix).stripSuffix(".txt").toInt).max
     }
@@ -218,24 +205,40 @@ object FileSink {
       maxOf("_graft_delta_v*.txt", "_graft_delta_v"))
   }
 
-  private def listDataFiles(fs: org.apache.hadoop.fs.FileSystem,
-                            dir: String): Seq[String] = {
-    val base = new org.apache.hadoop.fs.Path(dir)
-    val it = fs.listFiles(base, true)
+  private def listDataFiles(fs: FileSystem, dir: String): Seq[String] = {
+    val it = fs.listFiles(new Path(dir), true)
     val out = scala.collection.mutable.ArrayBuffer[String]()
-    val baseUri = base.toUri.getPath
     while (it.hasNext) {
       val p = it.next().getPath
       if (p.getName.endsWith(".parquet") && !p.getName.startsWith("_"))
-        out += p.toUri.getPath.stripPrefix(baseUri).stripPrefix("/")
+        out += relPath(dir, p.toUri.toString)
     }
     out.toSeq.sorted
   }
 
-  private def readLines(fs: org.apache.hadoop.fs.FileSystem, path: String): Seq[String] = {
-    val in = fs.open(new org.apache.hadoop.fs.Path(path))
+  private def readLines(fs: FileSystem, path: String): Seq[String] = {
+    val in = fs.open(new Path(path))
     try scala.io.Source.fromInputStream(in, "UTF-8").getLines().filter(_.nonEmpty).toList
     finally in.close()
+  }
+
+  /** Write the metadata file `path` (manifest, delta manifest or stats
+    * sidecar). The `create` is exclusive — an existing file fails it — which
+    * makes it the commit lock: a racing writer that computed the same next
+    * version loses. */
+  private def writeLines(fs: FileSystem, path: String, lines: Seq[String]): Unit = {
+    val out = fs.create(new Path(path), false)
+    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
+    finally out.close()
+  }
+
+  /** The newest checkpoint manifest at or below `v`; none is an error
+    * naming `op`. */
+  private def checkpointAtOrBelow(fs: FileSystem, dir: String, v: Int, op: String): Int = {
+    var ck = v
+    while (ck >= 1 && !fs.exists(new Path(manifestPath(dir, ck)))) ck -= 1
+    require(ck >= 1, s"$op: no checkpoint manifest at or below v$v under $dir")
+    ck
   }
 
   /** Resolve version `v`'s full file list: the nearest checkpoint at or
@@ -243,11 +246,7 @@ object FileSink {
     * Bounded metadata I/O no matter how long the commit history is. */
   private def readManifest(spark: SparkSession, dir: String, v: Int): Seq[String] = {
     val fs = fsFor(spark, dir)
-    if (fs.exists(new org.apache.hadoop.fs.Path(manifestPath(dir, v))))
-      return readLines(fs, manifestPath(dir, v))
-    var ck = v - 1
-    while (ck >= 1 && !fs.exists(new org.apache.hadoop.fs.Path(manifestPath(dir, ck)))) ck -= 1
-    require(ck >= 1, s"readManifest: no checkpoint manifest at or below v$v under $dir")
+    val ck = checkpointAtOrBelow(fs, dir, v, "readManifest")
     val files = scala.collection.mutable.LinkedHashSet(readLines(fs, manifestPath(dir, ck)): _*)
     ((ck + 1) to v).foreach { w =>
       readLines(fs, deltaManifestPath(dir, w)).foreach { line =>
@@ -259,47 +258,76 @@ object FileSink {
     files.toSeq.sorted
   }
 
-  /** Commit version `v` with file list `files`. Checkpoint versions (v1 and
-    * every [[CheckpointEvery]]-th) write the full listing; the rest write a
-    * ±delta vs v−1 — O(changes) bytes, not O(table files). The exclusive
-    * `create` is the commit lock either way. */
-  private def writeManifest(spark: SparkSession, dir: String, v: Int,
-                            files: Seq[String],
-                            prevFiles: Option[Seq[String]] = None): Unit = {
-    val fs = fsFor(spark, dir)
-    if (v == 1 || v % CheckpointEvery == 0) {
-      val out = fs.create(new org.apache.hadoop.fs.Path(manifestPath(dir, v)), false)
-      try out.write((files.sorted.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-    } else {
-      // callers that already resolved v-1 pass it in — a MOR commit must
-      // not pay the checkpoint-window metadata walk twice
-      val prev = prevFiles.getOrElse(readManifest(spark, dir, v - 1)).toSet
-      val cur = files.toSet
-      val lines = (cur -- prev).toSeq.sorted.map("+ " + _) ++
-        (prev -- cur).toSeq.sorted.map("- " + _)
-      val out = fs.create(new org.apache.hadoop.fs.Path(deltaManifestPath(dir, v)), false)
-      try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-      finally out.close()
-    }
+  // The commit protocol every lake operation shares: [[head]] reads the
+  // head version and its file list, [[plainRows]] guards the operations
+  // that read those files as plain rows, and [[commit]] writes the next
+  // version from the list the operation builds.
+
+  /** The highest committed version and its file list; a directory with no
+    * committed version is rejected, naming `op`. */
+  private def head(spark: SparkSession, dir: String, op: String): (Int, Seq[String]) = {
+    val v = currentVersion(spark, dir)
+    require(v >= 1, s"$op: no committed version under $dir")
+    (v, readManifest(spark, dir, v))
   }
+
+  /** Version `v`'s `files` for an operation that reads them as plain rows,
+    * rejected (naming `op`) when they hold MOR delta or tombstone files: a
+    * plain read would surface superseded base rows beside the deltas, and
+    * tombstones as rows of only pk and partition. */
+  private def plainRows(op: String, dir: String, v: Int, files: Seq[String]): Seq[String] = {
+    require(!files.exists(isDelta),
+      s"$op: $dir@v$v has MOR delta files — run compactMor first")
+    files
+  }
+
+  /** Commit version `prevV`+1 with the file list `next` builds for it
+    * (staging that version's new data files). Checkpoint versions (v1 and
+    * every [[CheckpointEvery]]-th) write the full listing; the rest write a
+    * ±delta vs `prevFiles` — O(changes) bytes, not O(table files) — and
+    * only they evaluate `prevFiles`. Returns the committed version. */
+  private def commit(spark: SparkSession, dir: String, prevV: Int,
+                     prevFiles: => Seq[String])(next: Int => Seq[String]): Int = {
+    val v = prevV + 1
+    val files = next(v)
+    val fs = fsFor(spark, dir)
+    if (v == 1 || v % CheckpointEvery == 0) writeLines(fs, manifestPath(dir, v), files.sorted)
+    else {
+      val prev = prevFiles.toSet
+      val cur = files.toSet
+      writeLines(fs, deltaManifestPath(dir, v),
+        (cur -- prev).toSeq.sorted.map("+ " + _) ++ (prev -- cur).toSeq.sorted.map("- " + _))
+    }
+    v
+  }
+
+  /** Manifest-relative `files` as rows of `schema`, partition columns
+    * recovered via basePath. */
+  private def readFiles(spark: SparkSession, dir: String, schema: StructType,
+                        files: Seq[String]): DataFrame =
+    spark.read.option("basePath", dir).schema(schema).parquet(files.map(f => s"$dir/$f"): _*)
+
+  /** The manifest-relative path of the file at `fileUri` under `dir` — a
+    * listed data file or a [[readFiles]] row's `input_file_name()`. */
+  private def relPath(dir: String, fileUri: String): String =
+    new Path(new java.net.URI(fileUri)).toUri.getPath
+      .stripPrefix(new Path(dir).toUri.getPath).stripPrefix("/")
 
   /** Commit the CURRENTLY VISIBLE data files as the next version (used once
     * after the initial table write; merges commit their own). Returns the
     * new version number. */
   def commitVersion(spark: SparkSession, dir: String): Int = {
-    val v = currentVersion(spark, dir) + 1
-    writeManifest(spark, dir, v, listDataFiles(fsFor(spark, dir), dir))
-    v
+    val prevV = currentVersion(spark, dir)
+    commit(spark, dir, prevV, readManifest(spark, dir, prevV))(_ =>
+      listDataFiles(fsFor(spark, dir), dir))
   }
 
   /** Read the table AS OF version `v`: exactly the manifest's files, with
-    * partition columns recovered via basePath. */
+    * partition columns recovered via basePath. A version holding MOR deltas
+    * is refused — read it with [[readMorVersion]]. */
   def readVersion(spark: SparkSession, dir: String, v: Int,
-                  schema: StructType): DataFrame = {
-    val files = readManifest(spark, dir, v).map(f => s"$dir/$f")
-    spark.read.option("basePath", dir).schema(schema).parquet(files: _*)
-  }
+                  schema: StructType): DataFrame =
+    readFiles(spark, dir, schema, plainRows("readVersion", dir, v, readManifest(spark, dir, v)))
 
   /** [[mergeCow]] with snapshot isolation: the merged slice lands in NEW
     * uniquely-named files (old files untouched — concurrent readers of any
@@ -309,38 +337,31 @@ object FileSink {
   def mergeCowVersioned(changes: DataFrame, dir: String, pk: Seq[String],
                         partitionCol: String): Int = {
     val spark = changes.sparkSession
-    val fs = fsFor(spark, dir)
-    val prevV = currentVersion(spark, dir)
-    require(prevV >= 1, s"mergeCowVersioned: no committed version under $dir")
-    val prevFiles = readManifest(spark, dir, prevV)
+    val (prevV, prevFiles) = head(spark, dir, "mergeCowVersioned")
     // a COW merge reads manifest files as plain rows — un-reconciled deltas
     // would make the anti-join keep superseded base rows
-    require(!prevFiles.exists(isDelta),
-      s"mergeCowVersioned: $dir has MOR delta files — run compactMor first")
-    val ch = changes.persist()
-    val dataFields = ch.schema.fields.filterNot(_.name == partitionCol)
-    val schema = StructType(dataFields :+ ch.schema(partitionCol))
-    // Touched files come from a PLANNING scan (partition pruning keeps it to
-    // footer reads of touched dirs), not from string-prefix matching on
-    // manifest paths — Hive path escaping (spaces, ':', '/', null →
-    // __HIVE_DEFAULT_PARTITION__) and date/timestamp rendering would break a
-    // raw `toString` prefix match and silently leave stale rows unsuperseded.
-    val touchedVals = ch.select(partitionCol).distinct().collect().map(_.get(0))
-    val touchedFiles: Seq[String] =
-      if (touchedVals.isEmpty || prevFiles.isEmpty) Seq.empty
-      else planTouchedFiles(spark, dir, schema, prevFiles,
-        touchedPred(partitionCol, touchedVals.toSeq))
-    val keptFiles = prevFiles.filterNot(touchedFiles.contains)
-    val target =
-      if (touchedFiles.isEmpty) ch.limit(0)
-      else spark.read.option("basePath", dir).schema(schema)
-        .parquet(touchedFiles.map(f => s"$dir/$f"): _*)
-    val merged = target.join(ch, pk, "left_anti").unionByName(ch)
-    val moved = stageAndMove(merged, dir, partitionCol, prevV + 1)
-    ch.unpersist()
-    val v = prevV + 1
-    writeManifest(spark, dir, v, keptFiles ++ moved, Some(prevFiles))
-    v
+    plainRows("mergeCowVersioned", dir, prevV, prevFiles)
+    commit(spark, dir, prevV, prevFiles) { v =>
+      val ch = changes.persist()
+      val dataFields = ch.schema.fields.filterNot(_.name == partitionCol)
+      val schema = StructType(dataFields :+ ch.schema(partitionCol))
+      // Touched files come from a PLANNING scan (partition pruning keeps it to
+      // footer reads of touched dirs), not from string-prefix matching on
+      // manifest paths — Hive path escaping (spaces, ':', '/', null →
+      // __HIVE_DEFAULT_PARTITION__) and date/timestamp rendering would break a
+      // raw `toString` prefix match and silently leave stale rows unsuperseded.
+      val touchedVals = ch.select(partitionCol).distinct().collect().map(_.get(0))
+      val touchedFiles: Seq[String] =
+        if (touchedVals.isEmpty || prevFiles.isEmpty) Seq.empty
+        else planTouchedFiles(spark, dir, schema, prevFiles,
+          touchedPred(partitionCol, touchedVals.toSeq))
+      val target =
+        if (touchedFiles.isEmpty) ch.limit(0) else readFiles(spark, dir, schema, touchedFiles)
+      val merged = target.join(ch, pk, "left_anti").unionByName(ch)
+      val moved = stageAndMove(merged, dir, partitionCol, v)
+      ch.unpersist()
+      prevFiles.filterNot(touchedFiles.contains) ++ moved
+    }
   }
 
   /** Write `rows` partitioned into a staging dir, then move each part-file
@@ -355,17 +376,17 @@ object FileSink {
     val stage = s"$dir/__stage_v$v"
     rows.write.mode(SaveMode.Overwrite).partitionBy(partitionCol).parquet(stage)
     val moved = scala.collection.mutable.ArrayBuffer[String]()
-    fs.globStatus(new org.apache.hadoop.fs.Path(s"$stage/$partitionCol=*")).foreach { pd =>
+    fs.globStatus(new Path(s"$stage/$partitionCol=*")).foreach { pd =>
       val pname = pd.getPath.getName
-      val destDir = new org.apache.hadoop.fs.Path(dir, pname)
+      val destDir = new Path(dir, pname)
       fs.mkdirs(destDir)
-      fs.globStatus(new org.apache.hadoop.fs.Path(pd.getPath, "part-*.parquet")).foreach { f =>
+      fs.globStatus(new Path(pd.getPath, "part-*.parquet")).foreach { f =>
         val unique = s"$prefix-v$v-${java.util.UUID.randomUUID().toString.take(8)}.parquet"
-        fs.rename(f.getPath, new org.apache.hadoop.fs.Path(destDir, unique))
+        fs.rename(f.getPath, new Path(destDir, unique))
         moved += s"$pname/$unique"
       }
     }
-    fs.delete(new org.apache.hadoop.fs.Path(stage), true)
+    fs.delete(new Path(stage), true)
     moved.toSeq
   }
 
@@ -373,12 +394,10 @@ object FileSink {
     * never matches null, which would silently drop null-partition rows
     * (they live in `__HIVE_DEFAULT_PARTITION__` and their value collects
     * as null). Shared by every touched-partition planning scan. */
-  private def touchedPred(partitionCol: String,
-                          vals: Seq[Any]): org.apache.spark.sql.Column = {
-    val pc = org.apache.spark.sql.functions.col(partitionCol)
+  private def touchedPred(partitionCol: String, vals: Seq[Any]): Column = {
+    val pc = col(partitionCol)
     val nonNull = vals.filter(_ != null)
-    val p0 = if (nonNull.isEmpty) org.apache.spark.sql.functions.lit(false)
-             else pc.isin(nonNull: _*)
+    val p0 = if (nonNull.isEmpty) lit(false) else pc.isin(nonNull: _*)
     if (vals.contains(null)) p0 || pc.isNull else p0
   }
 
@@ -387,17 +406,12 @@ object FileSink {
     * matching dirs; one collected row per affected file (control-plane). */
   private def planTouchedFiles(spark: SparkSession, dir: String,
                                schema: StructType, files: Seq[String],
-                               pred: org.apache.spark.sql.Column): Seq[String] = {
-    val baseUriPath = new org.apache.hadoop.fs.Path(dir).toUri.getPath
-    spark.read.option("basePath", dir).schema(schema)
-      .parquet(files.map(f => s"$dir/$f"): _*)
-      .filter(pred)
-      .select(org.apache.spark.sql.functions.input_file_name().as("f"))
+                               pred: Column): Seq[String] =
+    readFiles(spark, dir, schema, files).filter(pred)
+      .select(input_file_name().as("f"))
       .distinct().collect()
-      .map(r => new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
-        .toUri.getPath.stripPrefix(baseUriPath).stripPrefix("/"))
+      .map(r => relPath(dir, r.getString(0)))
       .toSeq
-  }
 
   // ---- merge-on-read (delta files + read-time reconcile) ----------------
 
@@ -417,31 +431,24 @@ object FileSink {
     * their current partition value, and a batch is pre-deduped on pk. */
   def mergeMorVersioned(changes: DataFrame, dir: String, pk: Seq[String],
                         partitionCol: String): Int = {
-    val spark = changes.sparkSession
-    val prevV = currentVersion(spark, dir)
-    require(prevV >= 1, s"mergeMorVersioned: no committed version under $dir")
-    val v = prevV + 1
-    val prevFiles = readManifest(spark, dir, prevV)
-    // the pre-deduped-on-pk contract is load-bearing: a duplicate (pk,
-    // partition) in one batch would reconcile nondeterministically (same-__dv
-    // ties broken by shuffle layout) — fail loudly instead of silently.
-    // The check is one aggregation pass over the persisted batch, inside
-    // the release, so a rejected batch leaves nothing cached.
-    val batch = changes.persist()
-    val moved = try {
-      val keyCols = (pk :+ partitionCol).map(org.apache.spark.sql.functions.col)
-      val chk = batch.agg(
-        org.apache.spark.sql.functions.count(org.apache.spark.sql.functions.lit(1)),
-        org.apache.spark.sql.functions.count_distinct(
-          org.apache.spark.sql.functions.struct(keyCols: _*))).first()
-      require(chk.getLong(0) == chk.getLong(1),
-        s"mergeMorVersioned: change batch violates the pre-deduped-on-pk " +
-          s"contract (${chk.getLong(0)} rows, ${chk.getLong(1)} distinct " +
-          s"(${(pk :+ partitionCol).mkString(",")}))")
-      stageAndMove(batch, dir, partitionCol, v, prefix = "delta")
-    } finally { batch.unpersist(); () }
-    writeManifest(spark, dir, v, prevFiles ++ moved, Some(prevFiles))
-    v
+    val (prevV, prevFiles) = head(changes.sparkSession, dir, "mergeMorVersioned")
+    commit(changes.sparkSession, dir, prevV, prevFiles) { v =>
+      // the pre-deduped-on-pk contract is load-bearing: a duplicate (pk,
+      // partition) in one batch would reconcile nondeterministically (same-__dv
+      // ties broken by shuffle layout) — fail loudly instead of silently.
+      // The check is one aggregation pass over the persisted batch, inside
+      // the release, so a rejected batch leaves nothing cached.
+      val batch = changes.persist()
+      try {
+        val chk = batch.agg(count(lit(1)),
+          count_distinct(struct((pk :+ partitionCol).map(col): _*))).first()
+        require(chk.getLong(0) == chk.getLong(1),
+          s"mergeMorVersioned: change batch violates the pre-deduped-on-pk " +
+            s"contract (${chk.getLong(0)} rows, ${chk.getLong(1)} distinct " +
+            s"(${(pk :+ partitionCol).mkString(",")}))")
+        prevFiles ++ stageAndMove(batch, dir, partitionCol, v, prefix = "delta")
+      } finally { batch.unpersist(); () }
+    }
   }
 
   /** Read version `v` of a MOR table: base rows superseded by a delta drop
@@ -454,19 +461,20 @@ object FileSink {
     * against the base scan. */
   def readMorVersion(spark: SparkSession, dir: String, v: Int,
                      schema: StructType, pk: Seq[String],
-                     partitionCol: String): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val files = readManifest(spark, dir, v)
+                     partitionCol: String): DataFrame =
+    reconcile(spark, dir, schema, readManifest(spark, dir, v), pk, partitionCol)
+
+  /** [[readMorVersion]] over an already-resolved manifest `files`. */
+  private def reconcile(spark: SparkSession, dir: String, schema: StructType,
+                        files: Seq[String], pk: Seq[String],
+                        partitionCol: String): DataFrame = {
     val (deltas, bases) = files.partition(isDelta)
-    def read(fs: Seq[String]): DataFrame =
-      spark.read.option("basePath", dir).schema(schema)
-        .parquet(fs.map(f => s"$dir/$f"): _*)
-    if (deltas.isEmpty) return read(bases)
+    if (deltas.isEmpty) return readFiles(spark, dir, schema, bases)
     val keys = pk :+ partitionCol
     // one pass over every non-base file: upsert deltas carry full rows,
     // tombstones only (pk, partition) — the file NAME carries both the
     // commit version and the event kind, so no extra metadata read
-    val dv = read(deltas)
+    val dv = readFiles(spark, dir, schema, deltas)
       .withColumn("__dv",
         regexp_extract(input_file_name(), "(?:delta|tomb)-v(\\d+)-", 1).cast("int"))
       .withColumn("__tomb", input_file_name().rlike("tomb-v\\d+-"))
@@ -479,7 +487,7 @@ object FileSink {
     val latest = Dedup.inBatch(dv, keys, discriminators = Seq("__dv"))
       .localCheckpoint(true)
     val live = latest.filter(!col("__tomb")).drop("__dv", "__tomb")
-    val base = if (bases.isEmpty) live.limit(0) else read(bases)
+    val base = if (bases.isEmpty) live.limit(0) else readFiles(spark, dir, schema, bases)
     // NULL-SAFE anti-join: the partition key can legitimately be null
     // (__HIVE_DEFAULT_PARTITION__) and a plain equi-anti-join would never
     // match it — null-partition upserts would duplicate instead of
@@ -488,7 +496,7 @@ object FileSink {
     val cond = keys.map(k => col(k) <=> col(s"__k_$k")).reduce(_ && _)
     base.join(latKeys, cond, "left_anti")
       .unionByName(live)
-      .select(schema.fieldNames.map(org.apache.spark.sql.functions.col).toSeq: _*)
+      .select(schema.fieldNames.map(col).toSeq: _*)
   }
 
   /** Merge-on-read DELETE WHERE: victims land as TOMBSTONE files — (pk,
@@ -501,19 +509,15 @@ object FileSink {
     * cannot be addressed (null never equi-matches) — use the COW
     * [[deleteWhereVersioned]] for those. Returns the committed version. */
   def deleteMorVersioned(spark: SparkSession, dir: String, schema: StructType,
-                         predicate: org.apache.spark.sql.Column,
+                         predicate: Column,
                          partitionCol: String, pk: Seq[String]): Int = {
-    import org.apache.spark.sql.functions._
-    val prevV = currentVersion(spark, dir)
-    require(prevV >= 1, s"deleteMorVersioned: no committed version under $dir")
-    val v = prevV + 1
-    val victims = readMorVersion(spark, dir, prevV, schema, pk, partitionCol)
-      .filter(coalesce(predicate, lit(false)))
-      .select((pk :+ partitionCol).map(col).toSeq: _*).distinct()
-    val prevFiles = readManifest(spark, dir, prevV)
-    val moved = stageAndMove(victims, dir, partitionCol, v, prefix = "tomb")
-    writeManifest(spark, dir, v, prevFiles ++ moved, Some(prevFiles))
-    v
+    val (prevV, prevFiles) = head(spark, dir, "deleteMorVersioned")
+    commit(spark, dir, prevV, prevFiles) { v =>
+      val victims = reconcile(spark, dir, schema, prevFiles, pk, partitionCol)
+        .filter(coalesce(predicate, lit(false)))
+        .select((pk :+ partitionCol).map(col): _*).distinct()
+      prevFiles ++ stageAndMove(victims, dir, partitionCol, v, prefix = "tomb")
+    }
   }
 
   /** Change data feed between two committed versions — the "what changed
@@ -528,7 +532,6 @@ object FileSink {
   def changeFeed(spark: SparkSession, dir: String, schema: StructType,
                  pk: Seq[String], partitionCol: String,
                  fromV: Int, toV: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
     val keys = pk :+ partitionCol
     val nonKey = schema.fieldNames.filterNot(keys.contains).toSeq
     val a = readMorVersion(spark, dir, fromV, schema, pk, partitionCol)
@@ -565,9 +568,7 @@ object FileSink {
                       maxDeltas: Int = 8, maxRatio: Double = 0.5,
                       layoutBy: Option[String] = None,
                       filesPerPartition: Int = 0): Option[Int] = {
-    val v = currentVersion(spark, dir)
-    require(v >= 1, s"maybeCompactMor: no committed version under $dir")
-    val files = readManifest(spark, dir, v)
+    val (v, files) = head(spark, dir, "maybeCompactMor")
     val (deltas, bases) = files.partition(isDelta)
     val over = deltas.size > maxDeltas ||
       (bases.nonEmpty && deltas.size.toDouble / bases.size > maxRatio)
@@ -588,48 +589,45 @@ object FileSink {
                  pk: Seq[String], partitionCol: String,
                  layoutBy: Option[String] = None,
                  filesPerPartition: Int = 0): Int = {
-    val prevV = currentVersion(spark, dir)
-    require(prevV >= 1, s"compactMor: no committed version under $dir")
+    val (prevV, files) = head(spark, dir, "compactMor")
     compactMorFrom(spark, dir, schema, pk, partitionCol, layoutBy,
-      filesPerPartition, prevV, readManifest(spark, dir, prevV))
+      filesPerPartition, prevV, files)
   }
 
   private def compactMorFrom(spark: SparkSession, dir: String, schema: StructType,
                              pk: Seq[String], partitionCol: String,
                              layoutBy: Option[String], filesPerPartition: Int,
                              prevV: Int, files: Seq[String]): Int = {
-    import org.apache.spark.sql.functions._
     val (deltas, bases) = files.partition(isDelta)
-    val v = prevV + 1
-    if (deltas.isEmpty) { writeManifest(spark, dir, v, files, Some(files)); return v }
-    val touchedVals = spark.read.option("basePath", dir).schema(schema)
-      .parquet(deltas.map(f => s"$dir/$f"): _*)
-      .select(partitionCol).distinct().collect().map(_.get(0))
-    // null-safe throughout: a null-partition delta/tombstone must pull its
-    // base files into the rewrite and its rows into the reconcile, or the
-    // compaction would drop the upserts and resurrect the tombstoned rows
-    val pred = touchedPred(partitionCol, touchedVals.toSeq)
-    // planning scan: base files in delta-touched partitions (control-plane)
-    val touchedBase =
-      if (bases.isEmpty) Seq.empty[String]
-      else planTouchedFiles(spark, dir, schema, bases, pred)
-    val keptBase = bases.filterNot(touchedBase.contains)
-    val reconciled0 = readMorVersion(spark, dir, prevV, schema, pk, partitionCol)
-      .filter(pred)
-    // optional clustering: range-lay the rewrite on (partition, layout key)
-    // so each new base file covers a contiguous key range — the layout that
-    // makes [[writeStats]] zone maps selective (compaction is the natural,
-    // already-paid-for moment to restore it)
-    val reconciled = layoutBy match {
-      case Some(c) =>
-        val n = if (filesPerPartition > 0) filesPerPartition * math.max(1, touchedVals.length)
-                else spark.sessionState.conf.numShufflePartitions
-        reconciled0.repartitionByRange(n, col(partitionCol), col(c))
-      case None => reconciled0
+    commit(spark, dir, prevV, files) { v =>
+      if (deltas.isEmpty) files
+      else {
+        val touchedVals = readFiles(spark, dir, schema, deltas)
+          .select(partitionCol).distinct().collect().map(_.get(0))
+        // null-safe throughout: a null-partition delta/tombstone must pull its
+        // base files into the rewrite and its rows into the reconcile, or the
+        // compaction would drop the upserts and resurrect the tombstoned rows
+        val pred = touchedPred(partitionCol, touchedVals.toSeq)
+        // planning scan: base files in delta-touched partitions (control-plane)
+        val touchedBase =
+          if (bases.isEmpty) Seq.empty[String]
+          else planTouchedFiles(spark, dir, schema, bases, pred)
+        val reconciled0 = reconcile(spark, dir, schema, files, pk, partitionCol)
+          .filter(pred)
+        // optional clustering: range-lay the rewrite on (partition, layout key)
+        // so each new base file covers a contiguous key range — the layout that
+        // makes [[writeStats]] zone maps selective (compaction is the natural,
+        // already-paid-for moment to restore it)
+        val reconciled = layoutBy match {
+          case Some(c) =>
+            val n = if (filesPerPartition > 0) filesPerPartition * math.max(1, touchedVals.length)
+                    else spark.sessionState.conf.numShufflePartitions
+            reconciled0.repartitionByRange(n, col(partitionCol), col(c))
+          case None => reconciled0
+        }
+        bases.filterNot(touchedBase.contains) ++ stageAndMove(reconciled, dir, partitionCol, v)
+      }
     }
-    val moved = stageAndMove(reconciled, dir, partitionCol, v)
-    writeManifest(spark, dir, v, keptBase ++ moved, Some(files))
-    v
   }
 
   /** Row-level DELETE WHERE on the versioned lake — the GDPR-erasure /
@@ -644,34 +642,20 @@ object FileSink {
     * rewrite the table — which is the honest physics of row deletion.
     * Commits and returns the new version. */
   def deleteWhereVersioned(spark: SparkSession, dir: String, schema: StructType,
-                           predicate: org.apache.spark.sql.Column,
+                           predicate: Column,
                            partitionCol: String): Int = {
-    val fs = fsFor(spark, dir)
-    val prevV = currentVersion(spark, dir)
-    require(prevV >= 1, s"deleteWhereVersioned: no committed version under $dir")
-    val prevFiles = readManifest(spark, dir, prevV)
-    require(!prevFiles.exists(isDelta),
-      s"deleteWhereVersioned: $dir has MOR delta files — run compactMor first")
-    val paths = prevFiles.map(f => s"$dir/$f")
-    val baseLen = new org.apache.hadoop.fs.Path(dir).toUri.getPath
-    val affected = spark.read.option("basePath", dir).schema(schema)
-      .parquet(paths: _*).filter(predicate)
-      .select(org.apache.spark.sql.functions.input_file_name().as("f"))
-      .distinct().collect()
-      .map(r => new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
-        .toUri.getPath.stripPrefix(baseLen).stripPrefix("/"))
-      .toSet // control-plane: one row per affected file
-    val v = prevV + 1
-    if (affected.isEmpty) { writeManifest(spark, dir, v, prevFiles, Some(prevFiles)); return v }
-    val kept = prevFiles.filterNot(affected.contains)
-    val survivors = spark.read.option("basePath", dir).schema(schema)
-      .parquet(affected.map(f => s"$dir/$f").toSeq: _*)
-      // DELETE WHERE p removes rows where p is TRUE; null-p rows SURVIVE
-      .filter(!org.apache.spark.sql.functions.coalesce(predicate,
-        org.apache.spark.sql.functions.lit(false)))
-    val moved = stageAndMove(survivors, dir, partitionCol, v)
-    writeManifest(spark, dir, v, kept ++ moved, Some(prevFiles))
-    v
+    val (prevV, prevFiles) = head(spark, dir, "deleteWhereVersioned")
+    plainRows("deleteWhereVersioned", dir, prevV, prevFiles)
+    commit(spark, dir, prevV, prevFiles) { v =>
+      val affected = planTouchedFiles(spark, dir, schema, prevFiles, predicate)
+      if (affected.isEmpty) prevFiles
+      else {
+        val survivors = readFiles(spark, dir, schema, affected)
+          // DELETE WHERE p removes rows where p is TRUE; null-p rows SURVIVE
+          .filter(!coalesce(predicate, lit(false)))
+        prevFiles.filterNot(affected.toSet) ++ stageAndMove(survivors, dir, partitionCol, v)
+      }
+    }
   }
 
   // ---- manifest stats (zone maps → file skipping) -----------------------
@@ -687,39 +671,27 @@ object FileSink {
     * "could match". Numeric (integral/floating) stat columns only. */
   def writeStats(spark: SparkSession, dir: String, v: Int, schema: StructType,
                  statCols: Seq[String]): Unit = {
-    import org.apache.spark.sql.functions._
     statCols.foreach { c =>
       val dt = schema(c).dataType
       require(dt.isInstanceOf[org.apache.spark.sql.types.NumericType],
         s"writeStats: non-numeric stat column $c ($dt)")
     }
-    val fs = fsFor(spark, dir)
-    val manifest = readManifest(spark, dir, v)
-    require(!manifest.exists(isDelta),
-      s"writeStats: $dir@v$v has MOR delta files — run compactMor first " +
-        "(zone maps are a plain-row contract; tombstones/deltas have no stats meaning)")
-    val prev: Map[String, Map[String, (Double, Double)]] =
-      if (v > 1 && fs.exists(new org.apache.hadoop.fs.Path(statsPath(dir, v - 1))))
-        readStats(spark, dir, v - 1)
-      else Map.empty
-    val known = prev.keySet
-    val fresh = manifest.filterNot(known)
-    val baseUriPath = new org.apache.hadoop.fs.Path(dir).toUri.getPath
+    // zone maps are a plain-row contract: deltas/tombstones have no stats meaning
+    val manifest = plainRows("writeStats", dir, v, readManifest(spark, dir, v))
+    val prev = readStats(spark, dir, v - 1)
+    val fresh = manifest.filterNot(prev.keySet)
     val scanned: Map[String, Map[String, (Double, Double)]] =
       if (fresh.isEmpty) Map.empty
       else {
         val aggs = statCols.flatMap(c => Seq(
           min(col(c).cast("double")).as(s"__min_$c"),
           max(col(c).cast("double")).as(s"__max_$c")))
-        spark.read.option("basePath", dir).schema(schema)
-          .parquet(fresh.map(f => s"$dir/$f"): _*)
+        readFiles(spark, dir, schema, fresh)
           .groupBy(input_file_name().as("__f"))
           .agg(aggs.head, aggs.tail: _*)
           .collect() // control-plane: one row per NEW file
           .map { r =>
-            val rel = new org.apache.hadoop.fs.Path(new java.net.URI(r.getString(0)))
-              .toUri.getPath.stripPrefix(baseUriPath).stripPrefix("/")
-            rel -> statCols.flatMap { c =>
+            relPath(dir, r.getString(0)) -> statCols.flatMap { c =>
               val lo = r.getAs[Any](s"__min_$c"); val hi = r.getAs[Any](s"__max_$c")
               if (lo == null || hi == null) None
               else Some(c -> (lo.asInstanceOf[Double], hi.asInstanceOf[Double]))
@@ -738,14 +710,14 @@ object FileSink {
       }
       om.writeValueAsString(node)
     }
-    val out = fs.create(new org.apache.hadoop.fs.Path(statsPath(dir, v)), false)
-    try out.write((lines.mkString("\n") + "\n").getBytes("UTF-8"))
-    finally out.close()
+    writeLines(fsFor(spark, dir), statsPath(dir, v), lines)
   }
 
+  /** Version `v`'s zone maps; empty when `v` has no stats sidecar. */
   private def readStats(spark: SparkSession, dir: String,
                         v: Int): Map[String, Map[String, (Double, Double)]] = {
     val fs = fsFor(spark, dir)
+    if (!fs.exists(new Path(statsPath(dir, v)))) return Map.empty
     val om = new com.fasterxml.jackson.databind.ObjectMapper()
     readLines(fs, statsPath(dir, v)).map { line =>
       val node = om.readTree(line)
@@ -768,16 +740,9 @@ object FileSink {
   def readVersionWhere(spark: SparkSession, dir: String, v: Int,
                        schema: StructType, statCol: String,
                        lowerBound: Double, upperBound: Double): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val files = readManifest(spark, dir, v)
-    require(!files.exists(isDelta),
-      s"readVersionWhere: $dir@v$v has MOR delta files — run compactMor first " +
-        "(a plain-row read would surface stale base rows and tombstone phantoms)")
+    val files = plainRows("readVersionWhere", dir, v, readManifest(spark, dir, v))
     // a version without a stats sidecar is legal: no zone maps → no pruning
-    val stats =
-      if (fsFor(spark, dir).exists(new org.apache.hadoop.fs.Path(statsPath(dir, v))))
-        readStats(spark, dir, v)
-      else Map.empty[String, Map[String, (Double, Double)]]
+    val stats = readStats(spark, dir, v)
     val kept = files.filter { f =>
       stats.get(f).flatMap(_.get(statCol)) match {
         // one-ULP widening: stats stored as doubles round BIGINTs past 2^53;
@@ -791,9 +756,7 @@ object FileSink {
     val residual = col(statCol) >= lowerBound && col(statCol) <= upperBound
     if (kept.isEmpty)
       spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], schema)
-    else spark.read.option("basePath", dir).schema(schema)
-      .parquet(kept.map(f => s"$dir/$f"): _*)
-      .filter(residual)
+    else readFiles(spark, dir, schema, kept).filter(residual)
   }
 
   /** Drop manifest metadata no longer needed to resolve any version ≥
@@ -806,16 +769,14 @@ object FileSink {
     val fs = fsFor(spark, dir)
     // newest full checkpoint at or below keepFrom — everything older than it
     // can never participate in resolving keepFrom..current
-    var ck = keepFrom
-    while (ck >= 1 && !fs.exists(new org.apache.hadoop.fs.Path(manifestPath(dir, ck)))) ck -= 1
-    require(ck >= 1, s"vacuumManifests: no checkpoint at or below v$keepFrom under $dir")
+    val ck = checkpointAtOrBelow(fs, dir, keepFrom, "vacuumManifests")
     var n = 0L
     (1 until ck).foreach { v =>
       // stats sidecars reclaim with their version, or zone-map metadata
       // accretes forever on a daily-commit table
       Seq(manifestPath(dir, v), deltaManifestPath(dir, v), statsPath(dir, v))
         .foreach { p =>
-          if (fs.delete(new org.apache.hadoop.fs.Path(p), false)) n += 1
+          if (fs.delete(new Path(p), false)) n += 1
         }
     }
     n
@@ -830,7 +791,7 @@ object FileSink {
     val all = listDataFiles(fs, dir)
     var n = 0L
     all.filterNot(live.contains).foreach { f =>
-      if (fs.delete(new org.apache.hadoop.fs.Path(s"$dir/$f"), false)) n += 1
+      if (fs.delete(new Path(s"$dir/$f"), false)) n += 1
     }
     n
   }
@@ -842,9 +803,8 @@ object FileSink {
     * (never read-and-overwrite in place). */
   def compact(spark: SparkSession, dir: String, targetFileMB: Int = 128,
               format: String = "parquet"): Long = {
-    val fs = org.apache.hadoop.fs.FileSystem.get(
-      new java.net.URI(dir), spark.sparkContext.hadoopConfiguration)
-    val path = new org.apache.hadoop.fs.Path(dir)
+    val fs = fsFor(spark, dir)
+    val path = new Path(dir)
     val bytes = fs.getContentSummary(path).getLength
     val files = math.max(1, (bytes / (targetFileMB * 1024L * 1024L)).toInt)
     val df = format match {
@@ -852,7 +812,7 @@ object FileSink {
       case "orc"     => spark.read.orc(dir)
       case other     => throw new IllegalArgumentException(s"compact: $other")
     }
-    val staged = new org.apache.hadoop.fs.Path(dir + "__compact")
+    val staged = new Path(dir + "__compact")
     val w = df.repartition(files).write.mode(SaveMode.Overwrite)
     format match { case "parquet" => w.parquet(staged.toString); case _ => w.orc(staged.toString) }
     fs.delete(path, true)

@@ -92,16 +92,16 @@ final case class JdbcSink(url: String, dialect: Dialect,
     }
   }
 
-  /** [[ensureTable]] behind the schema cache + per-table DDL lock (B6,
-    * table_helper.go:285-353): a cached spec that already covers the batch's
-    * columns costs ZERO catalog round-trips; anything else takes the table
-    * lock and hits the real catalog. Call [[invalidate]] after a load error
-    * so the next batch re-reads reality. */
   /** Cache key includes the namespace — same-named tables in two schemas
     * are different tables. */
   private def cacheKey(table: String, namespace: Option[String]): String =
     namespace.map(_ + ".").getOrElse("") + table
 
+  /** [[ensureTable]] behind the schema cache + per-table DDL lock (B6,
+    * table_helper.go:285-353): a cached spec that already covers the batch's
+    * columns costs ZERO catalog round-trips; anything else takes the table
+    * lock and hits the real catalog. Call [[invalidate]] after a load error
+    * so the next batch re-reads reality. */
   def ensureTableCached(spec: TableSpec): TableSpec = {
     val key = cacheKey(spec.name, spec.namespace)
     TableCache.get(url, key) match {

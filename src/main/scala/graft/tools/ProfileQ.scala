@@ -1,7 +1,6 @@
 package graft.tools
 
 import org.apache.spark.scheduler._
-import org.apache.spark.sql.SparkSession
 
 /** r20 optimization-round profiler: runs named registry queries solo (same
   * session shape as Bench) with a listener that attributes wall time to
@@ -19,14 +18,7 @@ object ProfileQ {
     val sfDir = args(0)
     val names = args(1).split(",").map(_.trim).filter(_.nonEmpty)
     val reps = if (args.length > 2) args(2).toInt else 1
-    val cpus = graft.SparkEntry.parseCpus(sys.env, 32)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus.toString)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.SparkEntry.localSession(32)
     // same first-use warm as Bench's cheap prefix (keep it short: the point
     // is per-stage attribution, not absolute parity with Bench)
     spark.range(1000).selectExpr("sum(id)").collect()

@@ -469,6 +469,44 @@ class FileSinkSpec extends SparkSuite {
     intercept[IllegalArgumentException] {
       FileSink.readVersionWhere(spark, dir, v2, schema, "id", 0, 10)
     }
+    // a plain read of v2 would return id=2@y twice (the superseded base row
+    // beside the delta row) — it must refuse instead
+    intercept[IllegalArgumentException] {
+      FileSink.readVersion(spark, dir, v2, schema)
+    }
+    intercept[IllegalArgumentException] {
+      FileSink.deleteWhereVersioned(spark, dir, schema, col("id") === 1L, "s")
+    }
+    assert(FileSink.currentVersion(spark, dir) == v2)
+  }
+
+  test("every head-reading lake operation refuses a directory with no committed version") {
+    val dir = tmp() + "/t"
+    data.write.partitionBy("s").parquet(dir)
+    def listing(): Map[String, Long] = {
+      def walk(f: java.io.File): Seq[java.io.File] =
+        if (f.isDirectory) f.listFiles().toSeq.flatMap(walk) else Seq(f)
+      walk(new java.io.File(dir)).map(f => f.getPath -> f.length).toMap
+    }
+    val before = listing()
+    val changes = df("id BIGINT, v DOUBLE, s STRING", Seq(Row(2L, 9.0, "y")))
+    val ops: Seq[(String, () => Any)] = Seq(
+      "mergeCowVersioned" -> (() => FileSink.mergeCowVersioned(changes, dir, Seq("id"), "s")),
+      "mergeMorVersioned" -> (() => FileSink.mergeMorVersioned(changes, dir, Seq("id"), "s")),
+      "deleteMorVersioned" -> (() =>
+        FileSink.deleteMorVersioned(spark, dir, schema, col("id") === 1L, "s", Seq("id"))),
+      "compactMor" -> (() => FileSink.compactMor(spark, dir, schema, Seq("id"), "s")),
+      "maybeCompactMor" -> (() =>
+        FileSink.maybeCompactMor(spark, dir, schema, Seq("id"), "s", maxDeltas = 0)),
+      "deleteWhereVersioned" -> (() =>
+        FileSink.deleteWhereVersioned(spark, dir, schema, col("id") === 1L, "s")))
+    ops.foreach { case (name, op) =>
+      val e = intercept[IllegalArgumentException](op())
+      assert(e.getMessage.contains(name) && e.getMessage.contains("no committed version"),
+        e.getMessage)
+      assert(listing() == before, s"$name changed the directory")
+    }
+    assert(FileSink.currentVersion(spark, dir) == 0)
   }
 
   test("changeFeed between identical versions is empty; delete post-images are null") {
