@@ -1,7 +1,11 @@
 package graft
+import graft.queries.{Q, Registry, StreamOps}
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    // local-iteration filter: SPARK_GRAFT_ONLY=q1_agg,q3_join (unset → all);
+    // a subset run prints its lines but never overwrites BENCH.json
+    val only = SparkEntry.parseOnly(sys.env, SparkEntry.queries.keySet)
     val spark = SparkEntry.localSession(4)
     // the core count the session was built with, for the JSON line
     val cpus = spark.conf.get("spark.sql.shuffle.partitions").toInt
@@ -11,7 +15,7 @@ object Bench {
     spark.range(1000).selectExpr("sum(id)").collect()
     // warm the events read through the PRODUCTION loader so the warm path
     // can never diverge from what the queries actually execute
-    try graft.core.Tables.events(spark, sfDir).limit(10).collect()
+    try graft.core.Tables.events(Q.session(spark, Map.empty), sfDir).limit(10).collect()
     catch { case _: Throwable => () }
     try {
       import org.apache.spark.sql.expressions.Window
@@ -81,19 +85,19 @@ object Bench {
           (3L, "x y z w v u", "en", "s1", 11))
         .toDF("doc_id", "text", "lang", "source", "n_chars")
         .write.mode("overwrite").parquet(s"$toyDir/documents.parquet")
-      graft.queries.Registry.all("llm_ngram_jaccard").fn(spark, toyDir).collect()
+      Registry.all("llm_ngram_jaccard").run(spark, toyDir).collect()
       // ... and the MinHash band self-join + candidate-verify shape and the
       // clean-corpus enrichment (quality/lang lambda stack + window dedup +
       // anti-join): name-sorted execution puts llm_clean_corpus before every
       // other MinHash query, so without this warm it absorbs the entire
       // first-compile of that generated code (~5 s measured at sf0.1)
-      graft.queries.Registry.all("llm_minhash_lsh").fn(spark, toyDir).collect()
-      graft.queries.Registry.all("llm_clean_corpus").fn(spark, toyDir).collect()
+      Registry.all("llm_minhash_lsh").run(spark, toyDir).collect()
+      Registry.all("llm_clean_corpus").run(spark, toyDir).collect()
       // ... and the r20 exact prefix-join shape (df-sorted array aggregate +
       // prefix-slice self-join + array verify): name-sorted execution puts
       // llm_cluster_eval first in that family, so without this warm it
       // absorbs the family's entire first-compile
-      graft.queries.Registry.all("llm_prefix_join").fn(spark, toyDir).collect()
+      Registry.all("llm_prefix_join").run(spark, toyDir).collect()
       spark.sharedState.cacheManager.clearCache()
     } catch { case _: Throwable => () }
     try {
@@ -126,23 +130,15 @@ object Bench {
         .write.mode("overwrite").partitionBy("__seg").json(seg)
       // RocksDB state-store provider first-touch (native library load +
       // store init) — not per-query work, but q_stream_dedup_rocks was
-      // being charged it as the only RocksDB-backed query
+      // being charged it as the only RocksDB-backed query (on its conf's clone)
       val ck3 = java.nio.file.Files.createTempDirectory("graft_warm_ck3_").toString
-      val prevProv = spark.conf.getOption("spark.sql.streaming.stateStore.providerClass")
-      spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-      try
-        spark.readStream
-          .schema(org.apache.spark.sql.types.StructType.fromDDL("i BIGINT")).json(sdir)
-          .dropDuplicates("i")
-          .writeStream.option("checkpointLocation", ck3)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) => { df.count(); () })
-          .start().awaitTermination()
-      finally prevProv match {
-        case Some(p) => spark.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-        case None => spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-      }
+      Q.session(spark, StreamOps.RocksDb).readStream
+        .schema(org.apache.spark.sql.types.StructType.fromDDL("i BIGINT")).json(sdir)
+        .dropDuplicates("i")
+        .writeStream.option("checkpointLocation", ck3)
+        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+        .foreachBatch((df: org.apache.spark.sql.DataFrame, _: Long) => { df.count(); () })
+        .start().awaitTermination()
     } catch { case _: Throwable => () }
     try {
       // transactional JDBC load path: ensure + tmp table + MERGE on Derby —
@@ -156,40 +152,26 @@ object Bench {
       sink.loadMerge(df, spec) // specFor already dialect-adapts the pk
       spark.read.jdbc(sink.url, "\"WARM_MERGE\"", new java.util.Properties()).count()
     } catch { case _: Throwable => () }
-    // A failing query must NOT masquerade as a fast one: its timing is
-    // reported negative and its error recorded.
-    val errors = scala.collection.mutable.LinkedHashMap.empty[String, String]
-    // local-iteration filter: SPARK_GRAFT_ONLY=q1_agg,q3_join (unset → all)
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names.contains(q._1))
-      case None        => SparkEntry.queries
-    }
-    val results = selected.toSeq.sortBy(_._1).map { case (name, fn) =>
+    val queries = SparkEntry.queries
+    /** One query counted on a cleared cache: its seconds, or what it threw. */
+    def timed(name: String): Either[Throwable, Double] = {
       // queries are independent loads: drop the previous query's persisted
       // frames so a late query isn't taxed by sixty earlier caches' eviction
       // pressure (their persists exist to dedupe work WITHIN one query)
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
+      spark.sharedState.cacheManager.clearCache()
       val t0 = System.nanoTime()
-      val ok =
-        try { fn(spark, sfDir).count(); true }
-        catch { case e: Throwable =>
-          errors(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(200)
-          false
-        }
-      val sec = (System.nanoTime() - t0) / 1e9
-      name -> (if (ok) sec else -sec)
+      try { queries(name)(spark, sfDir).count(); Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(e) }
     }
-    def jstr(s: String) = "\"" + s.replace("\\", "\\\\").replace("\"", "\\\"")
-      .replaceAll("[\\n\\r\\t]", " ") + "\""
+    val results = queries.keys.filter(k => only.forall(_(k))).toSeq.sorted.map(k => k -> timed(k))
     // ms-rounded timings keep the artifact compact enough that a bounded
     // tail capture always holds every query; full precision adds nothing
     def ms(v: Double): String = BigDecimal(v).setScale(3, BigDecimal.RoundingMode.HALF_UP).toString
     // a failed query is BROKEN, not slow: it appears only in `errors`, never
     // in `queries`, and contributes nothing to the total
-    val good = results.filter(_._2 >= 0)
-    val errJson = errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
+    val good = results.collect { case (k, Right(v)) => k -> v }
+    val errJson = errorsJson(results.collect { case (k, Left(e)) =>
+      k -> Option(e.getMessage).getOrElse(e.getClass.getName).take(200) })
     // self-contained drift report: compare against the committed previous
     // round's BENCH.json (same path we are about to overwrite) so a >1.5×
     // per-query regression is visible in the artifact itself
@@ -231,17 +213,11 @@ object Bench {
     // nothing; a fully-polluted run costs one extra pass of the slow tail.
     val suspects = good.filter { case (k, v) =>
       baseline(k).exists(p => p > 0 && v > 1.5 * p && v > 0.5) }
+    // a FAILED solo re-run must not masquerade as a fast one (it passed the
+    // full pass, so the failure is re-run flakiness): keep the honest
+    // full-pass time rather than the time-to-crash
     val soloTimes: Map[String, Double] = suspects.map { case (name, fullSec) =>
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
-      val t0 = System.nanoTime()
-      val ok = try { SparkEntry.queries(name)(spark, sfDir).count(); true }
-        catch { case _: Throwable => false }
-      // a FAILED solo re-run must not masquerade as a fast one (it passed
-      // the full pass, so the failure is re-run flakiness): keep the honest
-      // full-pass time rather than the time-to-crash
-      name -> (if (ok) (System.nanoTime() - t0) / 1e9 else fullSec)
-    }.toMap
+      name -> timed(name).getOrElse(fullSec) }.toMap
     val arbitrated = good.map { case (k, v) => k -> soloTimes.getOrElse(k, v) }
     val qsArb = arbitrated.map { case (k, v) => jstr(k) + ":" + ms(v) }.mkString("{", ",", "}")
     val totalArb = arbitrated.map(_._2).sum
@@ -256,9 +232,11 @@ object Bench {
     val regJson = regressions.mkString("{", ",", "}")
     val prevJson = prevTotal.map(t => s""","prev_total":${ms(t)}""").getOrElse("")
     val line = s"""{"metric":"total","value":${ms(totalArb)},"unit":"sec"$prevJson,"queries":$qsArb,"errors":$errJson,"regressions":$regJson,"arbitration":{"suspects":${suspects.size},"cleared":$cleared},"sf":"$sfDir","cpus":$cpus}"""
-    // durable copy at the repo root: survives any stdout truncation
-    try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), line + "\n")
-    catch { case _: Throwable => () }
+    // durable copy at the repo root: survives any stdout truncation; only a
+    // full run lands there
+    if (only.isEmpty)
+      try java.nio.file.Files.writeString(java.nio.file.Paths.get("BENCH.json"), line + "\n")
+      catch { case _: Throwable => () }
     // The driver keeps only the LAST ~2000 chars of stdout, and sbt appends
     // a "[success] Total time…" trailer after us — a 136-query line (~4.5 KB)
     // can never survive that window whole. So: print the FULL line first
@@ -285,4 +263,11 @@ object Bench {
     println(summary)
     System.out.flush()
   }
+
+  /** A one-line JSON string: newlines and tabs become spaces. */
+  def jstr(s: String): String = Verify.jsonStr(s.replaceAll("[\\n\\r\\t]", " "))
+
+  /** The `"errors"` object: query name → message. */
+  def errorsJson(errors: Iterable[(String, String)]): String =
+    errors.map { case (k, v) => jstr(k) + ":" + jstr(v) }.mkString("{", ",", "}")
 }

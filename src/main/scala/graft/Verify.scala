@@ -5,22 +5,17 @@ import java.nio.file.{Files, Paths}
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val spark = SparkEntry.localSession(4)
-    new java.io.File(outDir).mkdirs()
     // local-iteration filter (oracle_sql.json still carries every query so
     // the DuckDB compare can run on the dumped subset); unset → all
-    val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").map(_.trim).toSet)
-    val selected = only match {
-      case Some(names) => SparkEntry.queries.filter(q => names.contains(q._1))
-      case None        => SparkEntry.queries
-    }
-    selected.foreach { case (name, fn) =>
+    val only = SparkEntry.parseOnly(sys.env, SparkEntry.queries.keySet)
+    val spark = SparkEntry.localSession(4)
+    new java.io.File(outDir).mkdirs()
+    SparkEntry.queries.filter(q => only.forall(_(q._1))).foreach { case (name, fn) =>
       // queries are independent: drop the previous query's persisted frames
       // so a late query isn't taxed by sixty earlier caches' eviction
       // pressure (same fix as Bench; the persists dedupe work WITHIN one
       // query only)
-      try spark.sharedState.cacheManager.clearCache()
-      catch { case _: Throwable => () }
+      spark.sharedState.cacheManager.clearCache()
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>

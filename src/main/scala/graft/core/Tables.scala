@@ -43,8 +43,8 @@ object Tables {
 
   /** The driver has regenerated `events.parquet` with different physical
     * encodings for `ts` across rounds — TIMESTAMP(NANOS) (unrepresentable in
-    * Spark's µs TimestampType, read as raw long via
-    * `spark.sql.legacy.parquet.nanosAsLong`), then TIMESTAMP(MICROS,
+    * Spark's µs TimestampType, read as raw long via the runner default
+    * `spark.sql.legacy.parquet.nanosAsLong`, `Q.Defaults`), then TIMESTAMP(MICROS,
     * isAdjustedToUTC=false) (Spark TIMESTAMP_NTZ). The loader is therefore
     * encoding-agnostic: it branches on the dtype Spark actually loaded and
     * always exposes the same three columns:
@@ -56,7 +56,6 @@ object Tables {
     * against the NTZ epoch literal — session-timezone-independent, so the
     * result is the same whether or not the caller set session.timeZone=UTC. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = apply(s, d, "events")
     val tsNanos = raw.schema("ts").dataType match {
       case org.apache.spark.sql.types.LongType => // parquet TIMESTAMP(NANOS) → raw nanos

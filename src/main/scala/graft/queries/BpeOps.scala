@@ -782,13 +782,13 @@ object BpeOps {
   def qs: Map[String, Q] = Map(
     "llm_tokenize_pack" -> Q(tokenizePack, Some(tokenizePackOracle)),
     "llm_bpe_train"  -> Q(bpeTrain, Some(bpeTrainOracle)),
-    "llm_bpe_train_dist" -> Q(Tuning.fewerShuffles(bpeTrainDist), Some(bpeTrainOracle)),
+    "llm_bpe_train_dist" -> Q(bpeTrainDist, Some(bpeTrainOracle), Tuning.Narrow),
     "llm_bpe_encode" -> Q(bpeEncode, Some(bpeEncodeOracle)),
     "llm_bpe_bytes"  -> Q(bpeBytes, Some(bpeBytesOracle)),
     "llm_bpe_bytes_roundtrip" -> Q(bpeBytesRoundtrip, Some(bpeBytesRoundtripOracle)),
     "llm_bpe_roundtrip" -> Q(bpeRoundtrip, Some(bpeRoundtripOracle)),
     "llm_wordpiece_train"  -> Q(wordpieceTrain, Some(wpTrainOracle)),
-    "llm_wordpiece_train_dist" -> Q(Tuning.fewerShuffles(wordpieceTrainDist), Some(wpTrainOracle)),
+    "llm_wordpiece_train_dist" -> Q(wordpieceTrainDist, Some(wpTrainOracle), Tuning.Narrow),
     "llm_wordpiece_encode" -> Q(wordpieceEncode, Some(wpEncodeOracle)),
     "llm_viterbi_segment" -> Q(viterbiSegment, Some(viterbiOracle)),
     "llm_unigram_train" -> Q(unigramTrain, Some(uniTrainOracle)),

@@ -4,26 +4,42 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** One driver-checkable query: a Spark implementation plus (where the
   * semantics are ANSI-SQL-expressible) a DuckDB oracle over the same parquet
-  * tables. Column names/types must agree exactly between the two. */
-final case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String])
+  * tables. Column names/types must agree exactly between the two. `conf` is
+  * the session conf the query needs; [[run]] applies it, `fn` alone runs at
+  * the caller's conf. */
+final case class Q(fn: (SparkSession, String) => DataFrame, oracle: Option[String],
+                   conf: Map[String, String] = Map.empty) {
+  /** `fn` on `Q.session(s, conf)`; the lazy frame it returns stays bound to
+    * that clone, so it also executes under that conf. */
+  def run(s: SparkSession, d: String): DataFrame = fn(Q.session(s, conf), d)
+}
 
-/** Shared per-query tuning wrappers. */
-private[queries] object Tuning {
-  /** Run a query at [[controlShuffle]] shuffle partitions, restoring the
-    * session conf after.
-    * For CONTROL-PLANE-shaped queries — state-backed streams (a
-    * stream-stream join commits 4 state stores PER partition every
-    * micro-batch) and iterative trainers whose per-round jobs aggregate
-    * small cached frames — where 32 post-shuffle tasks are pure scheduling
-    * overhead. Never for CPU-heavy fan-out work, where task width IS the
-    * parallelism. Results must be partitioning-independent (exact
-    * integer/decimal aggregates, totally-ordered TakeOrdered). */
-  def fewerShuffles(fn: (SparkSession, String) => DataFrame)
-                   (s: SparkSession, d: String): DataFrame = {
-    val prev = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", controlShuffle.toString)
-    try fn(s, d) finally s.conf.set("spark.sql.shuffle.partitions", prev)
+object Q {
+  /** Runner default: `events.parquet` has shipped `ts` as TIMESTAMP(NANOS),
+    * which Spark reads only as raw longs (see `Tables.events`). */
+  val Defaults: Map[String, String] = Map("spark.sql.legacy.parquet.nanosAsLong" -> "true")
+
+  /** A clone of `s` (same runtime conf, strategies and cache manager) with
+    * [[Defaults]] and then `conf` set on it; `s` itself is never written. */
+  def session(s: SparkSession, conf: Map[String, String]): SparkSession = {
+    val c = org.apache.spark.sql.GraftExpressions.cloneSession(s)
+    (Defaults ++ conf).foreach { case (k, v) => c.conf.set(k, v) }
+    c
   }
+}
+
+/** Shared per-query tuning. */
+private[queries] object Tuning {
+  /** Conf of CONTROL-PLANE-shaped queries: [[controlShuffle]] shuffle
+    * partitions. For state-backed streams (a stream-stream join commits 4
+    * state stores PER partition every micro-batch) and iterative trainers
+    * whose per-round jobs aggregate small cached frames — where 32
+    * post-shuffle tasks are pure scheduling overhead. Never for CPU-heavy
+    * fan-out work, where task width IS the parallelism. Results must be
+    * partitioning-independent (exact integer/decimal aggregates,
+    * totally-ordered TakeOrdered). */
+  lazy val Narrow: Map[String, String] =
+    Map("spark.sql.shuffle.partitions" -> controlShuffle.toString)
 
   /** Partition width of control-plane queries, from
     * `SPARK_GRAFT_CONTROL_SHUFFLE` (default 4), read once. A deployment

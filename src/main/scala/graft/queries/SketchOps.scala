@@ -1026,16 +1026,7 @@ object SketchOps {
       when(x >= 0, (x - pmod(x, lit(den))) / lit(den))
         .otherwise(-((-x - pmod(-x, lit(den))) / lit(den))).cast(LongType)
 
-    // the epoch aggregates reduce into ≤ 2·V·D groups — model-bounded, not
-    // corpus-bounded — so 8 reduce tasks is the right width at ANY corpus
-    // size (the map side keeps the cached frame's full parallelism). The
-    // corpus-scale pair build above stays at session width.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    // stays at the r16 value: r21 A/B (flipped-order 3-rep solo minima)
-    // read 3.88 s at 8 vs 4.46 s at 4 — sgns epochs are literal-compile +
-    // map-side bound, not reducer-commit bound like the streams
-    s.conf.set("spark.sql.shuffle.partitions", "8")
-    try for (_ <- 1 to SgnsEpochs) {
+    for (_ <- 1 to SgnsEpochs) {
       val uLit = typedLit(u.map(_.toSeq).toSeq)
       val vLit = typedLit(v.map(_.toSeq).toSeq)
       // element_at is 1-based: row for vid sits at position vid + 1
@@ -1081,7 +1072,7 @@ object SketchOps {
         m(vid)(j) = math.max(-SgnsClamp.toLong,
           math.min(SgnsClamp.toLong, m(vid)(j) - delta))
       }
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    }
     samples.unpersist()
     (1 to vocabN).flatMap(vid => (0 until D).map(j =>
       (vid.toLong, j.toLong, u(vid)(j), v(vid)(j))))
@@ -1338,7 +1329,12 @@ object SketchOps {
     "llm_source_sim"   -> Q(sourceSim, Some(sourceSimOracle)),
     "llm_pmi"          -> Q(pmi, Some(pmiOracle)),
     "llm_skipgram"     -> Q(skipgram, Some(skipgramOracle)),
-    "llm_sgns_train"   -> Q(sgnsTrain, Some(sgnsOracle)),
+    // the epoch aggregates reduce into ≤ 2·V·D groups (model-bounded), so 8
+    // reduce tasks is the right width at ANY corpus size. 8, not Narrow's 4:
+    // r21 A/B read 3.88 s at 8 vs 4.46 s at 4 — sgns epochs are
+    // literal-compile + map-side bound, not reducer-commit bound
+    "llm_sgns_train"   -> Q(sgnsTrain, Some(sgnsOracle),
+      Map("spark.sql.shuffle.partitions" -> "8")),
     "llm_kmv_distinct" -> Q(kmvDistinct, Some(kmvOracle)),
     "llm_hll_distinct" -> Q(hllDistinct, Some(hllOracle)),
     "q_heavy_hitters"  -> Q(heavyHitters, Some(heavyHittersOracle)),

@@ -1210,27 +1210,8 @@ object StreamOps {
     * watermark, so the duplicates are suppressed by dedup STATE — and that
     * state is evicted as the watermark passes, which is what makes the
     * operator viable on an unbounded stream. Output must equal the original
-    * event set exactly. */
-  def qStreamDedup(s: SparkSession, d: String): DataFrame =
-    streamDedup(s, d, "/tmp/graft_sdedup", rocksDb = false)
-
-  /** [[qStreamDedup]] on the RocksDB state store — the bounded-MEMORY state
-    * backend for corpus-scale streaming state. The default (HDFS-backed)
-    * provider keeps every in-flight key in executor heap, which caps how
-    * much dedup state one executor can hold; RocksDB spills state to local
-    * disk with an in-heap block cache, so watermark-bounded state can grow
-    * to disk size instead of heap size — the difference between "dedup the
-    * last 2 hours" and "dedup the last 2 days" at 100 TB/day. Same query,
-    * same watermark, same oracle: the backend must be invisible in the
-    * result. */
-  def qStreamDedupRocks(s: SparkSession, d: String): DataFrame =
-    streamDedup(s, d, "/tmp/graft_sdedup_rocks", rocksDb = true)
-
-  private val RocksProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  private def streamDedup(s: SparkSession, d: String, base: String,
-                          rocksDb: Boolean): DataFrame = {
+    * event set exactly. `base` is the query's own work directory. */
+  def qStreamDedup(base: String)(s: SparkSession, d: String): DataFrame = {
     rmrf(s, base)
     val ev = Tables.events(s, d)
       .select(col("event_id"), col("user_id"), col("event_type"),
@@ -1261,26 +1242,15 @@ object StreamOps {
       StructField("event_type", StringType), StructField("value", DoubleType),
       StructField("ts_ms", LongType)))
     val out = s"$base/out"
-    // the provider is a session conf read at query START (baked into the
-    // checkpoint thereafter) — set, start, restore
-    val prevProvider =
-      if (rocksDb) Some(s.conf.get("spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"))
-      else None
-    if (rocksDb) s.conf.set("spark.sql.streaming.stateStore.providerClass", RocksProvider)
-    try {
-      val query = s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
-        .parquet(s"$base/input")
-        .withColumn("ts", timestamp_millis(col("ts_ms")))
-        .withWatermark("ts", "2 hours")
-        .dropDuplicatesWithinWatermark("event_id")
-        .writeStream.format("parquet").option("path", out)
-        .option("checkpointLocation", s"$base/ckpt")
-        .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-        .start()
-      query.awaitTermination()
-    } finally prevProvider.foreach(
-      s.conf.set("spark.sql.streaming.stateStore.providerClass", _))
+    s.readStream.schema(schema).option("maxFilesPerTrigger", 1)
+      .parquet(s"$base/input")
+      .withColumn("ts", timestamp_millis(col("ts_ms")))
+      .withWatermark("ts", "2 hours")
+      .dropDuplicatesWithinWatermark("event_id")
+      .writeStream.format("parquet").option("path", out)
+      .option("checkpointLocation", s"$base/ckpt")
+      .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
+      .start().awaitTermination()
     s.read.parquet(out).select("event_id", "user_id", "event_type", "value")
   }
 
@@ -1837,40 +1807,42 @@ object StreamOps {
     EventOps.ewmaTail(s.table("graft_sewma_daily").localCheckpoint(true))
   }
 
-  /** Run a registry query under a reduced shuffle-partition count, restoring
-    * the session's value after. Streaming state (a stream-stream join keeps
-    * FOUR stores per partition; dedup/aggregates one or two) and per-micro-
-    * batch task fan-out both scale with `spark.sql.shuffle.partitions` — at
-    * bench scale the micro-batches are small enough that 32 partitions make
-    * state-store commits ~85% of the runtime (q_stream_join: 30→7 s at 8).
-    * On a real cluster the SAME knob is sized to the stream's key
-    * cardinality, not the CPU count — which is exactly what this models.
-    * The conf is read at query start and baked into the fresh checkpoint,
-    * so restoring after the call cannot affect the stream. */
-  private def fewerShuffles(fn: (SparkSession, String) => DataFrame)
-                           (s: SparkSession, d: String): DataFrame =
-    Tuning.fewerShuffles(fn)(s, d)
+  /** [[qStreamDedup]]'s conf for the RocksDB state store — the
+    * bounded-MEMORY state backend for corpus-scale streaming state. The
+    * default (HDFS-backed) provider keeps every in-flight key in executor
+    * heap, which caps how much dedup state one executor can hold; RocksDB
+    * spills state to local disk with an in-heap block cache, so
+    * watermark-bounded state can grow to disk size instead of heap size —
+    * the difference between "dedup the last 2 hours" and "dedup the last 2
+    * days" at 100 TB/day. Same query, same watermark, same oracle: the
+    * backend must be invisible in the result. The provider is read at query
+    * start and baked into the checkpoint thereafter. */
+  val RocksDb: Map[String, String] = Map(
+    "spark.sql.streaming.stateStore.providerClass" ->
+      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
 
   def qs: Map[String, Q] = Map(
-    "q_stream_lake_merge" -> Q(fewerShuffles(qStreamLakeMerge), Some(streamLakeMergeOracle)),
-    "q_stream_mor_merge"  -> Q(fewerShuffles(qStreamMorMerge), Some(streamLakeMergeOracle)),
+    "q_stream_lake_merge" -> Q(qStreamLakeMerge, Some(streamLakeMergeOracle), Tuning.Narrow),
+    "q_stream_mor_merge"  -> Q(qStreamMorMerge, Some(streamLakeMergeOracle), Tuning.Narrow),
     // neardup/ann stay at full width: their micro-batches are CPU-heavy
     // (signatures / cell assignment), so task fan-out IS the work there
     "q_stream_ann"      -> Q(qStreamAnn, Some(LlmOps.annIvfOracle)),
     "q_stream_neardup"  -> Q(qStreamNearDup, Some(streamNearDupOracle)),
-    "q_stream_hll"      -> Q(fewerShuffles(qStreamHll), Some(streamHllOracle)),
-    "q_stream_cms"      -> Q(fewerShuffles(qStreamCms), Some(SketchOps.heavyHittersOracle)),
-    "q_stream_quantile" -> Q(fewerShuffles(qStreamQuantile), Some(EventOps.histQuantileOracle)),
-    "q_stream_anomaly"  -> Q(fewerShuffles(qStreamAnomaly), Some(EventOps.anomalyOracle)),
-    "q_stream_ewma"     -> Q(fewerShuffles(qStreamEwma), Some(EventOps.ewmaOracle)),
-    "q_stream_enrich"   -> Q(fewerShuffles(qStreamEnrich), Some(streamEnrichOracle)),
+    "q_stream_hll"      -> Q(qStreamHll, Some(streamHllOracle), Tuning.Narrow),
+    "q_stream_cms"      -> Q(qStreamCms, Some(SketchOps.heavyHittersOracle), Tuning.Narrow),
+    "q_stream_quantile" -> Q(qStreamQuantile, Some(EventOps.histQuantileOracle), Tuning.Narrow),
+    "q_stream_anomaly"  -> Q(qStreamAnomaly, Some(EventOps.anomalyOracle), Tuning.Narrow),
+    "q_stream_ewma"     -> Q(qStreamEwma, Some(EventOps.ewmaOracle), Tuning.Narrow),
+    "q_stream_enrich"   -> Q(qStreamEnrich, Some(streamEnrichOracle), Tuning.Narrow),
     "q_session_window"  -> Q(qSessionWindow, Some(sessionWindowOracle)),
-    "q_stream_dedup"    -> Q(fewerShuffles(qStreamDedup), Some(streamDedupOracle)),
-    "q_stream_dedup_rocks" -> Q(fewerShuffles(qStreamDedupRocks), Some(streamDedupOracle)),
+    "q_stream_dedup"    -> Q(qStreamDedup("/tmp/graft_sdedup"), Some(streamDedupOracle),
+      Tuning.Narrow),
+    "q_stream_dedup_rocks" -> Q(qStreamDedup("/tmp/graft_sdedup_rocks"),
+      Some(streamDedupOracle), Tuning.Narrow ++ RocksDb),
     "q_interval_join"   -> Q(qIntervalJoin, Some(intervalJoinOracle)),
-    "q_stream_join"     -> Q(fewerShuffles(qStreamJoin), Some(intervalJoinOracle)),
+    "q_stream_join"     -> Q(qStreamJoin, Some(intervalJoinOracle), Tuning.Narrow),
     "q_sessionize"      -> Q(qSessionize, Some(sessionizeOracle)),
-    "b1_stream_window"  -> Q(fewerShuffles(b1StreamWindow), Some(b1Oracle)),
+    "b1_stream_window"  -> Q(b1StreamWindow, Some(b1Oracle), Tuning.Narrow),
     "b4_retry_pipeline" -> Q(b4RetryPipeline, Some(b4Oracle)),
     "b5_routing"        -> Q(b5Routing, Some(b5Oracle)),
     "b6_filters"        -> Q(b6Filters, Some(b6Oracle)),

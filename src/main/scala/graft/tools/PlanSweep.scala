@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Plan-shape sweep: flag scale red-flags (rangepartitioning = global sort,
   * CartesianProduct / BroadcastNestedLoop = pair blowup) in every registry
   * query's executed plan, and FAIL (exit 1) when a flag appears outside the
@@ -47,16 +45,12 @@ object PlanSweep {
 
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false").getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.SparkEntry.localSession(8)
     var unlisted = List.empty[String]
     var errors = List.empty[String]
     graft.queries.Registry.all.toSeq.sortBy(_._1).foreach { case (name, q) =>
       try {
-        val plan = q.fn(spark, sfDir).queryExecution.executedPlan.toString
+        val plan = q.run(spark, sfDir).queryExecution.executedPlan.toString
         val flags = Seq(
           "rangepartitioning" -> plan.contains("rangepartitioning"),
           "CartesianProduct" -> plan.contains("CartesianProduct"),

@@ -22,7 +22,8 @@ object ProfileQ {
     // same first-use warm as Bench's cheap prefix (keep it short: the point
     // is per-stage attribution, not absolute parity with Bench)
     spark.range(1000).selectExpr("sum(id)").collect()
-    try graft.core.Tables.events(spark, sfDir).limit(10).collect()
+    try graft.core.Tables.events(graft.queries.Q.session(spark, Map.empty), sfDir)
+      .limit(10).collect()
     catch { case _: Throwable => () }
 
     val stages = new java.util.concurrent.ConcurrentHashMap[Int, StageRow]()
@@ -55,11 +56,10 @@ object ProfileQ {
         stages.clear(); jobs.clear()
         try spark.sharedState.cacheManager.clearCache() catch { case _: Throwable => () }
         val t0 = System.nanoTime()
-        try { qs(name).fn(spark, sfDir).count(); () }
+        try { qs(name).run(spark, sfDir).count(); () }
         catch { case e: Throwable => println(s"!! $name failed: ${e.getMessage}") }
         val sec = (System.nanoTime() - t0) / 1e9
-        // give the listener bus a beat to drain
-        Thread.sleep(300)
+        org.apache.spark.sql.GraftExpressions.drainListenerBus(spark)
         println(f"%n===== $name rep $rep: $sec%.3f s =====")
         import scala.jdk.CollectionConverters._
         val jrows = jobs.asScala.toSeq.sortBy(_._1)

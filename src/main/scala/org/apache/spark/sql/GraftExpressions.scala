@@ -18,6 +18,16 @@ object GraftExpressions {
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
 
+  /** A copy of `spark`'s session state (conf, functions, strategies) over
+    * the same cache manager — `cloneSession` is `private[sql]`. */
+  def cloneSession(spark: SparkSession): SparkSession =
+    spark.asInstanceOf[classic.SparkSession].cloneSession()
+
+  /** Block until every listener event posted so far is delivered
+    * (`listenerBus` is `private[spark]`). */
+  def drainListenerBus(spark: SparkSession): Unit =
+    spark.sparkContext.listenerBus.waitUntilEmpty()
+
   /** Append a planner strategy per-session (idempotent) — the runtime twin
     * of `SparkSessionExtensions.injectPlannerStrategy`. */
   def addStrategy(spark: SparkSession,

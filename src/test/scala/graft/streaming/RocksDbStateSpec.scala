@@ -67,4 +67,38 @@ class RocksDbStateSpec extends SparkSuite {
       .fn(spark, "/root/testdata/sf0.001").count()
     assert(spark.conf.getOption(ProviderKey) == before)
   }
+
+  test("q_stream_dedup_rocks through the runner runs RocksDB; the caller's provider is untouched") {
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.GraftExpressions
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[QueryProgressEvent]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent => progress.add(p)
+        case _ => ()
+      }
+    }
+    /** Whether the named query, run through `Q.run`, reported rocksdb* metrics. */
+    def reportsRocks(name: String): Boolean = {
+      GraftExpressions.drainListenerBus(spark)
+      progress.clear()
+      graft.queries.Registry.all(name).run(spark, "/root/testdata/sf0.001").count()
+      GraftExpressions.drainListenerBus(spark)
+      assert(!progress.isEmpty, s"$name reported no progress")
+      progress.asScala.exists(_.progress.stateOperators.exists(
+        _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb"))))
+    }
+    // the caller's provider: Spark's default (HDFS-backed), never RocksDB
+    val before = spark.conf.getOption(ProviderKey)
+    assert(!before.contains(Rocks))
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      assert(reportsRocks("q_stream_dedup_rocks"), "RocksDB provider not engaged under run")
+      assert(spark.conf.getOption(ProviderKey) == before)
+      assert(!reportsRocks("q_stream_dedup"), "default-provider query reported rocksdb metrics")
+    } finally spark.sparkContext.removeSparkListener(listener)
+    assert(spark.conf.getOption(ProviderKey) == before)
+  }
 }
