@@ -1,6 +1,6 @@
 package graft.sink
 
-import java.sql.{Connection, DriverManager, PreparedStatement}
+import java.sql.{Connection, DriverManager, PreparedStatement, SQLException}
 import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
@@ -173,6 +173,12 @@ final case class JdbcSink(url: String, dialect: Dialect,
     }
   }
 
+  /** `base` + `suffix` within the dialect's length cap: the base is cut,
+    * never the suffix, so a derived name (a tmp table's unique stamp, a
+    * swap-out name) never collapses into its base or a sibling. */
+  private def derivedName(base: String, suffix: String): String =
+    base.take(dialect.maxIdentifierLength - suffix.length) + suffix
+
   /** The staging path every batch load shares: create a tmp table shaped
     * like `adapted`, fill it through `stage`, then run `finish` over it on
     * ONE connection in one transaction. The tmp table is dropped after
@@ -181,7 +187,7 @@ final case class JdbcSink(url: String, dialect: Dialect,
     * Returns the rows staged. */
   private def viaTmpTable(adapted: DataFrame, base: String, consumed: Boolean = false)(
       stage: TableSpec => Long)(finish: (Connection, TableSpec) => Unit): Long = {
-    val tmpSpec = specFor(adapted, s"${base}_tmp_${System.nanoTime()}")
+    val tmpSpec = specFor(adapted, derivedName(base, s"_tmp_${System.nanoTime()}"))
     def dropTmp(): Unit = withConnection(exec(_, dialect.drop(tmpSpec)))
     withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
     val rows =
@@ -196,7 +202,10 @@ final case class JdbcSink(url: String, dialect: Dialect,
 
   /** Batch-mode transactional load (B3 + D2/D3): stage to a tmp table, then
     * MERGE/copy into the target in one tx, drop tmp
-    * (abstract_transactional.go:152-206).
+    * (abstract_transactional.go:152-206). The tx first builds the
+    * dialect's [[Dialect.stagingIndex]]; a key too long to index (Derby's
+    * `XSCB6`) fails that statement alone, and the merge probes the batch
+    * unindexed.
     *
     * `subBatches` > 1 is the reference's `temporaryBatchSize` (B2,
     * abstract_transactional.go:439-450): one logical batch stages through
@@ -220,6 +229,10 @@ final case class JdbcSink(url: String, dialect: Dialect,
           append(adapted.filter(chunk === i), tmp.name)).sum
       }
     } { (c, tmp) =>
+      dialect.stagingIndex(tmp, target.pk).foreach { ddl =>
+        try exec(c, ddl)
+        catch { case e: SQLException if e.getSQLState == JdbcSink.IndexKeyTooLong => () }
+      }
       dialect.mergeInto(target, tmp, tmp.columns.map(_.name), target.pk, windowPredicate)
         .foreach(exec(c, _))
     }
@@ -234,7 +247,7 @@ final case class JdbcSink(url: String, dialect: Dialect,
     val adapted = adapt(df)
     val name = dialect.adaptIdentifier(table)
     viaTmpTable(adapted, name, consumed = true)(tmp => append(adapted, tmp.name)) { (c, tmp) =>
-      val deprecated = s"${name}_deprecated"
+      val deprecated = derivedName(name, "_deprecated")
       if (existingColumns(name).isDefined) {
         exec(c, dialect.renameTable(TableSpec(name, Nil), deprecated))
         exec(c, dialect.renameTable(tmp, name))
@@ -311,6 +324,9 @@ object JdbcSink {
     })
   }
   private[sink] def ensureWriterDialects(): Unit = registerWriterDialects
+
+  /** Derby's SQLState for an index key that does not fit one page. */
+  private val IndexKeyTooLong = "XSCB6"
 
   /** Run `write` over `df` with a row count observed on the same pass, and
     * return that count. An empty frame counts 0. */

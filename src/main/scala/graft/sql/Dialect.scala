@@ -116,6 +116,11 @@ trait Dialect {
            |WHEN NOT MATCHED THEN INSERT ($insertCols) VALUES ($insertVals)""".stripMargin)
   }
 
+  /** DDL that indexes the staging table `tmp` on the merge key, run in the
+    * merge transaction before [[mergeInto]]'s statements. Default: none —
+    * the warehouse plans the merge's key probe itself. */
+  def stagingIndex(tmp: TableSpec, pk: Seq[String]): Option[String] = None
+
   /** Single-row upsert for stream mode (sql_adapter_base.go:428-493).
     * Returns the statement and the column order in which `?` placeholders
     * must be bound (columns may repeat — e.g. MERGE binds pk then values). */
@@ -414,6 +419,16 @@ object DerbyDialect extends Dialect {
       s"DELETE FROM ${qualified(target)} WHERE ${win}EXISTS (SELECT 1 FROM ${qualified(from)} S WHERE $corr)",
       insertSelect(target, from, cols))
   }
+
+  /** Derby does not hash-join `VARCHAR` keys, so [[mergeInto]]'s correlated
+    * EXISTS is a nested loop over two heaps, target rows × batch keys; an
+    * index on the staging pk makes each probe a B-tree lookup. Derby keeps
+    * index names apart from table names, so the index takes its table's
+    * name: unique per load and within the length cap by construction.
+    * Dropping the tmp table drops it. */
+  override def stagingIndex(tmp: TableSpec, pk: Seq[String]): Option[String] =
+    if (pk.isEmpty) None
+    else Some(s"CREATE INDEX ${qualified(tmp)} ON ${qualified(tmp)} (${pk.map(quote).mkString(", ")})")
 }
 
 object Dialect {

@@ -150,6 +150,39 @@ class EngineSpec extends SparkSuite {
       Seq(Seq("new1"), Seq("new2"), Seq("out-of-window")))
   }
 
+  test("a pk value too long to index merges unindexed: ok, right rows, no tmp table left") {
+    val sink = JdbcSink("jdbc:derby:memory:eng_longkey;create=true", DerbyDialect)
+    val long = "k" * 20000
+    // Derby refuses to index this key, so the loads below take the fallback
+    val refused = sink.withConnection { c =>
+      sink.exec(c, "CREATE TABLE \"PROBE\" (\"ID\" VARCHAR(32000))")
+      sink.exec(c, s"INSERT INTO \"PROBE\" VALUES ('$long')")
+      try intercept[java.sql.SQLException](
+        sink.exec(c, "CREATE INDEX \"PROBE\" ON \"PROBE\" (\"ID\")")).getSQLState
+      finally sink.exec(c, "DROP TABLE \"PROBE\"")
+    }
+    assert(refused == "XSCB6")
+    val e = engine("longkey")
+    val cfg = StreamConfig(mode = Engine.Batch, pk = Seq("id"), deduplicate = true)
+    def load(rows: (String, String)*) = {
+      val s = e.createStream("lk", cfg)
+      rows.foreach { case (id, v) => s.consume(s"""{"id":"$id","v":"$v"}""") }
+      s.complete()
+    }
+    val r1 = load("a" -> "v1", long -> "v1", "b" -> "v1")
+    assert(r1.status == "ok" && r1.rows == 3, r1)
+    val r2 = load(long -> "v2", "b" -> "v2", "c" -> "v2")
+    assert(r2.status == "ok" && r2.rows == 3, r2)
+    val back = readTable("longkey", "lk").select("ID", "V").collect()
+      .map(r => (r.getString(0), r.getString(1))).toSeq.sorted
+    assert(back == Seq("a" -> "v1", "b" -> "v2", "c" -> "v2", long -> "v2").sorted)
+    val tables = sink.withConnection { c =>
+      val rs = c.getMetaData.getTables(null, null, "%", Array("TABLE"))
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
+    }
+    assert(!tables.exists(_.contains("_TMP_")), tables)
+  }
+
   test("merge window fixture replay: 31-day window (mergewindow_test.go runs 1-2)") {
     // frozen clock 2023-02-07T00:00:00Z, the reference's fixture timestamps
     val now = java.time.Instant.parse("2023-02-07T00:00:00Z").toEpochMilli

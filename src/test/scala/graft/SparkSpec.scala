@@ -3,7 +3,10 @@ package graft
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Shared local SparkSession for all suites (one JVM, one session). */
+/** Shared local SparkSession for all suites (one JVM, one session). No
+  * artifact isolation, as in `SparkEntry.localSession`: an isolated
+  * session's class loader keys the generated-code cache, so every `Q.run`
+  * clone and every streaming query would compile its code again. */
 object SparkSpec {
   lazy val spark: SparkSession = {
     val s = SparkSession.builder()
@@ -12,6 +15,7 @@ object SparkSpec {
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")
+      .config("spark.sql.artifact.isolation.enabled", "false")
       .config("spark.sql.warehouse.dir",
         java.nio.file.Files.createTempDirectory("graft_wh_").toString)
       .getOrCreate()

@@ -21,6 +21,11 @@ class JdbcSinkSpec extends SparkSuite {
   private def readBack(s: JdbcSink, t: String) =
     spark.read.jdbc(s.url, s""""$t"""", new java.util.Properties())
 
+  private def tableNames(s: JdbcSink): List[String] = s.withConnection { c =>
+    val rs = c.getMetaData.getTables(null, null, "%", Array("TABLE"))
+    Iterator.continually(rs).takeWhile(_.next()).map(_.getString("TABLE_NAME")).toList
+  }
+
   test("ensureTable creates, then patches missing columns via ALTER ADD") {
     val sink = freshSink("ensure")
     drop(sink, "E1")
@@ -275,6 +280,45 @@ class JdbcSinkSpec extends SparkSuite {
     sink.loadMerge(delta, spec, windowPredicate = Some("""__T__."TS" >= 50"""))
     assert(canon(readBack(sink, "MW").select("v")) ==
       Seq(Seq("new"), Seq("out-of-window")))
+  }
+
+  test("tmp and swap-out names keep their suffix at the dialect's length cap") {
+    val sink = freshSink("longname")
+    val name = "L" * DerbyDialect.maxIdentifierLength
+    drop(sink, name)
+    val gen1 = df("id BIGINT, v STRING", Seq(Row(1L, "a"), Row(2L, "b")))
+    val spec = sink.specFor(gen1, name, pk = Seq("id"))
+    assert(spec.name == name)
+    // no pk constraint, as the engine creates its tables
+    sink.ensureTable(spec.copy(pk = Nil)); sink.append(gen1, spec.name)
+    sink.loadMerge(df("id BIGINT, v STRING", Seq(Row(2L, "b2"), Row(3L, "c"))), spec)
+    sink.loadMerge(df("id BIGINT, v STRING", Seq(Row(3L, "c2"))), spec)
+    assert(canon(readBack(sink, name)) == Seq(Seq("1", "a"), Seq("2", "b2"), Seq("3", "c2")))
+    sink.replaceTable(df("id BIGINT, v STRING", Seq(Row(9L, "z"))), name)
+    assert(canon(readBack(sink, name)) == Seq(Seq("9", "z")))
+    val left = tableNames(sink)
+    assert(left.contains(name), left)
+    assert(!left.exists(t => t.contains("_TMP_") || t.endsWith("_deprecated")), left)
+  }
+
+  test("loadMerge of 2,500 string keys into a 5,000-row target probes an indexed stage") {
+    import spark.implicits._
+    val sink = freshSink("mergeidx")
+    drop(sink, "MI")
+    def key(i: Int) = f"user-$i%08d"
+    val target = (0 until 5000).map(i => (key(i), "old")).toDF("id", "v")
+    val spec = sink.specFor(target, "mi", pk = Seq("id"))
+    sink.ensureTable(spec.copy(pk = Nil)); sink.append(target, spec.name)
+    sink.loadMerge(Seq((key(1), "old")).toDF("id", "v"), spec) // warm the path
+    val batch = (0 until 5000 by 2).map(i => (key(i), "new")).toDF("id", "v")
+    val t0 = System.nanoTime()
+    assert(sink.loadMerge(batch, spec) == 2500)
+    val secs = (System.nanoTime() - t0) / 1e9
+    // the unindexed delete probes every batch key per target row: > 6 s here
+    assert(secs < 2.0, f"merge took $secs%.2f s")
+    val back = readBack(sink, "MI")
+    assert(back.count() == 5000)
+    assert(back.filter("V = 'new'").count() == 2500)
   }
 
   test("streamUpsert: prepared-statement merge per row, last batch wins (D4)") {

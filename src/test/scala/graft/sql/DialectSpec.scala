@@ -153,6 +153,15 @@ class DialectSpec extends AnyFunSuite {
     assert(RedshiftDialect.adaptIdentifier(long).length == 127)
   }
 
+  test("only Derby indexes the staging table, on the merge key") {
+    val tmp = TableSpec("T_TMP_1", Seq(ColumnSpec("id", DataKind.Str), ColumnSpec("v", DataKind.Str)))
+    assert(DerbyDialect.stagingIndex(tmp, Seq("id")) ==
+      Some("""CREATE INDEX "T_TMP_1" ON "T_TMP_1" ("id")"""))
+    assert(DerbyDialect.stagingIndex(tmp, Nil).isEmpty)
+    Dialect.all.values.filterNot(_ == DerbyDialect).foreach(d =>
+      assert(d.stagingIndex(tmp, Seq("id")).isEmpty, d.name))
+  }
+
   test("quote escapes embedded quote characters") {
     assert(PostgresDialect.quote("""a"b""") == """"a""b"""")
     assert(MySqlDialect.quote("a`b") == "`a``b`")

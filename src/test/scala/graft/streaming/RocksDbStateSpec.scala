@@ -62,10 +62,39 @@ class RocksDbStateSpec extends SparkSuite {
   }
 
   test("provider conf set at start is restored after the registry query") {
-    val before = spark.conf.getOption(ProviderKey)
-    graft.queries.StreamOps.qs("q_stream_dedup_rocks")
-      .fn(spark, "/root/testdata/sf0.001").count()
-    assert(spark.conf.getOption(ProviderKey) == before)
+    import scala.jdk.CollectionConverters._
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerEvent}
+    import org.apache.spark.sql.GraftExpressions
+    import org.apache.spark.sql.streaming.StreamingQueryListener.QueryProgressEvent
+    val hdfs = "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
+    val progress = new java.util.concurrent.ConcurrentLinkedQueue[QueryProgressEvent]()
+    val listener = new SparkListener {
+      override def onOtherEvent(e: SparkListenerEvent): Unit = e match {
+        case p: QueryProgressEvent => progress.add(p)
+        case _ => ()
+      }
+    }
+    val prev = spark.conf.getOption(ProviderKey)
+    // the caller names a provider of its own: the query's RocksDB conf must
+    // win on the query's clone and leave the caller's value alone
+    spark.conf.set(ProviderKey, hdfs)
+    GraftExpressions.drainListenerBus(spark)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      graft.queries.Registry.all("q_stream_dedup_rocks").run(spark, "/root/testdata/sf0.001").count()
+      GraftExpressions.drainListenerBus(spark)
+      assert(!progress.isEmpty, "q_stream_dedup_rocks reported no progress")
+      assert(progress.asScala.exists(_.progress.stateOperators.exists(
+        _.customMetrics.keySet.asScala.exists(_.startsWith("rocksdb")))),
+        "the caller's provider overrode the query's RocksDB conf")
+      assert(spark.conf.get(ProviderKey) == hdfs)
+    } finally {
+      spark.sparkContext.removeSparkListener(listener)
+      prev match {
+        case Some(p) => spark.conf.set(ProviderKey, p)
+        case None    => spark.conf.unset(ProviderKey)
+      }
+    }
   }
 
   test("q_stream_dedup_rocks through the runner runs RocksDB; the caller's provider is untouched") {
