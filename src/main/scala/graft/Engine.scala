@@ -220,7 +220,7 @@ final class BulkerStream private[graft] (
         val spec0 = sink.specFor(deduped, caseAdjustedTable).copy(namespace = ns)
         val spec = spec0.copy(columns = spec0.columns.map(c =>
           hintDdl.get(c.name).map(d => c.copy(ddlOverride = Some(d))).getOrElse(c)))
-        (sink.adapt(deduped), sink.ensureTableCached(spec))
+        (deduped, sink.ensureTableCached(spec)) // the load method adapts it
     }
 
     val windowPredicate = cfg.timestampColumn.flatMap { tc =>

@@ -112,4 +112,19 @@ object Conversions {
     case (DataKind.Timestamp, _)            => toText(c, from).try_cast(to.spark)
     case _                                  => c.try_cast(to.spark)
   }
+
+  /** Can [[convert]] from `from` to `to` turn a non-null value into null?
+    * True for the parsing conversions (Str → Timestamp/Int64/Float64/Bool),
+    * Float64 → Int64, Timestamp → non-text kinds and the `try_cast`
+    * fallbacks. Every other pair is total: same kind, anything → Str/Json,
+    * the widenings Bool → Int64/Float64 and Int64 → Float64, Int64 → Bool,
+    * and Unknown → anything (its values are always null). */
+  def canFail(from: DataKind, to: DataKind): Boolean = (from, to) match {
+    case (f, t) if f == t                                   => false
+    case (DataKind.Unknown, _)                              => false
+    case (_, DataKind.Str | DataKind.Json)                  => false
+    case (DataKind.Bool, DataKind.Int64 | DataKind.Float64) => false
+    case (DataKind.Int64, DataKind.Float64 | DataKind.Bool) => false
+    case _                                                  => true
+  }
 }

@@ -1,6 +1,6 @@
 package graft.shape
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.Conversions
@@ -15,10 +15,11 @@ import graft.core.Conversions
   * TIMESTAMP — mixed columns stay STRING, exactly the lattice LCA
   * (TIMESTAMP ∨ STRING = STRING).
   *
-  * Scale note: the sniff decision for ALL string columns is ONE grouped
-  * aggregate over unpivoted (column, value) cells, whose plan does not
-  * grow with the column count (see [[scanStringColumns]]); the cast is a
-  * narrow projection. No per-column jobs, no collect of data rows.
+  * Scale note: the sniff decision for ALL string columns is ONE map-only
+  * pass over unpivoted (column, value) cells, whose plan does not grow
+  * with the column count (see [[scanStringColumns]]); the cast is a
+  * narrow projection. No per-column jobs, no shuffle, no collect of data
+  * rows.
   */
 object Infer {
 
@@ -134,48 +135,79 @@ object Infer {
     * value is bool-or-numeric (→ FLOAT64).
     *
     * The plan has the same width whatever the column count: the candidates
-    * unpivot into (column index, value) cells, null cells drop, and ONE
-    * grouped aggregate writes the six lattice flags once, keyed by index.
-    * A column with no group holds only nulls. The flags combine map-side,
-    * so the shuffle carries at most one row per column per partition; no
-    * data rows are collected. */
+    * unpivot into (column index, value) cells, null cells drop, and each
+    * cell computes the six lattice flags. Every partition folds its cells
+    * into one bitmap per flag (plus "seen"), the driver ORs the partitions'
+    * bitmaps together. One stage, no shuffle; the driver receives
+    * 7 × ⌈columns / 64⌉ longs per partition and no data rows. A column
+    * never seen holds only nulls. */
   def scanStringColumns(df: DataFrame, candidates: Seq[String]): StringClasses = {
     if (candidates.isEmpty) return StringClasses(Nil, Nil, Nil, Nil)
+    val spark = df.sparkSession
+    import spark.implicits._
+    val v = col("v")
     val cells = df
       .select(inline(array(candidates.zipWithIndex.map { case (c, i) =>
         struct(lit(i).as("i"), col(s"`$c`").as("v"))
       }: _*)))
-      .where(col("v").isNotNull) // only non-null values vote
-    val v = col("v")
-    val flags = cells.groupBy("i").agg(
-      // TIMESTAMP classification needs every value to pass the CONVERT
-      // sniff (which allows bare dates, converter.go:354) AND at least one
-      // value to be a full timestamp — a column of only `yyyy-MM-dd`
-      // strings stays STRING, matching detection with supportDates=false
-      // (datatype.go:126); mixed full-ISO + date columns land TIMESTAMP
-      // with dates at midnight (the date_mix fixture)
-      bool_and(Conversions.looksLikeTimestampOrDate(v)) && bool_or(Conversions.looksLikeTimestamp(v)),
-      bool_and(v.rlike(s"^(?:$BoolRe|$IntRe)$$")),
-      bool_and(v.rlike(s"^(?:$BoolRe|$FloatRe)$$")),
-      // the mix must ACTUALLY mix: an all-digit column is a quoted-string
-      // column (the reference keeps quoted values STRING); only a column
-      // holding both bool tokens and number tokens is the inference
-      // conflict the lattice resolves downward
-      bool_or(v.rlike(s"^$BoolRe$$")) && bool_or(v.rlike(s"^$FloatRe$$")))
-    // one class per column that has a value; a null flag never holds
-    val classOf: Map[Int, String] = flags.collect().map { r =>
-      def holds(j: Int) = !r.isNullAt(j) && r.getBoolean(j)
-      r.getInt(0) -> (
-        if (holds(1)) "ts"
-        else if (holds(2) && holds(4)) "boolInt"
-        else if (holds(3) && holds(4)) "boolFloat"
-        else "string")
-    }.toMap
-    val indexed = candidates.zipWithIndex
+      .where(v.isNotNull) // only non-null values vote
+      // a flag of a non-null value is never null; "all" rules are stored
+      // as their breaks, so every bitmap merges by OR
+      .select(col("i"),
+        // TIMESTAMP classification needs every value to pass the CONVERT
+        // sniff (which allows bare dates, converter.go:354) AND at least one
+        // value to be a full timestamp — a column of only `yyyy-MM-dd`
+        // strings stays STRING, matching detection with supportDates=false
+        // (datatype.go:126); mixed full-ISO + date columns land TIMESTAMP
+        // with dates at midnight (the date_mix fixture)
+        !Conversions.looksLikeTimestampOrDate(v),
+        Conversions.looksLikeTimestamp(v),
+        !v.rlike(s"^(?:$BoolRe|$IntRe)$$"),
+        !v.rlike(s"^(?:$BoolRe|$FloatRe)$$"),
+        // the mix must ACTUALLY mix: an all-digit column is a quoted-string
+        // column (the reference keeps quoted values STRING); only a column
+        // holding both bool tokens and number tokens is the inference
+        // conflict the lattice resolves downward
+        v.rlike(s"^$BoolRe$$"),
+        v.rlike(s"^$FloatRe$$"))
+    val words = (candidates.length + 63) / 64
+    val merged = new Array[Long](ScanFlags * words)
+    cells.mapPartitions(foldFlags(_, words)).collect().foreach { bits =>
+      var w = 0
+      while (w < merged.length) { merged(w) |= bits(w); w += 1 }
+    }
+    def flag(f: Int, i: Int): Boolean = (merged(f * words + i / 64) & (1L << (i % 64))) != 0
+    def classOf(i: Int): Option[String] =
+      if (!flag(0, i)) None
+      else if (!flag(1, i) && flag(2, i)) Some("ts")
+      else if (flag(5, i) && flag(6, i) && !flag(3, i)) Some("boolInt")
+      else if (flag(5, i) && flag(6, i) && !flag(4, i)) Some("boolFloat")
+      else Some("string")
+    val classes = candidates.indices.map(classOf)
     def inClass(cls: Option[String]) =
-      indexed.collect { case (c, i) if classOf.get(i) == cls => c }
+      candidates.zip(classes).collect { case (c, k) if k == cls => c }
     StringClasses(inClass(Some("ts")), inClass(None),
       inClass(Some("boolInt")), inClass(Some("boolFloat")))
+  }
+
+  /** Bitmaps of [[scanStringColumns]]: seen, then its six flags in order. */
+  private val ScanFlags = 7
+
+  /** One partition's cells → its bitmaps, `words` longs per flag. */
+  private def foldFlags(cells: Iterator[Row], words: Int): Iterator[Array[Long]] = {
+    val bits = new Array[Long](ScanFlags * words)
+    cells.foreach { r =>
+      val i = r.getInt(0)
+      val word = i / 64
+      val bit = 1L << (i % 64)
+      bits(word) |= bit
+      var f = 1
+      while (f < ScanFlags) {
+        if (r.getBoolean(f)) bits(f * words + word) |= bit
+        f += 1
+      }
+    }
+    Iterator.single(bits)
   }
 
   /** Default-TIMESTAMP field names (types/converter.go:36-44): these are

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{Conversions, DataKind}
+import graft.sink.SchemaEvolution
 
 /** End-to-end ingest shaping: raw NDJSON → flattened, sanitized, typed
   * DataFrame — the reference's per-event `ProcessEvents` pipeline
@@ -15,16 +16,17 @@ import graft.core.{Conversions, DataKind}
   *      mixed int/float → double, anything ∨ string → string).
   *   2. Hint values, when the batch carries `__sql_type_*` fields: one tiny
   *      aggregate.
-  *   3. The string-class scan ([[Infer.scanStringColumns]]): one grouped
-  *      aggregate over unpivoted (column, value) cells decides timestamp
-  *      sniff, bool/number lattice mixes and all-null columns for every
-  *      string column at once; its plan does not widen with the column
-  *      count.
+  *   3. The string-class scan ([[Infer.scanStringColumns]]): one map-only
+  *      pass over unpivoted (column, value) cells decides timestamp sniff,
+  *      bool/number lattice mixes and all-null columns for every string
+  *      column at once; each partition returns per-column bitmaps that the
+  *      driver merges. Its plan does not widen with the column count.
   *   4. ONE narrow projection: flatten + rename + cast. It reads nothing by
   *      itself — the load that writes the shaped frame runs it.
   *
-  * So shaping reads the raw batch twice (steps 1 and 3) and shuffles only
-  * the scan's per-column flags.
+  * So shaping reads the raw batch twice (steps 1 and 3), in one job each,
+  * and shuffles nothing. Columns past `maxColumns` route to
+  * `_unmapped_data`.
   */
 object Ingest {
 
@@ -164,10 +166,9 @@ object Ingest {
       if (projected.columns.length > opts.maxColumns) {
         val keep = projected.columns.take(opts.maxColumns)
         val over = projected.columns.drop(opts.maxColumns)
-        val overStruct = struct(over.map(c => col(s"`$c`").cast(StringType).as(c)).toSeq: _*)
-        val any = over.map(c => col(s"`$c`").isNotNull).reduce(_ || _)
+          .map(c => c -> col(s"`$c`").cast(StringType)).toSeq
         projected.select(keep.map(c => col(s"`$c`")).toSeq
-          :+ when(any, to_json(overStruct)).as(graft.sink.SchemaEvolution.UnmappedColumn): _*)
+          :+ SchemaEvolution.unmappedJson(over).as(SchemaEvolution.UnmappedColumn): _*)
       } else projected
     Shaped(capped, hints)
   }

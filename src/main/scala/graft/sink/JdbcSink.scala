@@ -150,34 +150,32 @@ final case class JdbcSink(url: String, dialect: Dialect,
       pk.map(dialect.adaptIdentifier))
 
   /** Rename DataFrame columns to the dialect's identifier form and apply its
-    * value mapping (T9 — e.g. Postgres NUL-byte strip). */
-  def adapt(df: DataFrame): DataFrame =
-    dialect.mapValues(df.toDF(df.columns.map(dialect.adaptIdentifier): _*))
+    * value mapping (T9 — e.g. Postgres NUL-byte strip). A frame whose names
+    * are already in that form keeps its plan: no rename projection. */
+  def adapt(df: DataFrame): DataFrame = {
+    val names = df.columns.map(dialect.adaptIdentifier)
+    dialect.mapValues(if (names.sameElements(df.columns)) df else df.toDF(names: _*))
+  }
 
   /** Distributed append into an existing table (the bulk data path).
     * Returns the rows written. */
-  def append(df: DataFrame, table: String): Long = write(df, dialect.quote(table))
+  def append(df: DataFrame, table: String): Long = write(adapt(df), dialect.quote(table))
 
   /** Append to a (possibly namespaced) spec — the qualified-name form. */
-  def appendTo(df: DataFrame, spec: TableSpec): Long = write(df, dialect.qualified(spec))
+  def appendTo(df: DataFrame, spec: TableSpec): Long = write(adapt(df), dialect.qualified(spec))
 
-  private def write(df: DataFrame, target: String): Long = {
+  /** Write an [[adapt]]ed frame into `target`; returns the rows written. */
+  private def write(adapted: DataFrame, target: String): Long = {
     JdbcSink.ensureWriterDialects()
     // the connection cap is a coalesce, not the writer's `numPartitions`
     // option: that option coalesces behind the observed plan, and the
     // observation then reads 0
-    JdbcSink.countingRows(adapt(df)) { counted =>
+    JdbcSink.countingRows(adapted) { counted =>
       counted.coalesce(maxWriteConnections).write.mode(SaveMode.Append)
         .option("batchsize", 10000) // fewer executeBatch round-trips per partition
         .jdbc(url, target, new java.util.Properties())
     }
   }
-
-  /** `base` + `suffix` within the dialect's length cap: the base is cut,
-    * never the suffix, so a derived name (a tmp table's unique stamp, a
-    * swap-out name) never collapses into its base or a sibling. */
-  private def derivedName(base: String, suffix: String): String =
-    base.take(dialect.maxIdentifierLength - suffix.length) + suffix
 
   /** The staging path every batch load shares: create a tmp table shaped
     * like `adapted`, fill it through `stage`, then run `finish` over it on
@@ -187,7 +185,7 @@ final case class JdbcSink(url: String, dialect: Dialect,
     * Returns the rows staged. */
   private def viaTmpTable(adapted: DataFrame, base: String, consumed: Boolean = false)(
       stage: TableSpec => Long)(finish: (Connection, TableSpec) => Unit): Long = {
-    val tmpSpec = specFor(adapted, derivedName(base, s"_tmp_${System.nanoTime()}"))
+    val tmpSpec = specFor(adapted, dialect.derivedName(base, s"_tmp_${System.nanoTime()}"))
     def dropTmp(): Unit = withConnection(exec(_, dialect.drop(tmpSpec)))
     withConnection(exec(_, dialect.createTable(tmpSpec, ifNotExists = false)))
     val rows =
@@ -217,7 +215,7 @@ final case class JdbcSink(url: String, dialect: Dialect,
                 subBatches: Int = 1): Long = {
     val adapted = adapt(df)
     viaTmpTable(adapted, target.name) { tmp =>
-      if (subBatches <= 1) append(adapted, tmp.name)
+      if (subBatches <= 1) write(adapted, dialect.quote(tmp.name))
       else {
         val chunk = org.apache.spark.sql.functions.pmod(
           org.apache.spark.sql.functions.crc32(
@@ -226,7 +224,7 @@ final case class JdbcSink(url: String, dialect: Dialect,
                 adapted.columns.map(c => col(s"`$c`")): _*))),
           lit(subBatches))
         (0 until subBatches).map(i =>
-          append(adapted.filter(chunk === i), tmp.name)).sum
+          write(adapted.filter(chunk === i), dialect.quote(tmp.name))).sum
       }
     } { (c, tmp) =>
       dialect.stagingIndex(tmp, target.pk).foreach { ddl =>
@@ -246,8 +244,8 @@ final case class JdbcSink(url: String, dialect: Dialect,
   def replaceTable(df: DataFrame, table: String): Long = {
     val adapted = adapt(df)
     val name = dialect.adaptIdentifier(table)
-    viaTmpTable(adapted, name, consumed = true)(tmp => append(adapted, tmp.name)) { (c, tmp) =>
-      val deprecated = derivedName(name, "_deprecated")
+    viaTmpTable(adapted, name, consumed = true)(tmp => write(adapted, dialect.quote(tmp.name))) { (c, tmp) =>
+      val deprecated = dialect.derivedName(name, "_deprecated")
       if (existingColumns(name).isDefined) {
         exec(c, dialect.renameTable(TableSpec(name, Nil), deprecated))
         exec(c, dialect.renameTable(tmp, name))
@@ -266,7 +264,7 @@ final case class JdbcSink(url: String, dialect: Dialect,
                        partitionCol: String, partitionId: String): Long = {
     val adapted = adapt(df)
     val pc = dialect.adaptIdentifier(partitionCol)
-    viaTmpTable(adapted, target.name)(tmp => append(adapted, tmp.name)) { (c, tmp) =>
+    viaTmpTable(adapted, target.name)(tmp => write(adapted, dialect.quote(tmp.name))) { (c, tmp) =>
       exec(c, dialect.deleteWhere(target,
         s"${dialect.quote(pc)} = '${partitionId.replace("'", "''")}'"))
       exec(c, dialect.insertSelect(target, tmp, tmp.columns.map(_.name)))

@@ -2,6 +2,7 @@ package graft.sink
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StringType
 import graft.core.{Conversions, DataKind}
 import graft.sql.{ColumnSpec, TableSpec}
 
@@ -18,7 +19,10 @@ import graft.sql.{ColumnSpec, TableSpec}
   *
   * One narrow projection — convertibility is decided per value with
   * `try_cast`-style expressions, so the 100 TB cost is a single codegen'd
-  * map stage, no extra scan.
+  * map stage, no extra scan. Only a conversion that can fail
+  * ([[Conversions.canFail]]) gets an unmapped check: a batch whose kinds
+  * already match the live table projects `_unmapped_data` as a typed null
+  * (or the incoming `_unmapped_data`), with no per-row JSON.
   */
 object SchemaEvolution {
 
@@ -54,8 +58,10 @@ object SchemaEvolution {
         val from = batchKind(batch, spec.name)
         val orig = col(s"`${spec.name}`")
         val converted = Conversions.convert(orig, from, spec.kind).cast(spec.kind.spark)
-        // a non-null original that converted to null is unmapped (abstract.go:500-553)
-        overflow += spec.name -> when(orig.isNotNull && converted.isNull, orig.cast("string"))
+        // a non-null original that converted to null is unmapped
+        // (abstract.go:500-553); a total conversion never yields one
+        if (Conversions.canFail(from, spec.kind))
+          overflow += spec.name -> when(orig.isNotNull && converted.isNull, orig.cast("string"))
         converted.as(spec.name)
       } else lit(null).cast(spec.kind.spark).as(spec.name)
     }
@@ -70,19 +76,29 @@ object SchemaEvolution {
     val addedProjected = added.map(n => col(s"`$n`").as(n))
     frozen.foreach(n => overflow += n -> col(s"`$n`").cast("string"))
 
-    val overflowStruct = struct(overflow.toSeq.map { case (n, c) => c.as(n) }: _*)
-    val anyOverflow = overflow.toSeq.map(_._2.isNotNull).reduceOption(_ || _).getOrElse(lit(false))
     // an incoming `_unmapped_data` column (a re-loaded overflow row) merges in:
     // fresh overflow wins, otherwise the batch's existing value carries through
     val incomingUnmapped = batchCols.find(isUnmappedName)
       .map(n => col(s"`$n`").cast("string"))
+    val fresh = unmappedJson(overflow.toSeq)
     val unmappedValue = incomingUnmapped match {
-      case Some(prev) => coalesce(when(anyOverflow, to_json(overflowStruct)), prev)
-      case None       => when(anyOverflow, to_json(overflowStruct))
+      case Some(prev) if overflow.nonEmpty => coalesce(fresh, prev)
+      case Some(prev)                      => prev
+      case None                            => fresh
     }
     val unmapped = unmappedValue.as(unmappedName)
 
     Plan(batch.select(existingProjected ++ addedProjected :+ unmapped: _*),
       addedSpecs)
   }
+
+  /** The `_unmapped_data` text of `candidates` (name → string value, null
+    * where nothing is routed): a JSON object of the non-null values, or
+    * null when all are null. "Any non-null" is one flat n-ary test, so a
+    * wide batch does not build a left-deep `||` chain. No candidates: a
+    * typed null. */
+  private[graft] def unmappedJson(candidates: Seq[(String, Column)]): Column =
+    if (candidates.isEmpty) lit(null).cast(StringType)
+    else when(coalesce(candidates.map(_._2): _*).isNotNull,
+      to_json(struct(candidates.map { case (n, c) => c.as(n) }: _*)))
 }

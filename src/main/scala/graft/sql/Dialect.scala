@@ -16,7 +16,6 @@ final case class TableSpec(
     timestampCol: Option[String] = None,
     namespace: Option[String] = None) {
   def column(n: String): Option[ColumnSpec] = columns.find(_.name == n)
-  def pkName: String = s"${name}_pk"
 }
 
 /** Per-warehouse SQL generation: identifier rules, the DataKind↔DDL type
@@ -69,6 +68,17 @@ trait Dialect {
   def adaptIdentifier(id: String): String =
     Names.column(id, caseMode, maxIdentifierLength)
 
+  /** `base` + `suffix` within [[maxIdentifierLength]]: the base is cut,
+    * never the suffix, so a derived name (a tmp table's unique stamp, a
+    * swap-out name, a constraint name) never collapses into its base or a
+    * sibling. */
+  def derivedName(base: String, suffix: String): String =
+    base.take(maxIdentifierLength - suffix.length) + suffix
+
+  /** The primary-key constraint's name: [[createTable]] declares it and
+    * Postgres's `ON CONFLICT ON CONSTRAINT` names it. */
+  def pkName(t: TableSpec): String = derivedName(t.name, "_pk")
+
   def qualified(t: TableSpec): String =
     t.namespace.map(n => quote(n) + ".").getOrElse("") + quote(t.name)
 
@@ -79,7 +89,7 @@ trait Dialect {
   def createTable(t: TableSpec, ifNotExists: Boolean = true): String = {
     val cols = t.columns.map(columnDdl)
     val pk = if (t.pk.nonEmpty)
-      Seq(s"CONSTRAINT ${quote(t.pkName)} PRIMARY KEY (${t.pk.map(quote).mkString(", ")})")
+      Seq(s"CONSTRAINT ${quote(pkName(t))} PRIMARY KEY (${t.pk.map(quote).mkString(", ")})")
     else Nil
     val ine = if (ifNotExists && supportsIfNotExists) "IF NOT EXISTS " else ""
     s"CREATE TABLE $ine${qualified(t)} (${(cols ++ pk).mkString(", ")})"
@@ -164,8 +174,10 @@ object PostgresDialect extends Dialect {
   override def mapValues(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.col
     import org.apache.spark.sql.types.StringType
-    df.schema.fields.filter(_.dataType == StringType).foldLeft(df)((d, f) =>
-      d.withColumn(f.name, graft.core.Conversions.stripNulBytes(col(s"`${f.name}`"))))
+    df.select(df.schema.fields.toSeq.map { f =>
+      val c = col(s"`${f.name}`")
+      if (f.dataType == StringType) graft.core.Conversions.stripNulBytes(c).as(f.name) else c
+    }: _*)
   }
   def typeFor(k: DataKind): String = k match {
     case DataKind.Str | DataKind.Unknown => "text"
@@ -186,7 +198,7 @@ object PostgresDialect extends Dialect {
     }
     val where = windowPredicate.map(p => s" WHERE ${p.replace("__T__", qualified(target))}").getOrElse("")
     Seq(s"INSERT INTO ${qualified(target)} ($cl) SELECT $cl FROM ${qualified(from)} " +
-      s"ON CONFLICT ON CONSTRAINT ${quote(target.pkName)} DO UPDATE SET $updateSet$where")
+      s"ON CONFLICT ON CONSTRAINT ${quote(pkName(target))} DO UPDATE SET $updateSet$where")
   }
 }
 

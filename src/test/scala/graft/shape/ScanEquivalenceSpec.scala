@@ -119,4 +119,22 @@ class ScanEquivalenceSpec extends SparkSuite {
     val got = assertSameClasses(randomMix(seed = 300L, cols = 300, rows = 30))
     assert(got.tsCols.nonEmpty && got.allNull.nonEmpty && got.boolIntCols.nonEmpty)
   }
+
+  test("partitions that each see part of a column merge to the whole column's class") {
+    // one RDD partition per group; the last one is empty
+    val parts: Seq[Seq[Row]] = Seq(
+      Seq(Row("true", null, "2024-01-02 03:04:05", "2024-01-02T03:04:05Z", "x"),
+          Row("false", null, "2024-01-03 03:04:05", "2024-01-02", "y")),
+      Seq(Row("1", "2024-01-02 03:04:05", "not a date", "2024-02-03", null),
+          Row("-2", "2024-01-04 03:04:05", "2024-01-05 03:04:05", "2024-02-04", "3.5")),
+      Nil)
+    val schema = StructType(Seq("bi", "half", "broken", "dates", "s").map(StructField(_, StringType)))
+    val data = spark.createDataFrame(
+      spark.sparkContext.parallelize(parts, parts.length).flatMap(identity), schema)
+    assert(data.rdd.glom().map(_.length).collect().toSeq == Seq(2, 2, 0))
+    val got = assertSameClasses(data)
+    assert(got.boolIntCols == Seq("bi"))       // bools in one partition, ints in the other
+    assert(got.tsCols == Seq("half", "dates")) // null in one partition, values in the other
+    assert(got.allNull.isEmpty && got.boolFloatCols.isEmpty)
+  }
 }

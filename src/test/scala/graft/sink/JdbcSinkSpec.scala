@@ -301,6 +301,25 @@ class JdbcSinkSpec extends SparkSuite {
     assert(!left.exists(t => t.contains("_TMP_") || t.endsWith("_deprecated")), left)
   }
 
+  test("a pk constraint keeps its suffix at the dialect's length cap") {
+    val sink = freshSink("longpk")
+    val name = "P" * DerbyDialect.maxIdentifierLength
+    drop(sink, name)
+    val data = df("id BIGINT, v STRING", Seq(Row(1L, "a"), Row(2L, "b")))
+    val spec = sink.specFor(data, name, pk = Seq("id"))
+    sink.ensureTable(spec) // a declared pk: CREATE TABLE … CONSTRAINT …_pk
+    assert(sink.streamUpsert(data, spec) == 2)
+    assert(sink.streamUpsert(df("id BIGINT, v STRING", Seq(Row(2L, "b2"), Row(3L, "c"))), spec) == 2)
+    assert(canon(readBack(sink, name)) == Seq(Seq("1", "a"), Seq("2", "b2"), Seq("3", "c")))
+    // the constraint is the table's, under the cut name
+    val constraints = sink.withConnection { c =>
+      val rs = c.createStatement().executeQuery("SELECT CONSTRAINTNAME FROM SYS.SYSCONSTRAINTS WHERE TYPE = 'P'")
+      Iterator.continually(rs).takeWhile(_.next()).map(_.getString(1)).toList
+    }
+    assert(constraints.contains(DerbyDialect.pkName(spec)), constraints)
+    assert(DerbyDialect.pkName(spec).length == DerbyDialect.maxIdentifierLength)
+  }
+
   test("loadMerge of 2,500 string keys into a 5,000-row target probes an indexed stage") {
     import spark.implicits._
     val sink = freshSink("mergeidx")
@@ -385,6 +404,29 @@ class JdbcSinkSpec extends SparkSuite {
     drop(sink, "RW")
     assert(sink.streamUpsertWithRetry(data, spec) == 30)
     assert(readBack(sink, "RW").count() == 30)
+  }
+
+  test("adapt keeps an adapted frame's names and maps values in one projection") {
+    import org.apache.spark.sql.catalyst.plans.logical.Project
+    def projects(d: org.apache.spark.sql.DataFrame) =
+      d.queryExecution.analyzed.collect { case p: Project => p }.size
+    val pg = JdbcSink("unused", graft.sql.PostgresDialect)
+    val data = df("Name STRING, N BIGINT, Tag STRING",
+      Seq(Row("a\u0000b", 1L, "x\u0000"), Row(null, 2L, "y")))
+    val once = pg.adapt(data)
+    assert(once.columns.toSeq == Seq("name", "n", "tag"))
+    assert(canon(once) == Seq(Seq("a" + "b", "1", "x"), Seq("∅", "2", "y")))
+    // an adapted frame: the values are unchanged and the rename is skipped
+    val twice = pg.adapt(once)
+    assert(canon(twice) == canon(once) && twice.columns.toSeq == once.columns.toSeq)
+    // the value mapping is one projection, whatever the string columns
+    assert(projects(graft.sql.PostgresDialect.mapValues(once)) == projects(once) + 1)
+    assert(projects(twice) == projects(once) + 1)
+    // Derby maps no values: an adapted frame comes back as it is
+    val derby = freshSink("adapt")
+    val adapted = derby.adapt(data)
+    assert(adapted.columns.toSeq == Seq("NAME", "N", "TAG"))
+    assert(derby.adapt(adapted) eq adapted)
   }
 
   test("postgres value mapping strips NUL bytes during adapt (T9)") {

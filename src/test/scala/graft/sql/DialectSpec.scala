@@ -162,6 +162,17 @@ class DialectSpec extends AnyFunSuite {
       assert(d.stagingIndex(tmp, Seq("id")).isEmpty, d.name))
   }
 
+  test("the pk constraint name is cut to the cap, the same in CREATE and ON CONFLICT") {
+    val long = TableSpec("t" * 63, Seq(ColumnSpec("id", DataKind.Int64), ColumnSpec("v", DataKind.Str)),
+      pk = Seq("id"))
+    val name = PostgresDialect.pkName(long)
+    assert(name == "t" * 60 + "_pk")
+    assert(PostgresDialect.createTable(long).contains(s"""CONSTRAINT "$name" PRIMARY KEY"""))
+    assert(PostgresDialect.mergeInto(long, long.copy(name = "s"), Seq("id", "v"), Seq("id"), None)
+      .head.contains(s"""ON CONFLICT ON CONSTRAINT "$name" DO UPDATE"""))
+    assert(PostgresDialect.pkName(long.copy(name = "t1")) == "t1_pk")
+  }
+
   test("quote escapes embedded quote characters") {
     assert(PostgresDialect.quote("""a"b""") == """"a""b"""")
     assert(MySqlDialect.quote("a`b") == "`a``b`")
