@@ -1,8 +1,9 @@
 package graft.shape
 
-import org.apache.spark.sql.{Column, DataFrame, Row}
+import org.apache.spark.sql.{Column, DataFrame, GraftExpressions, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
+import scala.jdk.CollectionConverters._
 import graft.core.Conversions
 
 /** Type inference post-pass (T4) and `__sql_type_` hint extraction (T5).
@@ -68,7 +69,9 @@ object Infer {
   /** Resolve hint values with one tiny aggregate over the PARSED frame
     * (hints are per-event in the reference; the batch form takes the first
     * non-null occurrence — matching matrix-test fixtures where hints are
-    * constant). Array-valued hints are `[castType, ddlType]`. */
+    * constant). Array-valued hints are `[castType, ddlType]`. A frame held
+    * on the driver reads the same values through a folded projection and
+    * takes the first non-null one there: no job. */
   def resolveHints(parsed: DataFrame, fields: Seq[HintField],
                    transform: String => String): Seq[Hint] = {
     if (fields.isEmpty) return Nil
@@ -81,14 +84,21 @@ object Infer {
     // real ARRAY through the aggregate — a ddlType containing a comma
     // ("numeric(38,18)") must not be split apart by string surgery.
     val isArray = fields.map(hf => dtOf(hf.segments).isInstanceOf[ArrayType])
-    val aggs = fields.zipWithIndex.map { case (hf, i) =>
+    val values = fields.zipWithIndex.map { case (hf, i) =>
       val base = nestedCol(hf.segments)
-      val c =
-        if (isArray(i)) first(transform_(base), ignoreNulls = true)
-        else first(base, ignoreNulls = true).cast(StringType)
-      c.as(s"h$i")
+      if (isArray(i)) transform_(base) else base.cast(StringType)
     }
-    val row = parsed.agg(aggs.head, aggs.tail: _*).collect()(0)
+    val row =
+      // a driver-held frame: the projection folds, the first non-null is
+      // taken here, and no job runs
+      (if (GraftExpressions.isLocal(parsed)) GraftExpressions.localRows(parsed.select(values: _*))
+       else None) match {
+        case Some(rows) =>
+          Row.fromSeq(values.indices.map(i => rows.iterator.map(_.get(i)).find(_ != null).orNull))
+        case None =>
+          val aggs = values.zipWithIndex.map { case (v, i) => first(v, ignoreNulls = true).as(s"h$i") }
+          parsed.agg(aggs.head, aggs.tail: _*).collect()(0)
+      }
     fields.zipWithIndex.flatMap { case (hf, i) =>
       val target = hf.targetSegments.map(transform).mkString("_")
       val hintName = hf.segments.map(transform).mkString("_")
@@ -140,39 +150,65 @@ object Infer {
     * into one bitmap per flag (plus "seen"), the driver ORs the partitions'
     * bitmaps together. One stage, no shuffle; the driver receives
     * 7 × ⌈columns / 64⌉ longs per partition and no data rows. A column
-    * never seen holds only nulls. */
+    * never seen holds only nulls.
+    *
+    * On a frame held on the driver (every leaf a `LocalRelation`) the
+    * unpivot, a `Generate` the optimizer does not fold, runs on the
+    * driver instead: the non-null cells become a `LocalRelation`, the same
+    * six flag expressions fold over it, and the same fold ORs the bits.
+    * No job runs. */
   def scanStringColumns(df: DataFrame, candidates: Seq[String]): StringClasses = {
     if (candidates.isEmpty) return StringClasses(Nil, Nil, Nil, Nil)
     val spark = df.sparkSession
     import spark.implicits._
-    val v = col("v")
-    val cells = df
-      .select(inline(array(candidates.zipWithIndex.map { case (c, i) =>
-        struct(lit(i).as("i"), col(s"`$c`").as("v"))
-      }: _*)))
-      .where(v.isNotNull) // only non-null values vote
-      // a flag of a non-null value is never null; "all" rules are stored
-      // as their breaks, so every bitmap merges by OR
-      .select(col("i"),
-        // TIMESTAMP classification needs every value to pass the CONVERT
-        // sniff (which allows bare dates, converter.go:354) AND at least one
-        // value to be a full timestamp — a column of only `yyyy-MM-dd`
-        // strings stays STRING, matching detection with supportDates=false
-        // (datatype.go:126); mixed full-ISO + date columns land TIMESTAMP
-        // with dates at midnight (the date_mix fixture)
-        !Conversions.looksLikeTimestampOrDate(v),
-        Conversions.looksLikeTimestamp(v),
-        !v.rlike(s"^(?:$BoolRe|$IntRe)$$"),
-        !v.rlike(s"^(?:$BoolRe|$FloatRe)$$"),
-        // the mix must ACTUALLY mix: an all-digit column is a quoted-string
-        // column (the reference keeps quoted values STRING); only a column
-        // holding both bool tokens and number tokens is the inference
-        // conflict the lattice resolves downward
-        v.rlike(s"^$BoolRe$$"),
-        v.rlike(s"^$FloatRe$$"))
     val words = (candidates.length + 63) / 64
+    val v = col("v")
+    // a flag of a non-null value is never null; "all" rules are stored
+    // as their breaks, so every bitmap merges by OR
+    def flagged(cells: DataFrame) = cells.select(col("i"),
+      // TIMESTAMP classification needs every value to pass the CONVERT
+      // sniff (which allows bare dates, converter.go:354) AND at least one
+      // value to be a full timestamp — a column of only `yyyy-MM-dd`
+      // strings stays STRING, matching detection with supportDates=false
+      // (datatype.go:126); mixed full-ISO + date columns land TIMESTAMP
+      // with dates at midnight (the date_mix fixture)
+      !Conversions.looksLikeTimestampOrDate(v),
+      Conversions.looksLikeTimestamp(v),
+      !v.rlike(s"^(?:$BoolRe|$IntRe)$$"),
+      !v.rlike(s"^(?:$BoolRe|$FloatRe)$$"),
+      // the mix must ACTUALLY mix: an all-digit column is a quoted-string
+      // column (the reference keeps quoted values STRING); only a column
+      // holding both bool tokens and number tokens is the inference
+      // conflict the lattice resolves downward
+      v.rlike(s"^$BoolRe$$"),
+      v.rlike(s"^$FloatRe$$"))
+    def distributed(cells: DataFrame): Seq[Array[Long]] =
+      flagged(cells).mapPartitions(foldFlags(_, words)).collect().toSeq
+    // `inline` is a Generate, which ConvertToLocalRelation does not fold:
+    // a driver-held frame unpivots its non-null cells here instead, and
+    // only the flag projection runs, folded
+    val local =
+      if (!GraftExpressions.isLocal(df)) None
+      else GraftExpressions.localRows(df.select(candidates.map(c => col(s"`$c`")): _*))
+    val parts = local match {
+      case Some(rows) =>
+        val cells = spark.createDataFrame(
+          rows.flatMap(r => candidates.indices.collect {
+            case i if !r.isNullAt(i) => Row(i, r.getString(i))
+          }).asJava,
+          StructType(Seq(StructField("i", IntegerType), StructField("v", StringType))))
+        GraftExpressions.localRows(flagged(cells))
+          .map(flags => foldFlags(flags.iterator, words).toSeq)
+          .getOrElse(distributed(cells))
+      case None =>
+        distributed(df
+          .select(inline(array(candidates.zipWithIndex.map { case (c, i) =>
+            struct(lit(i).as("i"), col(s"`$c`").as("v"))
+          }: _*)))
+          .where(v.isNotNull)) // only non-null values vote
+    }
     val merged = new Array[Long](ScanFlags * words)
-    cells.mapPartitions(foldFlags(_, words)).collect().foreach { bits =>
+    parts.foreach { bits =>
       var w = 0
       while (w < merged.length) { merged(w) |= bits(w); w += 1 }
     }
@@ -193,7 +229,7 @@ object Infer {
   /** Bitmaps of [[scanStringColumns]]: seen, then its six flags in order. */
   private val ScanFlags = 7
 
-  /** One partition's cells → its bitmaps, `words` longs per flag. */
+  /** One partition's flagged cells → its bitmaps, `words` longs per flag. */
   private def foldFlags(cells: Iterator[Row], words: Int): Iterator[Array[Long]] = {
     val bits = new Array[Long](ScanFlags * words)
     cells.foreach { r =>

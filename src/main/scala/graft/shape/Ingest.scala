@@ -1,6 +1,7 @@
 package graft.shape
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, GraftExpressions, SparkSession}
+import org.apache.spark.sql.catalyst.json.DriverJson
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 import graft.core.{Conversions, DataKind}
@@ -27,6 +28,16 @@ import graft.sink.SchemaEvolution
   * So shaping reads the raw batch twice (steps 1 and 3), in one job each,
   * and shuffles nothing. Columns past `maxColumns` route to
   * `_unmapped_data`.
+  *
+  * A batch held on the driver runs none of these as a job. When every
+  * leaf of the raw plan is a `LocalRelation`, sampling is off, nothing is
+  * cached, and the text fits [[DriverMaxChars]], step 1 is Spark's own
+  * inference and parser run on the driver (`DriverJson`), and steps 2–4
+  * are the same Column code, which the optimizer's
+  * `ConvertToLocalRelation` evaluates there, interpreted. The only parts
+  * with a driver branch of their own are those the rule cannot fold: the
+  * hint aggregate and the scan's unpivot. Anything it still cannot fold
+  * runs distributed, so the result never depends on the gate.
   */
 object Ingest {
 
@@ -75,13 +86,29 @@ object Ingest {
           regexp_replace(col("value"), """([\{,]\s*)""\s*:""", "$1\"_unnamed\":"))
           .otherwise(col("value")).as("value"))
         .as[String]
-    val normalized = if (opts.cacheNormalized) normalized0.persist() else normalized0
-    val reader =
-      if (opts.samplingRatio < 1.0)
-        spark.read.option("samplingRatio", opts.samplingRatio.toString)
-      else spark.read
-    shapeDf(reader.json(normalized), opts)
+    // a small batch held on the driver parses there, with Spark's own JSON
+    // code; the gate reads the raw plan's leaves before anything is built
+    val driverLines =
+      if (opts.samplingRatio < 1.0 || opts.cacheNormalized || !GraftExpressions.isLocal(raw)) None
+      else GraftExpressions.localRows(normalized0.toDF()).map(_.map(_.getString(0)))
+        .filter(ls => !ls.contains(null) && ls.iterator.map(_.length).sum <= DriverMaxChars)
+    driverLines match {
+      case Some(lines) => shapeDf(DriverJson.read(spark, lines), opts)
+      case None =>
+        val normalized = if (opts.cacheNormalized) normalized0.persist() else normalized0
+        val reader =
+          if (opts.samplingRatio < 1.0)
+            spark.read.option("samplingRatio", opts.samplingRatio.toString)
+          else spark.read
+        shapeDf(reader.json(normalized), opts)
+    }
   }
+
+  /** The most raw text, in characters, that [[shape]] parses on the
+    * driver. Past about 3,000 events of ~0.33 KB the distributed path
+    * overtakes it (1,000 events: 0.15 s on the driver against 0.24 s
+    * distributed; 5,000: 0.47 s against 0.39 s, on 4 cores). */
+  val DriverMaxChars: Int = 512 * 1024
 
   /** Shape an already-parsed (possibly nested) DataFrame. */
   def shapeDf(parsed: DataFrame, opts: ShapeOptions = ShapeOptions()): Shaped = {

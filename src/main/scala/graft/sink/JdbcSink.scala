@@ -4,7 +4,7 @@ import java.sql.{Connection, DriverManager, PreparedStatement, SQLException}
 import java.util.concurrent.TimeoutException
 import scala.concurrent.Await
 import scala.concurrent.duration._
-import org.apache.spark.sql.{DataFrame, Observation, Row, SaveMode}
+import org.apache.spark.sql.{DataFrame, GraftExpressions, Observation, Row, SaveMode}
 import org.apache.spark.sql.functions.{col, count, lit}
 import graft.core.DataKind
 import graft.sql.{ColumnSpec, Dialect, TableSpec}
@@ -20,9 +20,14 @@ import graft.sql.{ColumnSpec, Dialect, TableSpec}
   *   - stream mode (D4) is a per-partition upsert loop with prepared-
   *     statement batches (autocommit_stream.go:41-140).
   *
-  * Every load method returns the rows it wrote, counted by an
-  * [[org.apache.spark.sql.Observation]] on the written frame: the count
-  * rides the write's own pass, so no caller re-runs the pipeline to learn it.
+  * A frame that folds to a `LocalRelation` (a small batch shaped on the
+  * driver) skips Spark's writer: its rows insert on one driver connection
+  * in one transaction (see `write`).
+  *
+  * Every load method returns the rows it wrote. A distributed write counts
+  * them with an [[org.apache.spark.sql.Observation]] on the written frame:
+  * the count rides the write's own pass, so no caller re-runs the pipeline
+  * to learn it. A driver insert counts the rows it bound.
   *
   * Live-tested against embedded Derby (in the local[n] JVM); against a real
   * warehouse only the URL and dialect change.
@@ -164,18 +169,47 @@ final case class JdbcSink(url: String, dialect: Dialect,
   /** Append to a (possibly namespaced) spec — the qualified-name form. */
   def appendTo(df: DataFrame, spec: TableSpec): Long = write(adapt(df), dialect.qualified(spec))
 
-  /** Write an [[adapt]]ed frame into `target`; returns the rows written. */
+  /** Write an [[adapt]]ed frame into `target`; returns the rows written.
+    *
+    * A frame whose whole plan folds into a `LocalRelation` (a driver-held
+    * batch shaped by Project-only Column code) runs no Spark job: its rows
+    * insert on one driver connection, in one transaction, in prepared
+    * batches bound by [[JdbcSink.bindRow]], and the count is the rows
+    * bound. Spark's `JdbcUtils.savePartition` reads the `TaskContext`, so
+    * it cannot run outside a task. Any other frame goes through Spark's
+    * distributed JDBC writer. */
   private def write(adapted: DataFrame, target: String): Long = {
-    JdbcSink.ensureWriterDialects()
-    // the connection cap is a coalesce, not the writer's `numPartitions`
-    // option: that option coalesces behind the observed plan, and the
-    // observation then reads 0
-    JdbcSink.countingRows(adapted) { counted =>
-      counted.coalesce(maxWriteConnections).write.mode(SaveMode.Append)
-        .option("batchsize", 10000) // fewer executeBatch round-trips per partition
-        .jdbc(url, target, new java.util.Properties())
+    val local =
+      if (GraftExpressions.isLocal(adapted)) GraftExpressions.localRows(adapted) else None
+    local match {
+      case Some(rows) =>
+        val cols = adapted.columns.toSeq
+        inTx { c =>
+          val st = c.prepareStatement(insertRow(target, cols))
+          try JdbcSink.bindBatches(st, rows.iterator, cols.indices.toArray, WriteBatchRows)
+          finally st.close()
+        }
+      case None =>
+        JdbcSink.ensureWriterDialects()
+        // the connection cap is a coalesce, not the writer's `numPartitions`
+        // option: that option coalesces behind the observed plan, and the
+        // observation then reads 0
+        JdbcSink.countingRows(adapted) { counted =>
+          counted.coalesce(maxWriteConnections).write.mode(SaveMode.Append)
+            .option("batchsize", WriteBatchRows) // fewer executeBatch round-trips per partition
+            .jdbc(url, target, new java.util.Properties())
+        }
     }
   }
+
+  /** Rows per `executeBatch` of a write. */
+  private val WriteBatchRows = 10000
+
+  /** A one-row `INSERT` into `target` (already quoted) binding `cols` in
+    * order. */
+  private def insertRow(target: String, cols: Seq[String]): String =
+    s"INSERT INTO $target (${cols.map(dialect.quote).mkString(", ")}) " +
+      s"VALUES (${cols.map(_ => "?").mkString(", ")})"
 
   /** The staging path every batch load shares: create a tmp table shaped
     * like `adapted`, fill it through `stage`, then run `finish` over it on
@@ -272,12 +306,15 @@ final case class JdbcSink(url: String, dialect: Dialect,
   }
 
   /** Stream-mode row-wise upsert (D4, autocommit_stream.go:41-140): each
-    * partition opens a connection and runs prepared-statement batches.
-    * Returns the rows upserted. */
+    * partition opens a connection and runs prepared-statement batches. With
+    * no pk there is nothing to match on, so each row is a plain insert, as
+    * in the reference's autocommit stream. Returns the rows upserted. */
   def streamUpsert(df: DataFrame, target: TableSpec, batchSize: Int = 100): Long = {
     val adapted = adapt(df)
     val cols = adapted.columns.toSeq
-    val (sql, paramCols) = dialect.upsertRow(target, cols, target.pk)
+    val (sql, paramCols) =
+      if (target.pk.isEmpty) (insertRow(dialect.qualified(target), cols), cols)
+      else dialect.upsertRow(target, cols, target.pk)
     val jdbcUrl = url
     // row index for each `?`, in bind order (a column may bind more than once)
     val paramIdx: Array[Int] = paramCols.map(cols.indexOf).toArray
@@ -289,15 +326,8 @@ final case class JdbcSink(url: String, dialect: Dialect,
         val c = DriverManager.getConnection(jdbcUrl)
         try {
           val st = c.prepareStatement(sql)
-          var n = 0
-          rows.foreach { r =>
-            JdbcSink.bindRow(st, r, paramIdx)
-            st.addBatch()
-            n += 1
-            if (n % batchSize == 0) st.executeBatch()
-          }
-          st.executeBatch()
-          st.close()
+          try { JdbcSink.bindBatches(st, rows, paramIdx, batchSize); () }
+          finally st.close()
         } finally c.close()
       }
     }
@@ -342,6 +372,21 @@ object JdbcSink {
   }
 
   private val CountWait = 1.minute
+
+  /** Bind each of `rows` through [[bindRow]] and execute in batches of
+    * `batchSize`. Returns the rows bound. */
+  private[sink] def bindBatches(st: PreparedStatement, rows: Iterator[Row],
+                                paramIdx: Array[Int], batchSize: Int): Long = {
+    var n = 0L
+    rows.foreach { r =>
+      bindRow(st, r, paramIdx)
+      st.addBatch()
+      n += 1
+      if (n % batchSize == 0) st.executeBatch()
+    }
+    if (n % batchSize != 0) st.executeBatch()
+    n
+  }
 
   private[sink] def bindRow(st: PreparedStatement, r: Row, paramIdx: Array[Int]): Unit = {
     var p = 0

@@ -1,6 +1,9 @@
 package org.apache.spark.sql
 
+import org.apache.spark.sql.catalyst.CatalystTypeConverters
 import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.plans.logical.LocalRelation
+import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.classic.ExpressionUtils
 
 /** Column ⇄ Expression bridge for graft's native Catalyst expressions.
@@ -17,6 +20,25 @@ object GraftExpressions {
   def ofRows(spark: SparkSession,
              plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): DataFrame =
     classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
+
+  /** Every leaf of `ds`'s analyzed plan is a `LocalRelation`: its data sits
+    * on the driver. Reads the plan the Dataset already holds, so it costs
+    * no analysis. */
+  def isLocal(ds: Dataset[_]): Boolean =
+    ds.queryExecution.analyzed.collectLeaves().forall(_.isInstanceOf[LocalRelation])
+
+  /** The rows of `df` when the optimizer folds its whole plan into one
+    * `LocalRelation` (`ConvertToLocalRelation` evaluates Project, Filter
+    * and Limit over driver data; a Project interpreted); `None` when any
+    * other operator is left, which only a Spark job can run. */
+  def localRows(df: DataFrame): Option[Seq[Row]] =
+    df.queryExecution.optimizedPlan match {
+      case l: LocalRelation =>
+        val toRow = CatalystTypeConverters.createToScalaConverter(
+          DataTypeUtils.fromAttributes(l.output))
+        Some(l.data.map(r => toRow(r).asInstanceOf[Row]))
+      case _ => None
+    }
 
   /** A copy of `spark`'s session state (conf, functions, strategies) over
     * the same cache manager — `cloneSession` is `private[sql]`. */

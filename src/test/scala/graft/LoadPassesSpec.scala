@@ -14,7 +14,11 @@ import graft.sink.{JdbcSink, TableCache}
   *
   * A read of the batch is: (1) JSON schema inference, (2) the string-class
   * scan, (3) the write (which runs parse → shape → dedup). Besides these
-  * three, only a dedup or stream-mode shuffle adds a job. */
+  * three, only a dedup or stream-mode shuffle adds a job.
+  *
+  * A small batch held on the driver (`consume()`, or `consumeDataset` of a
+  * driver-built Dataset) runs none of (1)–(3) as a job: it is shaped and
+  * inserted on the driver. Only a dedup's shuffle still needs Spark. */
 class LoadPassesSpec extends SparkSuite {
 
   /** Counts the jobs of one job group and the input bytes of their stages. */
@@ -132,15 +136,73 @@ class LoadPassesSpec extends SparkSuite {
     assertCost(load("rp", "prp", cfg, batch), jobs = 3, reads = 3, rows = 60)
   }
 
-  test("events fed one by one through consume(): an append is 3 jobs") {
+  test("events fed one by one through consume(): an append is 0 jobs") {
     TableCache.clear()
     for (events <- Seq(batch, batch.take(25))) { // create, then append to the live table
       val (jobs, _, state) = run("consume", "pc", StreamConfig(mode = Engine.Batch))(st =>
         events.foreach(st.consume))
       assert(state.status == "ok", state.error)
       assert(state.rows == events.length)
-      assert(jobs == 3)
+      assert(jobs == 0)
     }
+  }
+
+  test("a driver-held Dataset through consumeDataset(): an append is 0 jobs") {
+    TableCache.clear()
+    import spark.implicits._
+    for (events <- Seq(batch, batch.take(25))) {
+      val (jobs, _, state) = run("local", "pl", StreamConfig(mode = Engine.Batch))(
+        _.consumeDataset(spark.createDataset(events)))
+      assert(state.status == "ok", state.error)
+      assert(state.rows == events.length)
+      assert(jobs == 0)
+    }
+  }
+
+  test("consume() above the driver gate keeps the distributed append: 3 jobs") {
+    TableCache.clear()
+    val pad = "p" * 9000
+    val big = batch.map(e => e.dropRight(1) + s""","pad":"$pad"}""")
+    assert(big.map(_.length).sum > graft.shape.Ingest.DriverMaxChars)
+    val (jobs, _, state) = run("gate", "pg", StreamConfig(mode = Engine.Batch))(st =>
+      big.foreach(st.consume))
+    assert(state.status == "ok", state.error)
+    assert(state.rows == big.length)
+    assert(jobs == 3)
+  }
+
+  test("consume() with a pk dedup: shaping runs no job, the dedup write runs 2") {
+    TableCache.clear()
+    val cfg = StreamConfig(mode = Engine.Batch, pk = Seq("id"), deduplicate = true)
+    val (jobs, _, state) = run("cdedup", "pcd", cfg)(st => batch.foreach(st.consume))
+    assert(state.status == "ok", state.error)
+    assert(state.rows == 40)
+    // the dedup's exchange and the write after it; the file-backed load
+    // above runs these 2 after inference and the string-class scan
+    assert(jobs == 2)
+  }
+
+  test("a hint-carrying batch through consume(): 0 jobs, the distributed hints and DDL") {
+    TableCache.clear()
+    import spark.implicits._
+    val hinted = batch.take(10).map(e => e.dropRight(1) +
+      ""","__sql_type_name":["string","VARCHAR(64)"],"__sql_type_props":"json"}""")
+    val (jobs, _, state) = run("hints", "ph", StreamConfig(mode = Engine.Batch))(st =>
+      hinted.foreach(st.consume))
+    assert(state.status == "ok", state.error)
+    assert(jobs == 0)
+    val dist = load("hints", "phd", StreamConfig(mode = Engine.Batch), hinted)
+    assert(dist.state.status == "ok", dist.state.error)
+    assert(graft.shape.Ingest.shape(spark, hinted.toDS()).hints ==
+      graft.shape.Ingest.shape(spark, spark.createDataset(spark.sparkContext.parallelize(hinted, 4))).hints)
+    def ddl(table: String) = JdbcSink(s"jdbc:derby:memory:passes_hints", DerbyDialect)
+      .withConnection { c =>
+        val rs = c.getMetaData.getColumns(null, null, table, null)
+        Iterator.continually(rs).takeWhile(_.next()).map(r =>
+          r.getString("COLUMN_NAME") -> s"${r.getString("TYPE_NAME")}(${r.getInt("COLUMN_SIZE")})").toList
+      }
+    assert(ddl("PH").contains("NAME" -> "VARCHAR(64)"))
+    assert(ddl("PH") == ddl("PHD"))
   }
 
   test("an empty batch into a live table returns rows 0") {
